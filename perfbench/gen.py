@@ -1,18 +1,17 @@
-"""Seeded input generator with a manifest.
+"""Seeded inputs drawn from the read-only test tables, with a manifest.
 
-Every table is a pure function of ``(recipe, seed)``: the same pair
-gives the same rows and the same parquet bytes. ``ensure`` writes the
-tables plus ``MANIFEST.json`` (recipe, seed, row count and byte size of
-each file) and reuses a directory only when that manifest matches the
-request and the files on disk; anything else is regenerated from
-scratch. Schemas mirror the repo's test tables (TESTDATA.md: a
-TPC-H-ish star schema, ``events``, ``documents``, ``embeddings``) so the
-contract queries and their DuckDB oracles run unchanged on the
-generated files."""
+The inputs of a workload come from the sf0.1 test tables (TESTDATA.md)
+in ``SOURCE``: ``documents`` and ``embeddings`` are copied unchanged
+(each op later draws its own seeded subset of them), and ``events``
+is copied and also cut into ordered files whose sizes the seed draws.
+``ensure`` writes the files plus ``MANIFEST.json`` (recipe, seed, the
+row count and byte size of each source and of each written file) and
+reuses a directory only when that manifest matches the request, the
+sources and the files on disk; anything else is regenerated from
+scratch. Nothing is ever written under the source directory."""
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 import os
 import shutil
@@ -21,175 +20,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-#: bump when a generator changes the rows it emits for a given recipe
-VERSION = 1
+SOURCE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+#: bump when ``ensure`` changes the files it writes for a given recipe
+VERSION = 2
 MANIFEST = "MANIFEST.json"
-
-_TABLE_ORDER = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
-_SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-_PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-_REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-_ADJ = ["blue", "cold", "hot", "large", "new", "old", "red", "small"]
-_NOUN = ["anvil", "bolt", "gear", "gizmo", "plate", "ring", "rod", "widget"]
-_PTYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-_LANGS = ["en", "de", "es", "fr", "zh"]
-_VOCAB = (
-    "vector column customer table scan spark value data join big key slow "
-    "stream row line group filter window merge a batch small agg hash query "
-    "the order part fast sort"
-).split()
-_EPOCH = dt.datetime(1995, 1, 1)
-_EVENTS_START = dt.datetime(2024, 1, 1)
-
-
-def _money(rng, lo, hi, n):
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def _days(base, offsets):
-    us = (np.datetime64(base, "us") + offsets.astype("timedelta64[D]"))
-    return pa.array(us, pa.timestamp("us"))
-
-
-def _keys(n):
-    return pa.array(np.arange(n, dtype=np.int64))
-
-
-def _names(prefix, n):
-    return pa.array([f"{prefix}#{i:09d}" for i in range(n)])
-
-
-def _tpch(rng, r):
-    nc, ns, npart, no = r["customer"], r["supplier"], r["part"], r["orders"]
-    t = {
-        "region": pa.table({
-            "r_regionkey": pa.array(range(5), pa.int32()),
-            "r_name": _REGIONS,
-        }),
-        "nation": pa.table({
-            "n_nationkey": pa.array(range(25), pa.int32()),
-            "n_name": [f"NATION_{i}" for i in range(25)],
-            "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-        }),
-        "customer": pa.table({
-            "c_custkey": _keys(nc),
-            "c_name": _names("Customer", nc),
-            "c_nationkey": pa.array(rng.integers(0, 25, nc), pa.int32()),
-            "c_acctbal": _money(rng, -999.99, 9999.99, nc),
-            "c_mktsegment": np.array(_SEGMENTS)[rng.integers(0, 5, nc)],
-        }),
-        "supplier": pa.table({
-            "s_suppkey": _keys(ns),
-            "s_name": _names("Supplier", ns),
-            "s_nationkey": pa.array(rng.integers(0, 25, ns), pa.int32()),
-            "s_acctbal": _money(rng, -999.99, 9999.99, ns),
-        }),
-        "part": pa.table({
-            "p_partkey": _keys(npart),
-            "p_name": [f"{_ADJ[a]} {_NOUN[b]}" for a, b in
-                       zip(rng.integers(0, 8, npart), rng.integers(0, 8, npart))],
-            "p_brand": [f"Brand#{b}" for b in rng.integers(1, 26, npart)],
-            "p_type": np.array(_PTYPES)[rng.integers(0, 6, npart)],
-            "p_size": pa.array(rng.integers(1, 51, npart), pa.int32()),
-            "p_retailprice": rng.integers(9000, 10000, npart) / 10.0,
-        }),
-    }
-    # orders reference ~2/3 of customers so the anti-join shapes see both sides
-    odays = rng.integers(0, 2405, no)
-    t["orders"] = pa.table({
-        "o_orderkey": _keys(no),
-        "o_custkey": rng.integers(0, max(1, nc * 2 // 3), no).astype(np.int64),
-        "o_orderstatus": np.array(["F", "O", "P"])[rng.integers(0, 3, no)],
-        "o_totalprice": _money(rng, 1000.0, 500000.0, no),
-        "o_orderdate": _days(_EPOCH, odays),
-        "o_orderpriority": np.array(_PRIORITIES)[rng.integers(0, 5, no)],
-    })
-    per = rng.integers(1, 8, no)
-    okeys = np.repeat(np.arange(no, dtype=np.int64), per)
-    lnum = np.concatenate([np.arange(1, k + 1) for k in per]) if no else per
-    nl = len(okeys)
-    qty = rng.integers(1, 51, nl).astype(np.float64)
-    t["lineitem"] = pa.table({
-        "l_orderkey": okeys,
-        "l_partkey": rng.integers(0, npart, nl).astype(np.int64),
-        "l_suppkey": rng.integers(0, ns, nl).astype(np.int64),
-        "l_linenumber": pa.array(lnum, pa.int32()),
-        "l_quantity": qty,
-        "l_extendedprice": np.round(qty * rng.uniform(18.0, 2100.0, nl), 2),
-        "l_discount": rng.integers(0, 11, nl) / 100.0,
-        "l_tax": rng.integers(0, 9, nl) / 100.0,
-        "l_returnflag": np.array(["A", "N", "R"])[rng.integers(0, 3, nl)],
-        "l_linestatus": np.array(["F", "O"])[rng.integers(0, 2, nl)],
-        "l_shipdate": _days(_EPOCH, np.repeat(odays, per) + rng.integers(1, 96, nl)),
-    })
-    return t
-
-
-def _events(rng, n):
-    offs = np.sort(rng.integers(0, 30 * 86400 * 10**6, n))
-    ts = np.datetime64(_EVENTS_START, "us") + offs.astype("timedelta64[us]")
-    return pa.table({
-        "event_id": _keys(n),
-        "ts": pa.array(ts, pa.timestamp("us")),
-        "user_id": rng.integers(0, 1500, n).astype(np.int64),
-        "event_type": np.array(_EVENT_TYPES)[rng.integers(0, 5, n)],
-        "value": np.round(rng.exponential(60.0, n), 2),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n)],
-    })
-
-
-def _documents(rng, n):
-    texts: list[str] = []
-    for i in range(n):
-        if i > 10 and rng.random() < 0.03:
-            # near-duplicate of an earlier doc: one word swapped + marker
-            words = texts[int(rng.integers(0, i))].split()
-            words[int(rng.integers(0, len(words)))] = _VOCAB[int(rng.integers(0, len(_VOCAB)))]
-            texts.append(" ".join(words + ["dup"]))
-        else:
-            k = int(rng.integers(10, 101))
-            texts.append(" ".join(np.array(_VOCAB)[rng.integers(0, len(_VOCAB), k)]))
-    p = np.array([0.4, 0.15, 0.15, 0.15, 0.15])
-    return pa.table({
-        "doc_id": _keys(n),
-        "text": texts,
-        "lang": np.array(_LANGS)[rng.choice(5, n, p=p)],
-        "source": [f"src{s}" for s in rng.integers(0, 20, n)],
-        "n_chars": np.array([len(x) for x in texts], dtype=np.int64),
-    })
-
-
-def _embeddings(rng, n, dim=64, labels=10):
-    centers = rng.normal(0.0, 1.0, (labels, dim))
-    lab = rng.integers(0, labels, n)
-    v = centers[lab] + rng.normal(0.0, 0.8, (n, dim))
-    v = (v / np.linalg.norm(v, axis=1, keepdims=True)).astype(np.float32)
-    return pa.table({
-        "vec_id": _keys(n),
-        "embedding": pa.array(list(v), pa.list_(pa.float32())),
-        "label": pa.array(lab, pa.int32()),
-    })
-
-
-def generate(recipe: dict, seed: int) -> dict[str, pa.Table]:
-    """Tables named in ``recipe["rows"]`` (``orders`` implies the whole
-    TPC-H family; ``lineitem`` follows from orders at 1-7 lines each).
-    Each family draws from its own stream keyed by ``seed``."""
-    rows = recipe["rows"]
-    out: dict[str, pa.Table] = {}
-    if "orders" in rows:
-        out.update(_tpch(np.random.default_rng([seed, 1]), rows))
-    if "events" in rows:
-        out["events"] = _events(np.random.default_rng([seed, 2]), rows["events"])
-    if "documents" in rows:
-        out["documents"] = _documents(np.random.default_rng([seed, 3]), rows["documents"])
-    if "embeddings" in rows:
-        out["embeddings"] = _embeddings(np.random.default_rng([seed, 4]), rows["embeddings"])
-    return {k: out[k] for k in _TABLE_ORDER if k in out}
 
 
 def split_ordered(table: pa.Table, parts: int, seed: int) -> list[pa.Table]:
@@ -206,53 +40,69 @@ def _wanted(recipe: dict, seed: int) -> dict:
     return {"version": VERSION, "recipe": recipe, "seed": seed}
 
 
+def _describe(path: str) -> dict:
+    return {"rows": pq.ParquetFile(path).metadata.num_rows,
+            "bytes": os.path.getsize(path)}
+
+
+def _sources(recipe: dict) -> dict:
+    out = {}
+    for t in recipe["tables"]:
+        path = os.path.join(recipe["source"], f"{t}.parquet")
+        out[t] = dict(_describe(path), path=path)
+    return out
+
+
 def manifest_matches(out_dir: str, recipe: dict, seed: int) -> bool:
     """True when ``out_dir`` holds exactly what ``(recipe, seed)``
-    generates: same version, recipe and seed in the manifest, and every
-    listed file present with its recorded size and row count."""
+    gives: same version, recipe and seed in the manifest, sources of
+    the recorded size and row count, and every listed file present
+    with its recorded size and row count."""
     try:
         with open(os.path.join(out_dir, MANIFEST)) as fh:
             have = json.load(fh)
-    except (OSError, ValueError):
-        return False
-    if {k: have.get(k) for k in ("version", "recipe", "seed")} != _wanted(recipe, seed):
-        return False
-    for rel, meta in have.get("files", {}).items():
-        path = os.path.join(out_dir, rel)
-        try:
-            if os.path.getsize(path) != meta["bytes"]:
-                return False
-            if pq.ParquetFile(path).metadata.num_rows != meta["rows"]:
-                return False
-        except OSError:
+        if {k: have.get(k) for k in ("version", "recipe", "seed")} != _wanted(recipe, seed):
             return False
-    return bool(have.get("files"))
+        if have.get("sources") != _sources(recipe):
+            return False
+        for rel, meta in have["files"].items():
+            if _describe(os.path.join(out_dir, rel)) != meta:
+                return False
+    except (OSError, ValueError, KeyError):
+        return False
+    return bool(have["files"])
 
 
 def ensure(out_dir: str, recipe: dict, seed: int) -> tuple[dict, bool]:
-    """Make ``out_dir`` hold the inputs of ``(recipe, seed)``. Returns
-    ``(manifest, reused)``. ``recipe["stream_files"]`` additionally
-    splits ``events`` into that many ordered files under ``stream/``."""
+    """Make ``out_dir`` hold the inputs of ``(recipe, seed)``: a copy of
+    each table in ``recipe["tables"]`` and, with
+    ``recipe["stream_files"]``, ``events`` cut into that many ordered
+    files under ``stream/``. Returns ``(manifest, reused)``."""
+    src = os.path.realpath(recipe["source"])
+    if os.path.commonpath([src, os.path.realpath(out_dir)]) == src:
+        raise ValueError(f"refusing to write inputs under the source {src}")
     if manifest_matches(out_dir, recipe, seed):
         with open(os.path.join(out_dir, MANIFEST)) as fh:
             return json.load(fh), True
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir)
-    files: dict[str, pa.Table] = {
-        f"{name}.parquet": t for name, t in generate(recipe, seed).items()
-    }
+    sources = _sources(recipe)
+    written = []
+    for t, meta in sources.items():
+        shutil.copyfile(meta["path"], os.path.join(out_dir, f"{t}.parquet"))
+        written.append(f"{t}.parquet")
     if recipe.get("stream_files"):
-        for i, part in enumerate(
-            split_ordered(files["events.parquet"], recipe["stream_files"], seed)
-        ):
-            files[f"stream/part-{i:05d}.parquet"] = part
+        events = pq.read_table(sources["events"]["path"])
+        order = np.lexsort([events["event_id"].to_numpy(),
+                            events["ts"].cast(pa.int64()).to_numpy()])
+        events = events.take(order).replace_schema_metadata(None)
         os.makedirs(os.path.join(out_dir, "stream"))
-    meta = {}
-    for rel, t in files.items():
-        path = os.path.join(out_dir, rel)
-        pq.write_table(t, path)
-        meta[rel] = {"rows": t.num_rows, "bytes": os.path.getsize(path)}
-    manifest = dict(_wanted(recipe, seed), files=meta)
+        for i, part in enumerate(split_ordered(events, recipe["stream_files"], seed)):
+            rel = f"stream/part-{i:05d}.parquet"
+            pq.write_table(part, os.path.join(out_dir, rel))
+            written.append(rel)
+    manifest = dict(_wanted(recipe, seed), sources=sources,
+                    files={rel: _describe(os.path.join(out_dir, rel)) for rel in written})
     tmp = os.path.join(out_dir, MANIFEST + ".tmp")
     with open(tmp, "w") as fh:
         json.dump(manifest, fh, indent=1, sort_keys=True)

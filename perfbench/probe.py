@@ -240,11 +240,13 @@ def steal_pct(before: "list[int]", after: "list[int]") -> "float | None":
 
 
 def observed_conf(spark) -> dict:
-    """Master, core count and shuffle partitions as the run found them."""
+    """Master, core count, shuffle partitions and driver memory as the
+    run found them."""
     sc = spark.sparkContext
     return {"master": sc.master, "cores": sc.defaultParallelism,
             "cpu_count": os.cpu_count(),
-            "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions")}
+            "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+            "driver_memory": sc.getConf().get("spark.driver.memory", None)}
 
 
 def stream_progress(progress) -> dict:

@@ -27,7 +27,6 @@ ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, ".work")
 OP_TIMEOUT_S = 90.0
 RUN_LIMIT_S = 175
-SETUPS = 3  # set-ups per run; setup_s is their median
 MIN_CYCLES = 2  # steady cycles of op kinds per run, at the least
 # op_p90_s and failed_op_ratio are printed on the detail line only: a run
 # leaves fewer than ten samples beyond p90, and the ratio reads 0 (its
@@ -49,20 +48,23 @@ class Bench:
 
 def _isolate(run_dir: str) -> None:
     """Keep every temp file, Spark local dir and JVM temp inside the
-    checkout, and size the session like ``local[nproc]``."""
+    checkout, and size the session like ``local[nproc]`` (the program
+    reads ``SPARK_GRAFT_CPUS`` when it builds the session). Every other
+    setting stays at the program's default; the detail line records
+    what the run found."""
     tmp = os.path.join(run_dir, "tmp")
     os.makedirs(tmp)
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(tmp, "spark")
     os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     tempfile.tempdir = None
 
 
 def _setup(b, wl, hdk):
-    """One set-up: inputs (reused when the manifest matches), session,
-    package shipping, table registration."""
+    """The run's one set-up: inputs (reused when the manifest matches),
+    session, package shipping, table registration, and whatever the
+    workload needs before its first op (streaming queries started)."""
     from gen import ensure
 
     t = b.tracer
@@ -76,6 +78,8 @@ def _setup(b, wl, hdk):
         b.eng = hdk.HDK(spark)
     with t.span("session.load"):
         b.entry.load_tables(spark, data_dir)
+    with t.span("session.prepare"):
+        wl.prepare()
 
 
 def _run_op(b, i, kind, fn, probe, records):
@@ -158,18 +162,13 @@ def main(argv=None) -> int:
     records, errors = [], []
     ticks = cpu_ticks()
     try:
-        setups, reused = [], None
-        for k in range(SETUPS):
-            if k:
-                b.eng.spark.stop()
-            c0 = PROCESS_START if k == 0 else time.perf_counter()
-            _setup(b, wl, hdk)
-            setups.append(time.perf_counter() - c0)
-            reused = b.inputs_reused if reused is None else reused
-            _log(f"set-up {k + 1}: {setups[-1]:.2f}s")
+        # set-up counts from process start: interpreter and imports, JVM
+        # launch, inputs, session, shipping, tables, workload preparation
+        _setup(b, wl, hdk)
+        setup_s = time.perf_counter() - PROCESS_START
+        _log(f"set-up: {setup_s:.2f}s")
         spark = b.eng.spark
         probe = StatusStore(spark) if args.trace else None
-        wl.prepare()
 
         outputs, first, steady, rows = [], [], [], 0
         i, window = 0, None
@@ -216,7 +215,7 @@ def main(argv=None) -> int:
 
     attempted = len(records)
     failed = min(attempted, len(errors))
-    e2e = stats.summarize(first, steady, setups, rows, attempted, failed)
+    e2e = stats.summarize(first, steady, setup_s, rows, attempted, failed)
     layers = _layers(wl, tracer, records, rss, len(wl.kinds)) if args.trace else {}
     if args.trace:
         os.makedirs(WORK, exist_ok=True)
@@ -226,8 +225,9 @@ def main(argv=None) -> int:
 
     detail = {
         "workload": wl.name, "seed": args.seed, "seconds": args.seconds,
-        "trace": args.trace, "observed": conf, "setups_s": setups,
-        "inputs_reused": reused, "end_to_end": e2e,
+        "trace": args.trace, "observed": conf,
+        "inputs_reused": b.inputs_reused, "inputs": b.manifest["sources"],
+        "end_to_end": e2e,
         "per_layer": layers, "errors": errors,
         "ops": [[r["kind"], round(r["wall_s"], 4)] for r in records],
     }
@@ -274,16 +274,14 @@ def _shutdown(b):
 
 
 def _layers(wl, tracer, records, rss, n_first) -> dict:
-    """Per-layer metrics: set-up spans of the first (cold) set-up, and
-    medians over the steady-phase ops of everything read per op."""
+    """Per-layer metrics: set-up spans, and medians over the
+    steady-phase ops of everything read per op."""
     from probe import stream_progress
     from stats import median
 
     steady = [r for r in records[n_first:] if r["error"] is None]
-    cold = {}
-    for s in tracer.spans:
-        if s["name"].startswith("session.") and s["name"] not in cold:
-            cold[s["name"]] = (s["end"] - s["start"])
+    cold = {s["name"]: s["end"] - s["start"] for s in tracer.spans
+            if s["name"].startswith("session.")}
 
     def per_op(name):
         return median([tracer.total_ms(name, f"perfbench-op{r['i']}") for r in steady])

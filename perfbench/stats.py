@@ -31,7 +31,7 @@ def median(values: list[float]) -> float:
     return statistics.median(values) if values else 0.0
 
 
-def summarize(first: list[float], steady: list[float], setups: list[float],
+def summarize(first: list[float], steady: list[float], setup_s: float,
               rows: int, attempted: int, failed: int) -> dict:
     """End-to-end metrics of one run, each with unit and sample count.
 
@@ -39,11 +39,12 @@ def summarize(first: list[float], steady: list[float], setups: list[float],
     their sum (the whole cold pass: a median of a few unlike kinds
     would switch between kinds from run to run); ``steady``:
     wall seconds of every later op; ``rows``: input rows those steady
-    ops consumed; ``setups``: seconds of each set-up in the run."""
+    ops consumed; ``setup_s``: seconds from process start until the
+    first op could be submitted."""
     busy = sum(steady)
     p90_ok = p90_supported(len(steady))
     return {
-        "setup_s": _m(median(setups), "s", len(setups)),
+        "setup_s": _m(setup_s, "s", 1),
         "first_pass_s": _m(sum(first), "s", len(first)),
         "op_p50_s": _m(median(steady), "s", len(steady)),
         "op_p90_s": dict(_m(nearest_rank(steady, 0.9) if steady else 0.0, "s",

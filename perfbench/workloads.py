@@ -1,14 +1,13 @@
-"""The workloads. Each one names its op kinds, generates its inputs
-from the seed, runs one op through the program's public calls, and
-checks the outputs afterwards against the contract oracles (DuckDB over
-the same generated parquet, compared bit-exactly by
+"""The workloads. Each one names its op kinds, draws its inputs from
+the seed and the sf0.1 test tables, runs one op through the program's
+public calls, and checks the outputs afterwards against the contract
+oracles (DuckDB over the same parquet, compared bit-exactly by
 ``tests/oracle_compare.py``)."""
 
 from __future__ import annotations
 
 import os
 import random
-import re
 import shutil
 import threading
 import time
@@ -20,22 +19,10 @@ from hdk_spark.context import Result
 
 import gen
 
-# the 8 TPC-H-shape contract rows olap_sql cycles through (see README)
-OLAP_KINDS = [
-    "q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue",
-    "q6_revenue_forecast", "tpch_q9_profit_by_nation",
-    "tpch_q13_customer_distribution", "tpch_q18_large_volume_customer",
-    "tpch_q21_waiting_suppliers",
-]
-#: rows per table of olap_sql (sf0.01 in TESTDATA.md terms)
-OLAP_ROWS = {"customer": 1500, "supplier": 100, "part": 2000, "orders": 15000}
-DOC_ROWS = {"documents": 5000, "embeddings": 2000}
 DOC_SUBSET = 500  # documents / embeddings per op
-STREAM_ROWS = {"events": 60000}
-STREAM_FILES = 24
+#: ordered files the 100,000 sf0.1 events are cut into (about 2,500 rows each)
+STREAM_FILES = 40
 STREAM_WAIT_S = 60.0
-#: one curation_funnel batch (sf0.01 in TESTDATA.md terms)
-FUNNEL_ROWS = {"documents": 500, "embeddings": 500}
 
 
 class _Arrow:
@@ -100,58 +87,6 @@ class Workload:
         pass
 
 
-# ---------------------------------------------------------------------------
-# olap_sql: the contract's TPC-H-shape SQL through HDK.sql(...).to_arrow()
-# ---------------------------------------------------------------------------
-
-
-class OlapSql(Workload):
-    name = "olap_sql"
-    kinds = OLAP_KINDS
-    recipe = {"rows": OLAP_ROWS}
-
-    def prepare(self):
-        oracles = self.b.entry.oracle_sql()
-        self.sql = {k: oracles[k] for k in self.kinds}
-        counts = {t: m["rows"] for t, m in self.b.manifest["files"].items()}
-        self.rows = {}
-        for k, text in self.sql.items():
-            used = {t for t in self.b.entry.TABLES
-                    if re.search(rf"\b{t}\b", text) and f"{t}.parquet" in counts}
-            self.rows[k] = sum(counts[f"{t}.parquet"] for t in used)
-        self.order: list[str] = []
-
-    def next_op(self, i):
-        if i < len(self.kinds):
-            kind = self.kinds[i]
-        else:
-            if not self.order:  # a fresh seed-drawn permutation per pass
-                self.order = list(self.kinds)
-                self.rng.shuffle(self.order)
-            kind = self.order.pop()
-        text, b = self.sql[kind], self.b
-
-        def op():
-            with b.tracer.span("context.sql"):
-                res = b.eng.sql(text)
-            if b.tracer.on:
-                with b.tracer.span("spark.plan"):
-                    res.df._jdf.queryExecution().executedPlan()
-            with b.tracer.span("context.to_arrow"):
-                return res.to_arrow()
-
-        return kind, op, self.rows[kind], kind
-
-    def check(self, results):
-        con = _duck({t: _parquet(os.path.join(self.b.data_dir, f"{t}.parquet"))
-                     for t in self.b.entry.TABLES
-                     if os.path.exists(os.path.join(self.b.data_dir, f"{t}.parquet"))})
-        want = {k: con.sql(self.sql[k]).arrow() for k in {key for key, _ in results}}
-        con.close()
-        return [err for key, out in results
-                if (err := _mismatch(out, want[key], key))]
-
-
 def _mismatch(out: pa.Table, want: pa.Table, name: str) -> "str | None":
     from oracle_compare import assert_frames_match
 
@@ -214,7 +149,7 @@ def _next_prime(n: int) -> int:
 class DocDedupSearch(Workload):
     name = "doc_dedup_search"
     kinds = ["minhash_lsh_dedup", "text_analyze", "ann_lsh_topk"]
-    recipe = {"rows": DOC_ROWS}
+    recipe = {"source": gen.SOURCE, "tables": ["documents", "embeddings"]}
     _CONTRACT = {"minhash_lsh_dedup": "dedup_minhash_lsh",
                  "text_analyze": "text_profile",
                  "ann_lsh_topk": "similarity_ann_lsh"}
@@ -239,7 +174,8 @@ class DocDedupSearch(Workload):
     def next_op(self, i):
         kind = self.kinds[i % len(self.kinds)]
         table = self.table[kind]
-        remap = _Remap(self.rng, DOC_ROWS[table], DOC_SUBSET)
+        remap = _Remap(self.rng, self.b.manifest["files"][f"{table}.parquet"]["rows"],
+                       DOC_SUBSET)
         idc = self.id_col[table]
         names = pq.read_schema(os.path.join(self.b.data_dir, f"{table}.parquet")).names
         cols = [f"{remap.expr(idc)} AS {idc}"] + [c for c in names if c != idc]
@@ -285,7 +221,7 @@ class DocDedupSearch(Workload):
 class StreamIngest(Workload):
     name = "stream_ingest"
     kinds = ["tumbling_agg", "stream_cms_by_group"]
-    recipe = {"rows": STREAM_ROWS, "stream_files": STREAM_FILES}
+    recipe = {"source": gen.SOURCE, "tables": ["events"], "stream_files": STREAM_FILES}
 
     def prepare(self):
         from pyspark.sql import functions as F
@@ -398,54 +334,4 @@ class StreamIngest(Workload):
             t.join(STREAM_WAIT_S)
 
 
-# ---------------------------------------------------------------------------
-# curation_funnel: the training-export composition on fresh document batches
-# ---------------------------------------------------------------------------
-
-
-class CurationFunnel(Workload):
-    """Each op runs the ``training_export_pipeline`` contract row
-    (crawl_curate → exact dedup → n-gram Jaccard → SemDedup → quality →
-    budget → pack → manifest) over a fresh seed-drawn batch of
-    documents with their embeddings."""
-
-    name = "curation_funnel"
-    kinds = ["training_export_pipeline"]
-    recipe = {"rows": FUNNEL_ROWS}
-
-    def prepare(self):
-        self.run = self.b.entry.queries()[self.kinds[0]]
-
-    def next_op(self, i):
-        batch = os.path.join(self.b.run_dir, f"batch-{i}")
-        os.makedirs(batch)
-        seed = self.rng.randrange(2**31)
-        for name, t in gen.generate(self.recipe, seed).items():
-            pq.write_table(t, os.path.join(batch, f"{name}.parquet"))
-        spark, b = self.b.eng.spark, self.b
-
-        def op():
-            with b.tracer.span("entry.training_export_pipeline"):
-                out = self.run(spark, batch)
-            if b.tracer.on:
-                with b.tracer.span("spark.plan"):
-                    out._jdf.queryExecution().executedPlan()
-            with b.tracer.span("collect"):
-                return out.toArrow()
-
-        return self.kinds[0], op, FUNNEL_ROWS["documents"], batch
-
-    def check(self, results):
-        sql = self.b.entry.oracle_sql()[self.kinds[0]]
-        errs = []
-        for batch, out in results:
-            con = _duck({t: _parquet(os.path.join(batch, f"{t}.parquet"))
-                         for t in FUNNEL_ROWS})
-            want = con.sql(sql).arrow()
-            con.close()
-            if err := _mismatch(out, want, f"{self.kinds[0]} {batch}"):
-                errs.append(err)
-        return errs
-
-
-WORKLOADS = {w.name: w for w in (OlapSql, DocDedupSearch, StreamIngest, CurationFunnel)}
+WORKLOADS = {w.name: w for w in (DocDedupSearch, StreamIngest)}
