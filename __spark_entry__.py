@@ -54,10 +54,16 @@ def load_tables(spark: SparkSession, sf_dir: str) -> None:
     HDK timestamp[ns] the same way)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # right-size shuffles for the test SFs on a vanilla session (the
-    # 200-partition default just adds per-task overhead at ≤600k rows;
-    # AQE coalescing handles the rest either way)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    # One shuffle partition per core the session actually has (the rule
+    # hdk_spark.session already applies): on a vanilla session Spark's
+    # 200 just adds per-task overhead at <=600k rows, and AQE coalescing
+    # handles the rest. Every stateful stream started after this keeps
+    # one state store per shuffle partition and commits each of them on
+    # every micro-batch, so a fixed count above the cores is paid per
+    # batch (on a 4-core VM, 32 stores took 7.5x the commit time of 4).
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
     # ship the package to Python workers: pandas-UDF closures that
     # reference hdk_spark module helpers must unpickle under ANY
     # driver session/cwd, not just ones launched from the repo root

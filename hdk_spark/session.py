@@ -9,6 +9,8 @@ gets its session from, so the tuning story is consistent:
   layouts by observed cardinality; AQE is the Spark-native equivalent).
 - shuffle.partitions sized to local cores for tests; on a real cluster
   AQE coalescing makes the initial number mostly irrelevant.
+  ``__spark_entry__.load_tables`` follows the same rule on any session
+  (vanilla included): it sets it to ``sparkContext.defaultParallelism``.
 - Arrow enabled for toPandas()/pandas-UDF boundaries.
 - UTC session timezone so results compare cleanly against UTC-naive
   oracles (DuckDB) and parquet ms/ns timestamps.

@@ -13,12 +13,42 @@ All builders return lazy streaming DataFrames; callers pick the sink
 (``writeStream``). Tests drive them with file sources +
 ``trigger(availableNow=True)`` + memory sinks and cross-check against
 the batch equivalents.
+
+State stores: a stateful query keeps one state store per shuffle
+partition and commits every one of them on every micro-batch, so the
+per-batch cost grows with that count, not with the batch's rows. The
+count is the session's ``spark.sql.shuffle.partitions`` when the query
+FIRST starts (``__spark_entry__.load_tables`` and ``get_spark`` set it
+to the session's cores); the checkpoint's offset log then freezes it,
+and a restart from that checkpoint keeps the old count whatever the
+session says now.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+#: Seconds any wait on a streaming query may take before the query is
+#: stopped and :class:`TimeoutError` raised. The waits here drive
+#: ``availableNow`` runs over bounded inputs into memory or test sinks,
+#: which finish in seconds; a run still going after 5 minutes is stuck.
+AWAIT_TIMEOUT_S = 300
+
+
+def await_termination(q: StreamingQuery) -> StreamingQuery:
+    """Wait for ``q`` to finish, at most :data:`AWAIT_TIMEOUT_S`
+    seconds. On timeout stop it and raise ``TimeoutError`` naming the
+    query; a query that failed re-raises its error as
+    ``awaitTermination`` does."""
+    if not q.awaitTermination(AWAIT_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not finish within "
+            f"{AWAIT_TIMEOUT_S} s; stopped"
+        )
+    return q
 
 
 def stream_parquet(spark: SparkSession, path: str, schema) -> DataFrame:
@@ -207,8 +237,7 @@ def run_to_memory(stream_df: DataFrame, query_name: str, output_mode: str = "app
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    return q
+    return await_termination(q)
 
 
 def stream_static_join(

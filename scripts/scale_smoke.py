@@ -1398,7 +1398,8 @@ def main() -> None:
                 spark.conf.set("spark.sql.shuffle.partitions", str(parts))
                 print(f"{sf_name} q5 @ shuffle.partitions={parts}:",
                       best(lambda: spark.sql(Q5)))
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
+            spark.conf.set("spark.sql.shuffle.partitions",
+                           str(spark.sparkContext.defaultParallelism))
         return
 
     if "--r14a" in sys.argv:

@@ -3,6 +3,12 @@ import sys
 
 import pytest
 
+# The driver heap defaults to 32g, more than a 16 GB box has: the test
+# JVM and the second one scripts/pipeline_demo.py starts (it inherits
+# this environment) then grow until the kernel OOM-kills one of them.
+# Set before any test module imports hdk_spark.session, which reads it.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_SMOKE = "/root/testdata/sf0.001"

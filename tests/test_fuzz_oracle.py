@@ -9,6 +9,13 @@ Tests/ArrowSQLRunner/SQLiteComparator.h) that its fixed corpus lacks.
 import os
 import pathlib
 
+import pandas as pd
+import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
+
+from tests.conftest import SF_CORRECT
+from tests.oracle_compare import assert_frames_match, normalize
+
 # Default example budget (VERDICT r14 #1 — the driver's verify budget):
 # every grammar keeps its authored example count under HDK_FULL_FUZZ=1
 # (run at least once per round; this round's full-count run is recorded
@@ -20,13 +27,6 @@ _FULL_FUZZ = os.environ.get("HDK_FULL_FUZZ") == "1"
 def _ex(n: int) -> int:
     return n if _FULL_FUZZ else min(n, 8)
 
-
-import pandas as pd
-import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
-
-from tests.conftest import SF_CORRECT
-from tests.oracle_compare import assert_frames_match, normalize
 
 # deterministic building blocks over lineitem (driver schema has 11
 # cols — no l_shipmode/l_comment/l_*date beyond l_shipdate)

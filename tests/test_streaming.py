@@ -65,6 +65,55 @@ def test_tumbling_agg_matches_batch(spark, events_dir, events_schema):
     assert g == b
 
 
+def test_load_tables_sizes_shuffle_partitions_to_cores(spark):
+    """load_tables sets shuffle partitions to the session's cores, over
+    whatever the session held before (Spark's vanilla 200 here)."""
+    from __spark_entry__ import load_tables
+
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    load_tables(spark, SF_SMOKE)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+        spark.sparkContext.defaultParallelism)
+
+
+def test_stateful_stream_keeps_one_state_store_per_core(
+        spark, events_dir, events_schema):
+    """A stateful stream first started after load_tables commits one
+    state store per core on each micro-batch, not a fixed count."""
+    import json
+
+    from __spark_entry__ import load_tables
+
+    load_tables(spark, SF_SMOKE)
+    st = streaming.stream_parquet(spark, events_dir, events_schema)
+    win = streaming.tumbling_agg(
+        st, "ts", "1 hour", [F.count(F.lit(1)).alias("n")])
+    q = streaming.run_to_memory(win, "t_state_stores", "complete")
+    prog = json.loads(q.lastProgress.json)
+    assert (prog["stateOperators"][0]["numStateStoreInstances"]
+            == spark.sparkContext.defaultParallelism), prog["stateOperators"]
+
+
+def test_await_termination_stops_and_names_stuck_query(
+        spark, monkeypatch, tmp_path):
+    """A query still running when the bounded wait expires is stopped,
+    and the TimeoutError names it."""
+    monkeypatch.setattr(streaming, "AWAIT_TIMEOUT_S", 1)
+    q = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .writeStream.format("memory").queryName("t_stuck")
+        .trigger(processingTime="10 seconds")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .start()
+    )
+    try:
+        with pytest.raises(TimeoutError, match="t_stuck"):
+            streaming.await_termination(q)
+        assert not q.isActive
+    finally:
+        q.stop()
+
+
 def test_sliding_agg_window_counts(spark, events_dir, events_schema):
     st = streaming.stream_parquet(spark, events_dir, events_schema)
     win = streaming.sliding_agg(
@@ -667,8 +716,7 @@ def _run_checkpointed(stream_df, out_dir, cp_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    return q
+    return streaming.await_termination(q)
 
 
 def test_stream_kmv_checkpoint_restart_equals_batch(spark, tmp_path):
@@ -1228,7 +1276,7 @@ def test_stream_dds_by_group_checkpoint_restart_equals_batch(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        streaming.await_termination(q)
 
     sink_with_batch(streaming.stream_dds_by_group(stream(), "g", "x", m=32))
     f2.coalesce(1).write.parquet(src + "/p2")
@@ -1299,7 +1347,7 @@ def test_stream_cms_dds_global_checkpoint_restart_equals_batch(
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination()
+            streaming.await_termination(q)
 
         run(make_stream(stream()))  # batch 1, then KILL
         f2.coalesce(1).write.parquet(src + "/p2")
@@ -1373,7 +1421,7 @@ def test_stream_ndv_rollup_checkpoint_restart_equals_batch(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        streaming.await_termination(q)
 
     run()  # batch 1, then KILL
     f2.coalesce(1).write.parquet(src + "/p2")
@@ -1443,7 +1491,7 @@ def test_stream_cms_by_group_checkpoint_restart_equals_batch(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        streaming.await_termination(q)
 
     sink_with_batch(streaming.stream_cms_by_group(stream(), "g", "v", **kw))
     f2.coalesce(1).write.parquet(src + "/p2")
