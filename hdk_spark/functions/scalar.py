@@ -288,6 +288,22 @@ def round6(value) -> Column:
     return round_norm(value, 6)
 
 
+def round6_sql(expr: str) -> str:
+    """SQL text of :func:`round6` applied to the SQL expression ``expr``."""
+    return f"round({expr}, 6) + 0D"
+
+
+def sql_ident(name: str) -> str:
+    """SQL text naming column ``name`` the way ``F.col`` resolves it
+    (dots separate qualifier / struct-field parts)."""
+    return ".".join(f"`{p}`" for p in name.split("."))
+
+
+def sql_string(s: str) -> str:
+    """SQL string literal of ``s`` (Spark's default backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def truncate(value: Column, scale: int = 0) -> Column:
     """TRUNCATE(x, d) — toward zero (reference
     QueryEngine/ExtensionFunctions.hpp:336-377)."""

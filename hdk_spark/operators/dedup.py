@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from hdk_spark.functions.scalar import round6
+from hdk_spark.functions.scalar import round6, sql_ident
 
 # ---------------------------------------------------------------------------
 # exact
@@ -362,8 +362,8 @@ def minhash_signatures(
         # output is unchanged (the sketch is genuinely deterministic).
         _sig_nd = _sig.asNondeterministic()
         return (
-            df.select(F.col(id_col).alias("id"), _sig_nd(F.col(text_col)).alias("signature"))
-            .filter(F.col("signature").isNotNull())
+            df.select(F.expr(f"{sql_ident(id_col)} AS id"), _sig_nd(F.col(text_col)).alias("signature"))
+            .where("signature IS NOT NULL")
         )
 
     # pure-SQL path
@@ -415,10 +415,10 @@ def minhash_signatures(
 def repartition_for_width(df: DataFrame, target_parallelism: int | None = None) -> DataFrame:
     """Small single-file inputs arrive as one partition; fan out before
     CPU-heavy per-row operators. At real scale the scan already has
-    enough splits and this is a no-op."""
-    import os
-
-    target = target_parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    enough splits and this is a no-op. The fan-out defaults to the
+    session's ``defaultParallelism`` (its cores), so a vanilla session
+    at any core count fans out to exactly what it can run at once."""
+    target = target_parallelism or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
@@ -466,8 +466,9 @@ def minhash_lsh_dedup(
        five n-sized exchanges with one.
     3. **Group expansion** — member id lists ride through the bucket
        groupBy alongside the signature, so cross-group pairs expand
-       with projection explodes (no joins anywhere in the plan); intra-
-       group pairs emit straight off the groups relation with
+       with one projection generator (``inline`` over each pair's
+       member cross product; no joins anywhere in the plan); intra-
+       group pairs emit off each group's band-0 bucket row with
        jaccard_est 1.0 (identical signatures agree everywhere).
 
     ``persist_signatures`` keeps the collapsed signature relation in
@@ -479,6 +480,12 @@ def minhash_lsh_dedup(
     groups (> cap members pair quadratically in the OUTPUT itself);
     oversized groups/buckets are dropped — use exact_dedup to collapse
     pathological clone sets first.
+
+    Everything after the sketch — the band hashes, the bucket filter,
+    the pair-emission lambdas and the member expansion — is built as
+    SQL text (``selectExpr`` / ``F.expr``), so the plan costs ~140 py4j
+    round trips to build instead of ~2,000 (about 0.15 s instead of
+    0.3-0.45 s of driver time per call).
     """
     assert num_perm % bands == 0
     rows_per_band = num_perm // bands
@@ -488,7 +495,7 @@ def minhash_lsh_dedup(
     )
     # stage 1: one representative per distinct signature + member list
     groups = sig.groupBy("signature").agg(
-        F.min("id").alias("id"), F.array_sort(F.collect_list("id")).alias("gids")
+        F.expr("min(id) AS id"), F.expr("array_sort(collect_list(id)) AS gids")
     )
     if max_bucket_size is not None:
         # oversized clone groups degrade to representative-only: their
@@ -496,9 +503,7 @@ def minhash_lsh_dedup(
         # intra-group output is dropped (use exact_dedup for those)
         groups = groups.withColumn(
             "gids",
-            F.when(F.size("gids") <= max_bucket_size, F.col("gids")).otherwise(
-                F.array(F.col("id"))
-            ),
+            F.expr(f"CASE WHEN size(gids) <= {int(max_bucket_size)} THEN gids ELSE array(id) END"),
         )
     if persist_signatures:
         groups = groups.persist()
@@ -507,22 +512,17 @@ def minhash_lsh_dedup(
     # Per-doc band hashes are computed ONCE into `bhs` and reused for
     # both bucketing and the first-match-band check below (vs re-slicing
     # the num_perm-element signature per candidate compare).
-    bhs = F.array(
-        *[
-            F.xxhash64(
-                F.slice(F.col("signature"), bi * rows_per_band + 1, rows_per_band)
-            )
-            for bi in range(bands)
-        ]
+    bhs = "array(" + ", ".join(
+        f"xxhash64(slice(signature, {bi * rows_per_band + 1}, {rows_per_band}))"
+        for bi in range(bands)
+    ) + ")"
+    banded = groups.selectExpr("*", f"{bhs} AS bhs").selectExpr(
+        "struct(id, gids, signature, bhs) AS ds", "posexplode(bhs) AS (band, bh)"
     )
-    banded = groups.withColumn("bhs", bhs).select(
-        F.struct(F.col("id"), F.col("gids"), F.col("signature"), F.col("bhs")).alias("ds"),
-        F.posexplode(F.col("bhs")),
-    ).select("ds", F.col("pos").alias("band"), F.col("col").alias("bh"))
     # no array_sort on the member structs: pair emission is symmetric
     # (least/greatest ids, symmetric estimate), so bucket order only
     # affects row order, not the result set
-    buckets = banded.groupBy("band", "bh").agg(F.collect_list("ds").alias("ms"))
+    buckets = banded.groupBy("band", "bh").agg(F.expr("collect_list(ds) AS ms"))
     # Band-0 buckets survive the size filter unconditionally (r15):
     # intra-group pairs are emitted off each group's single band-0
     # bucket row below, so the groups relation has exactly ONE
@@ -534,20 +534,16 @@ def minhash_lsh_dedup(
     # singleton band-0 bucket contributes no cross pairs (the
     # transform over a 1-element ms yields nothing) and its intra
     # pairs exactly when the lone member is a clone group.
-    size_ok = F.size("ms") >= 2
+    size_ok = "size(ms) >= 2"
     if max_bucket_size is not None:
-        size_ok = size_ok & (F.size("ms") <= max_bucket_size)
-    buckets = buckets.filter(size_ok | (F.col("band") == 0))
-    nm = F.size("ms")
+        size_ok += f" AND size(ms) <= {int(max_bucket_size)}"
+    buckets = buckets.where(f"({size_ok}) OR band = 0")
 
-    def _est(x, y):
-        return F.size(
-            F.filter(
-                F.zip_with(x["signature"], y["signature"], lambda p, q: p == q),
-                lambda eq: eq,
-            )
-        ).cast("double") / F.lit(float(num_perm))
-
+    # signature agreement fraction of bucket members x and y
+    est = (
+        "CAST(size(filter(zip_with(x.signature, y.signature, (sa, sb) -> sa = sb), "
+        f"e -> e)) AS DOUBLE) / {float(num_perm)!r}D"
+    )
     # Emit each pair only in its FIRST matching band: a pair colliding
     # in k bands would otherwise be scored k times and need a global
     # (id_a, id_b) dedup shuffle. On duplicate-heavy corpora (clones
@@ -557,90 +553,49 @@ def minhash_lsh_dedup(
     # earlier band — the same criterion that formed the buckets); the
     # full-signature estimate then runs exactly once per unique pair,
     # and no dedup exchange exists at all.
-    def _first_match_here(x, y, band):
-        return F.when(band == 0, F.lit(True)).otherwise(
-            F.size(
-                F.filter(
-                    F.zip_with(
-                        F.slice(x["bhs"], F.lit(1), band),
-                        F.slice(y["bhs"], F.lit(1), band),
-                        lambda p, q: p == q,
-                    ),
-                    lambda eq: eq,
-                )
-            )
-            == 0
-        )
-
-    band_col = F.col("band")
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ms"),
-            lambda x, i: F.filter(
-                F.transform(
-                    F.slice(F.col("ms"), i + F.lit(2), nm - i - 1),
-                    lambda y: F.when(
-                        _first_match_here(x, y, band_col),
-                        F.struct(
-                            x["gids"].alias("ga"),
-                            y["gids"].alias("gb"),
-                            _est(x, y).alias("jaccard_est"),
-                        ),
-                    ),
-                ),
-                lambda p: p.isNotNull(),
-            ),
-        )
+    first_match_here = (
+        "CASE WHEN band = 0 THEN true ELSE size(filter(zip_with("
+        "slice(x.bhs, 1, band), slice(y.bhs, 1, band), (ba, bb) -> ba = bb), m -> m)) = 0 END"
+    )
+    pair_arr = (
+        "flatten(transform(ms, (x, i) -> filter(transform("
+        "slice(ms, i + 2, size(ms) - i - 1), "
+        f"y -> CASE WHEN {first_match_here} THEN named_struct("
+        f"'ga', x.gids, 'gb', y.gids, 'jaccard_est', {est}) END), "
+        "pr -> pr IS NOT NULL)))"
     )
     # stage 3a: cross-group pairs — gated per bucket row by size_ok
     # (oversized buckets keep dropping cross pairs exactly as before;
     # their band-0 row still emits intra pairs below) and pre-filtered
     # by the threshold here so intra pairs keep the old branch's
     # semantics of never passing through the threshold filter.
-    cross_arr = F.when(
-        size_ok, F.filter(pair_arr, lambda p: p["jaccard_est"] >= threshold)
-    ).otherwise(F.array())
+    cross_arr = (
+        f"CASE WHEN {size_ok} THEN filter({pair_arr}, "
+        f"c -> c.jaccard_est >= {float(threshold)!r}D) ELSE array() END"
+    )
 
     # stage 3b: intra-group pairs — identical signatures agree on
     # every permutation, so est is exactly 1. Emitted off each group's
     # single band-0 bucket row (every group lands in exactly one
-    # (band=0, bh) bucket), as (ga=[x], gb=[y]) singleton-array structs
-    # so the same member-expansion explodes below serve both kinds;
-    # gids are array_sort'd ascending upstream, so x < y and the
+    # (band=0, bh) bucket), as (ga=[gx], gb=[gy]) singleton-array structs
+    # so the same member expansion below serves both kinds;
+    # gids are array_sort'd ascending upstream, so gx < gy and the
     # least/greatest normalization is a value no-op, exactly like the
     # old straight-off-groups branch.
-    def _intra_for(m):
-        g = m["gids"]
-        ng = F.size(g)
-        return F.flatten(
-            F.transform(
-                g,
-                lambda x, i: F.transform(
-                    F.slice(g, i + F.lit(2), ng - i - 1),
-                    lambda y: F.struct(
-                        F.array(x).alias("ga"),
-                        F.array(y).alias("gb"),
-                        F.lit(1.0).alias("jaccard_est"),
-                    ),
-                ),
-            )
-        )
+    intra_arr = (
+        "CASE WHEN band = 0 THEN flatten(transform(ms, g -> flatten(transform(g.gids, "
+        "(gx, gi) -> transform(slice(g.gids, gi + 2, size(g.gids) - gi - 1), "
+        "gy -> named_struct('ga', array(gx), 'gb', array(gy), 'jaccard_est', 1D))))))"
+        " ELSE array() END"
+    )
 
-    intra_arr = F.when(
-        band_col == 0,
-        F.flatten(F.transform(F.col("ms"), _intra_for)),
-    ).otherwise(F.array())
-
-    return (
-        buckets.select(F.explode(F.concat(cross_arr, intra_arr)).alias("p"))
-        .select("p.ga", "p.gb", "p.jaccard_est")
-        .select(F.explode("ga").alias("ma"), "gb", "jaccard_est")
-        .select("ma", F.explode("gb").alias("mb"), "jaccard_est")
-        .select(
-            F.least("ma", "mb").alias("id_a"),
-            F.greatest("ma", "mb").alias("id_b"),
-            F.round("jaccard_est", 6).alias("jaccard_est"),
-        )
+    # every (ga × gb) member pair of every emitted pair, normalized to
+    # id_a < id_b, in one generator
+    return buckets.selectExpr(
+        f"inline(flatten(transform(concat({cross_arr}, {intra_arr}), "
+        "p -> flatten(transform(p.ga, ma -> transform(p.gb, mb -> named_struct("
+        "'id_a', least(ma, mb), 'id_b', greatest(ma, mb), "
+        "'jaccard_est', round(p.jaccard_est, 6))))))))"
     )
 
 
@@ -797,16 +752,6 @@ def hamming_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _dot(a, b):
-    """Left-to-right fold dot product in double — fixed FP evaluation
-    order (reproducible in SQL oracles)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def rademacher_planes(
     n_planes: int, dim: int, seed: int = 7
 ) -> list[list[float]]:
@@ -855,14 +800,12 @@ def embedding_neardup_pairs(
     ``mode='exact'``: the all-pairs quadratic baseline — only for small
     inputs and oracle generation.
     """
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("norm"),
-    )
+    from hdk_spark.operators.similarity import _cosine, _table_buckets, _vec_base
+
+    base = _vec_base(df, id_col, vec_col)
     if mode == "exact":
         a, b = base.alias("a"), base.alias("b")
-        cos = _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.norm") * F.col("b.norm"))
+        cos = F.expr(_cosine("a.v", "b.v", "a.norm", "b.norm"))
         return (
             a.join(b, F.col("a.id") < F.col("b.id"))
             .select(
@@ -874,30 +817,15 @@ def embedding_neardup_pairs(
             .select("id_a", "id_b", round6("cosine").alias("cosine"))
         )
 
-    from hdk_spark.operators.similarity import _bucket_expr
-
     d = dim if dim is not None else _vec_dim(df, vec_col)
     planes = rademacher_planes(n_planes * n_tables, d, seed)
     # Persist: the banded self-join references this subplan twice and the
     # rescore re-attaches vectors by id — same no-common-subplan-reuse
     # argument as minhash_lsh_dedup's signature persist.
     base = base.persist()
-    bucketed = base.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"),
-                        _bucket_expr(
-                            F.col("v"), planes[t * n_planes : (t + 1) * n_planes]
-                        ).alias("bkt"),
-                    )
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("tb"),
-    ).select("id", F.col("tb.tbl").alias("tbl"), F.col("tb.bkt").alias("bkt"))
+    bucketed = base.selectExpr(
+        "id", f"explode({_table_buckets('v', planes, n_planes, n_tables)}) AS tb"
+    ).selectExpr("id", "tb.tbl AS tbl", "tb.bkt AS bkt")
     a = bucketed.alias("a")
     b = bucketed.hint("shuffle_hash").alias("b")
     cand = (
@@ -925,7 +853,7 @@ def embedding_neardup_pairs(
     # projection (two aggregate(zip_with(…)) evals per pair,
     # plan-audited). nd_identity blocks the substitution; row volume
     # is unchanged (the condition was evaluated post-match anyway).
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    cos = F.expr(_cosine("va", "vb", "na", "nb"))
     return (
         paired.select(
             "id_a", "id_b", nd_identity(cos).alias("cosine")
@@ -984,44 +912,21 @@ def semantic_dedup(
     """
     from hdk_spark.operators.clustering import _assign, kmeans_centroids
     from hdk_spark.operators.graph import duplicate_clusters
+    from hdk_spark.operators.similarity import _cosine, _table_buckets, _vec_base
 
     if mode not in ("exact", "lsh"):
         raise ValueError(f"mode must be 'exact' or 'lsh', got {mode!r}")
     cents = kmeans_centroids(df, k, iters, id_col, vec_col, seed)
     assigned = _assign(df, id_col, vec_col, cents)
-    base = assigned.select(
-        F.col(id_col).alias("id"),
-        "cluster",
-        "cdist",
-        F.col(vec_col).alias("v"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("norm"),
-    ).persist()  # referenced by both join sides + the final labeling
+    # referenced by both join sides + the final labeling
+    base = _vec_base(assigned, id_col, vec_col, "cluster", "cdist").persist()
 
     if mode == "lsh":
-        from hdk_spark.operators.similarity import _bucket_expr
-
         dim = len(cents[min(cents)])
         planes = rademacher_planes(n_planes * n_tables, dim, lsh_seed)
-        bucketed = base.select(
-            "id",
-            "cluster",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("tbl"),
-                            _bucket_expr(
-                                F.col("v"),
-                                planes[t * n_planes : (t + 1) * n_planes],
-                            ).alias("bkt"),
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("tb"),
-        ).select(
-            "id", "cluster", F.col("tb.tbl").alias("tbl"), F.col("tb.bkt").alias("bkt")
-        )
+        bucketed = base.selectExpr(
+            "id", "cluster", f"explode({_table_buckets('v', planes, n_planes, n_tables)}) AS tb"
+        ).selectExpr("id", "cluster", "tb.tbl AS tbl", "tb.bkt AS bkt")
         a, b = bucketed.alias("a"), bucketed.alias("b")
         cand = (
             a.join(
@@ -1048,11 +953,10 @@ def semantic_dedup(
     vb = base.select(
         F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb")
     )
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     pairs = (
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .filter(cos >= threshold)
+        .filter(F.expr(_cosine("va", "vb", "na", "nb")) >= threshold)
         .select("id_a", "id_b")
     )
     groups = duplicate_clusters(pairs).select(
@@ -1080,17 +984,16 @@ def _vec_dim(df: DataFrame, vec_col: str, sample: int = 101) -> int:
     otherwise set d to the corrupt width and the gate would drop the
     entire well-formed corpus (r11 review finding). A majority vote
     over a bounded sample makes a lone glitch row harmless; callers
-    that know d should still pass dim= explicitly."""
-    rows = (
-        df.select(F.size(vec_col).alias("d"))
-        .filter(F.col("d") > 0)
-        .limit(sample)
-        .groupBy("d")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "d")
-        .first()
+    that know d should still pass dim= explicitly.
+
+    One job: the sampled sizes are collected and the vote is taken on
+    the driver (ties to the smaller width)."""
+    from collections import Counter
+
+    sizes = Counter(
+        r[0] for r in df.selectExpr(f"size({sql_ident(vec_col)}) AS d").where("d > 0").limit(sample).collect()
     )
-    return int(rows["d"]) if rows else 0
+    return min(sizes, key=lambda d: (-sizes[d], d)) if sizes else 0
 
 
 # ---------------------------------------------------------------------------

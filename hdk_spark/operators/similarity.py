@@ -10,7 +10,10 @@
   recall < 1 by design.
 
 Dot products use a fixed left-to-right fold in double precision so the
-value is bit-reproducible in SQL oracles.
+value is bit-reproducible in SQL oracles. The fold, norm, cosine and
+sign-bucket helpers return SQL text over column names (hyperplanes
+inline as double-array literals), so an expression costs one JVM parse
+rather than one py4j round trip per node.
 """
 
 from __future__ import annotations
@@ -21,94 +24,131 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from hdk_spark.functions.scalar import round6
+from hdk_spark.functions.scalar import round6, round6_sql, sql_ident
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _dot(a: str, b: str) -> str:
+    """SQL text of the dot product of array columns ``a`` and ``b``: a
+    strict left fold in double precision, so the value is
+    bit-reproducible in SQL oracles. Built as text (one JVM parse per
+    expression, not one py4j round trip per node; see the
+    ``hdk_spark.operators`` docstring for the literal rules)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0D, (acc, t) -> acc + t)"
     )
 
 
-def _fold_plane_dots(planes):
-    """Array of fold-based plane dots of column ``v`` — the
-    SQL-replayable sign-projection kernel shared by the multiprobe
+def _norm(v: str) -> str:
+    """SQL text of the fold-based L2 norm of array column ``v``."""
+    return f"sqrt({_dot(v, v)})"
+
+
+def _cosine(a: str, b: str, na: str, nb: str) -> str:
+    """SQL text of the cosine of ``a`` and ``b`` given their norms."""
+    return f"{_dot(a, b)} / ({na} * {nb})"
+
+
+def _double_array(xs) -> str:
+    """SQL text of an array<double> literal: ``repr`` round-trips every
+    float exactly and the ``D`` suffix keeps it DOUBLE (a bare ``0.5``
+    parses as DECIMAL)."""
+    return "array(" + ", ".join(f"{float(c)!r}D" for c in xs) + ")"
+
+
+def _sign_bits(tests) -> str:
+    """SQL text of the bucket id whose bit i is set when ``tests[i]``
+    (a boolean SQL expression) holds."""
+    return " + ".join(
+        ["CAST(0 AS BIGINT)"]
+        + [
+            f"CASE WHEN {t} THEN CAST({1 << i} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+            for i, t in enumerate(tests)
+        ]
+    )
+
+
+def _fold_plane_dots(v: str, planes) -> str:
+    """SQL text of the array of fold-based plane dots of column ``v`` —
+    the SQL-replayable sign-projection kernel shared by the multiprobe
     family (ann_multiprobe_topk, bitext_mine): one fix here reaches
     every consumer AND stays textually aligned with their oracles."""
-    def plane_dot(p):
-        return F.aggregate(
-            F.zip_with(
-                F.col("v"),
-                F.array(*[F.lit(float(c)) for c in p]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+    return "array(" + ", ".join(_dot(v, _double_array(p)) for p in planes) + ")"
+
+
+def _bucket_from_dots(n_planes: int) -> str:
+    """SQL text of the sign-bucket id from the ``__dots`` column (bit i
+    = dot_i >= 0)."""
+    return _sign_bits(f"element_at(__dots, {i + 1}) >= 0" for i in range(n_planes))
+
+
+def _multiprobe_probes(n_planes: int, n_probes: int) -> str:
+    """SQL text of the Lv 2007 probe set from columns ``b`` and
+    ``__dots``: the exact bucket plus flips of the n_probes−1
+    lowest-|margin| planes (ties to the lower plane index — total
+    order)."""
+    pow2 = "array(" + ", ".join(f"CAST({1 << i} AS BIGINT)" for i in range(n_planes)) + ")"
+    flips = (
+        f"slice(transform(array_sort(transform(sequence(0, {n_planes - 1}), "
+        "i -> named_struct('m', abs(element_at(__dots, i + 1)), 'i', i))), s -> s.i), "
+        f"1, {n_probes - 1})"
+    )
+    return f"concat(array(b), transform({flips}, f -> b ^ element_at({pow2}, f + 1)))"
+
+
+def _vec_base(df: DataFrame, id_col: str, vec_col: str, *extra: str) -> DataFrame:
+    """(id, v, norm, *extra) projection of an embedding relation."""
+    v = sql_ident(vec_col)
+    return df.selectExpr(f"{sql_ident(id_col)} AS id", f"{v} AS v", f"{_norm(v)} AS norm", *extra)
+
+
+def _as_queries(base: DataFrame, query_ids, *extra: str) -> DataFrame:
+    """The (qid, qv, qnorm, *extra) query side of an (id, v, norm)
+    relation, restricted to ``query_ids``."""
+    return base.where(_id_in(query_ids)).selectExpr(
+        "id AS qid", "v AS qv", "norm AS qnorm", *extra
+    )
+
+
+def _id_in(ids) -> str:
+    """SQL text of ``id IN (ids)``; ``false`` for no ids, as ``isin([])``."""
+    return f"id IN ({', '.join(str(int(i)) for i in ids)})" if len(ids) else "false"
+
+
+def _scored(cand: DataFrame) -> DataFrame:
+    """(qid, neighbor_id, cosine) of (qid, qv, qnorm, id, v, norm) pairs."""
+    return cand.selectExpr(
+        "qid", "id AS neighbor_id", f"{_cosine('qv', 'v', 'qnorm', 'norm')} AS cosine"
+    )
+
+
+def _topk_rank(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k per ``qid`` of a (qid, neighbor_id, cosine) relation — the
+    shared tail of every exact and approximate top-k here, so the
+    tie-break (lower neighbor id) and the rounding (``round6``) cannot
+    drift between them."""
+    return (
+        scored.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC) AS rank",
         )
-
-    return F.array(*[plane_dot(p) for p in planes])
-
-
-def _bucket_from_dots(n_planes: int):
-    """Sign-bucket id from the ``__dots`` column (bit i = dot_i >= 0)."""
-    bucket = F.lit(0).cast("long")
-    for i in range(n_planes):
-        bucket = bucket + F.when(
-            F.element_at(F.col("__dots"), i + 1) >= 0,
-            F.lit(1 << i).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-    return bucket
-
-
-def _multiprobe_probes(n_planes: int, n_probes: int):
-    """Lv 2007 probe set from columns ``b`` and ``__dots``: the exact
-    bucket plus flips of the n_probes−1 lowest-|margin| planes (ties
-    to the lower plane index — total order)."""
-    margins = F.transform(
-        F.sequence(F.lit(0), F.lit(n_planes - 1)),
-        lambda i: F.struct(
-            F.abs(F.element_at(F.col("__dots"), i + 1)).alias("m"),
-            i.alias("i"),
-        ),
+        .where(f"rank <= {int(k)}")
+        .selectExpr(
+            "qid", "neighbor_id", "CAST(rank AS INT) AS rank", f"{round6_sql('cosine')} AS cosine"
+        )
     )
-    flips = F.slice(
-        F.transform(F.array_sort(margins), lambda s: s["i"]),
-        1,
-        n_probes - 1,
-    )
-    pow2 = F.array(*[F.lit(1 << i).cast("long") for i in range(n_planes)])
-    return F.concat(
-        F.array(F.col("b")),
-        F.transform(
-            flips,
-            lambda f: F.col("b").bitwiseXOR(F.element_at(pow2, f + 1)),
-        ),
-    )
+
+
+def _width_gate(df: DataFrame, vec_col: str, d: int) -> DataFrame:
+    """Rows whose vector has exactly ``d`` components."""
+    return df.where(f"size({sql_ident(vec_col)}) = {int(d)}")
 
 
 def _brute_cosine_rank(base: DataFrame, queries: DataFrame, k: int):
     """Exact-cosine top-k of broadcast ``queries`` (qid, qv, qnorm)
     against ``base`` (id, v, norm) — the shared scoring tail of
-    cosine_topk / sq8_topk, so tie-break and rounding conventions
-    cannot drift between the brute-force variants."""
-    cos = _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("norm"))
-    scored = base.join(
-        F.broadcast(queries), F.col("id") != F.col("qid")
-    ).select("qid", F.col("id").alias("neighbor_id"), cos.alias("cosine"))
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "qid", "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            round6("cosine").alias("cosine"),
-        )
-    )
+    cosine_topk / sq8_topk."""
+    return _topk_rank(_scored(base.join(F.broadcast(queries), F.expr("id <> qid"))), k)
 
 
 def cosine_topk(
@@ -120,15 +160,8 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query id (excluding self).
     Ties break on neighbor id (deterministic)."""
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("norm"),
-    )
-    queries = base.filter(F.col("id").isin(query_ids)).select(
-        F.col("id").alias("qid"), F.col("v").alias("qv"), F.col("norm").alias("qnorm")
-    )
-    return _brute_cosine_rank(base, queries, k)
+    base = _vec_base(df, id_col, vec_col)
+    return _brute_cosine_rank(base, _as_queries(base, query_ids), k)
 
 
 # ---------------------------------------------------------------------------
@@ -153,23 +186,21 @@ def _hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     ]
 
 
-def _bucket_expr(vec, planes: list[list[float]]):
-    """Bucket id = bit pattern of sign(v·h) across hyperplanes."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(c)) for c in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return bucket
+def _bucket_expr(v: str, planes: list[list[float]]) -> str:
+    """SQL text of the bucket id = bit pattern of sign(v·h) across
+    hyperplanes, for array column ``v``."""
+    return _sign_bits(f"{_dot(v, _double_array(p))} >= 0" for p in planes)
+
+
+def _table_buckets(v: str, planes: list[list[float]], n_planes: int, n_tables: int) -> str:
+    """SQL text of ``array<struct<tbl:int, bkt:bigint>>``: one sign
+    bucket of array column ``v`` per hash table, table t using planes
+    ``t*n_planes`` up to ``(t+1)*n_planes``."""
+    return "array(" + ", ".join(
+        f"named_struct('tbl', {t}, 'bkt', "
+        f"{_bucket_expr(v, planes[t * n_planes:(t + 1) * n_planes])})"
+        for t in range(n_tables)
+    ) + ")"
 
 
 def _kmeans_fit(sample: np.ndarray, k: int, iters: int = 10, seed: int = 42) -> np.ndarray:
@@ -259,12 +290,7 @@ def ann_ivf_topk(
         from hdk_spark.operators.dedup import _vec_dim
 
         gate_d = _vec_dim(df, vec_col)
-    df = df.filter(F.size(vec_col) == gate_d)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("norm"),
-    )
+    base = _vec_base(_width_gate(df, vec_col, gate_d), id_col, vec_col)
     if centroids is not None:
         from hdk_spark.operators.clustering import _dist_sq
 
@@ -322,7 +348,7 @@ def ann_ivf_topk(
 
     base = base.withColumn("list_id", assign_col).persist()
     queries = (
-        base.filter(F.col("id").isin(query_ids))
+        base.where(_id_in(query_ids))
         .select(
             F.col("id").alias("qid"),
             F.col("v").alias("qv"),
@@ -334,15 +360,7 @@ def ann_ivf_topk(
         F.broadcast(queries),
         (F.col("list_id") == F.col("qlist")) & (F.col("id") != F.col("qid")),
     ).select("qid", "qv", "qnorm", "id", "v", "norm").dropDuplicates(["qid", "id"])
-    cos = _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("norm"))
-    scored = cand.select("qid", F.col("id").alias("neighbor_id"), cos.alias("cosine"))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "neighbor_id", F.col("rank").cast("int").alias("rank"),
-                round6("cosine").alias("cosine"))
-    )
+    return _topk_rank(_scored(cand), k)
 
 
 def ann_lsh_topk(
@@ -429,24 +447,17 @@ def ann_lsh_topk(
         from hdk_spark.operators.dedup import _vec_dim
 
         dim = _vec_dim(df, vec_col)
-    df = df.filter(F.size(vec_col) == dim)
+    df = _width_gate(df, vec_col, dim)
     tables = [
         _hyperplanes(n_planes, dim, seed + 1000 * t) for t in range(n_tables)
     ]
     if deterministic:
         # fold-based JVM expressions: bit-reproducible in a SQL oracle
-        base = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("norm"),
-        )
-        buckets_col = F.array(
-            *[_bucket_expr(F.col("v"), tbl) for tbl in tables]
-        )
+        buckets = "array(" + ", ".join(_bucket_expr("v", tbl) for tbl in tables) + ")"
         # persist: referenced by both sides of the candidate join (same
         # reasoning as dedup sketches)
-        hashed = base.select(
-            "id", "v", "norm", F.posexplode(buckets_col).alias("tbl", "b")
+        hashed = _vec_base(df, id_col, vec_col).selectExpr(
+            "id", "v", "norm", f"posexplode({buckets}) AS (tbl, b)"
         ).persist()
     else:
         from pyspark.sql.pandas.functions import pandas_udf
@@ -470,26 +481,14 @@ def ann_lsh_topk(
             return pd.DataFrame({"bs": list(ids), "norm": norms})
 
         hashed = (
-            df.select(
-                F.col(id_col).alias("id"),
-                F.col(vec_col).alias("v"),
-                _sketch(F.col(vec_col)).alias("sk"),
-            )
-            .select(
-                "id",
-                "v",
-                F.col("sk.norm").alias("norm"),
-                F.posexplode("sk.bs").alias("tbl", "b"),
+            df.withColumn("__sk", _sketch(F.col(vec_col)))
+            .selectExpr(
+                f"{sql_ident(id_col)} AS id", f"{sql_ident(vec_col)} AS v",
+                "__sk.norm AS norm", "posexplode(__sk.bs) AS (tbl, b)",
             )
             .persist()
         )
-    queries = hashed.filter(F.col("id").isin(query_ids)).select(
-        F.col("id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.col("tbl").alias("qtbl"),
-        F.col("b").alias("qb"),
-    )
+    queries = _as_queries(hashed, query_ids, "tbl AS qtbl", "b AS qb")
     # One qid-keyed exchange serves BOTH the candidate dedup and the
     # top-k window (r15, VERDICT r14 #7): hashpartitioning(qid)
     # clusters equal (qid, id) pairs, so the dropDuplicates aggregate
@@ -505,24 +504,13 @@ def ann_lsh_topk(
     # (the operator's existing scale contract), not corpus size.
     cand = (
         hashed.join(
-            F.broadcast(queries),
-            (F.col("tbl") == F.col("qtbl"))
-            & (F.col("b") == F.col("qb"))
-            & (F.col("id") != F.col("qid")),
+            F.broadcast(queries), F.expr("tbl = qtbl AND b = qb AND id <> qid")
         )
-        .select("qid", "qv", "qnorm", "id", "v", "norm")
+        .selectExpr("qid", "qv", "qnorm", "id", "v", "norm")
         .repartition("qid")
         .dropDuplicates(["qid", "id"])
     )
-    cos = _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("norm"))
-    scored = cand.select("qid", F.col("id").alias("neighbor_id"), cos.alias("cosine"))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "neighbor_id", F.col("rank").cast("int").alias("rank"),
-                round6("cosine").alias("cosine"))
-    )
+    return _topk_rank(_scored(cand), k)
 
 
 # measured LSH→IVF crossover (SCALE.md, d=64/8 tables): the LSH bucket
@@ -873,28 +861,10 @@ def _asym_anchor_pairs(
 
     d = dim if dim is not None else _vec_dim(df, vec_col)
     planes = rademacher_planes(n_planes * n_tables, d, seed)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("norm"),
-    ).persist()
-    bucketed = base.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"),
-                        _bucket_expr(
-                            F.col("v"),
-                            planes[t * n_planes:(t + 1) * n_planes],
-                        ).alias("bkt"),
-                    )
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("tb"),
-    ).select("id", F.col("tb.tbl").alias("tbl"), F.col("tb.bkt").alias("bkt"))
+    base = _vec_base(df, id_col, vec_col).persist()
+    bucketed = base.selectExpr(
+        "id", f"explode({_table_buckets('v', planes, n_planes, n_tables)}) AS tb"
+    ).selectExpr("id", "tb.tbl AS tbl", "tb.bkt AS bkt")
     a = bucketed.filter(
         hash_bucket(F.col("id"), 100, seed + 501) < F.lit(anchor_pct)
     ).alias("a")
@@ -918,9 +888,8 @@ def _asym_anchor_pairs(
                     F.col("norm").alias("nb")),
         "other",
     )
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return (
-        paired.withColumn("cosine", cos)
+        paired.withColumn("cosine", F.expr(_cosine("va", "vb", "na", "nb")))
         .filter(F.col("cosine") >= floor)
         .select("anchor", "other", round6("cosine").alias("cosine"))
     )
@@ -1129,26 +1098,19 @@ def ann_multiprobe_topk(
         df, id_col, vec_col, dim = sq8_decode(codes, bounds), "id", "v", len(bounds)
     d = dim if dim is not None else _vec_dim(df, vec_col)
     planes = rademacher_planes(n_planes, d, seed)
-    dots = _fold_plane_dots(planes)
-    bucket = _bucket_from_dots(n_planes)
+    dots = _fold_plane_dots("v", planes)
     # dimension gate (same explicit policy as bitext_mine/sq8_encode):
     # a wrong-width vector would zip_with into NULL plane dots and
     # silently land in bucket 0 with NULL cosines in deterministic
     # mode, and would make the Arrow batch ragged (np.array of lists
     # of unequal length → object dtype → matmul error) in the numpy
     # kernel — drop mismatched rows instead
-    df = df.filter(F.size(vec_col) == d)
+    df = _width_gate(df, vec_col, d)
     if deterministic:
         # fold-based JVM plane dots: bit-reproducible in a SQL oracle
         corpus = (
-            df.select(
-                F.col(id_col).alias("id"),
-                F.col(vec_col).alias("v"),
-                F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("norm"),
-                dots.alias("__dots"),
-            )
-            .withColumn("b", bucket)
-            .select("id", "v", "norm", "b")
+            _vec_base(df, id_col, vec_col, f"{_fold_plane_dots(sql_ident(vec_col), planes)} AS __dots")
+            .selectExpr("id", "v", "norm", f"{_bucket_from_dots(n_planes)} AS b")
             .persist()
         )
     else:
@@ -1173,11 +1135,7 @@ def ann_multiprobe_topk(
                 F.col(vec_col).alias("v"),
                 _sketch(F.col(vec_col)).alias("sk"),
             )
-            .select(
-                "id", "v",
-                F.col("sk.norm").alias("norm"),
-                F.col("sk.b").alias("b"),
-            )
+            .selectExpr("id", "v", "sk.norm AS norm", "sk.b AS b")
             .persist()
         )
     # query side: filter the PERSISTED hashed relation, so the query's
@@ -1191,40 +1149,19 @@ def ann_multiprobe_topk(
     # reorders near-tied probe candidates.
     # Probe set: exact bucket + flips of the n_probes-1 smallest
     # |margin| planes (ties to the lower plane index — total order)
-    qbase = corpus.filter(F.col("id").isin(query_ids)).withColumn(
-        "__dots", dots
+    qbase = corpus.where(_id_in(query_ids)).selectExpr(
+        "*", f"{dots} AS __dots"
     )
-    probes = _multiprobe_probes(n_planes, n_probes)
-    queries = qbase.select(
-        F.col("id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.explode(probes).alias("pb"),
+    queries = qbase.selectExpr(
+        "id AS qid", "v AS qv", "norm AS qnorm",
+        f"explode({_multiprobe_probes(n_planes, n_probes)}) AS pb",
     )
     cand = (
-        corpus.join(
-            F.broadcast(queries),
-            (F.col("b") == F.col("pb")) & (F.col("id") != F.col("qid")),
-        )
+        corpus.join(F.broadcast(queries), F.expr("b = pb AND id <> qid"))
         .select("qid", "qv", "qnorm", "id", "v", "norm")
         .dropDuplicates(["qid", "id"])
     )
-    cos = _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("norm"))
-    scored = cand.select(
-        "qid", F.col("id").alias("neighbor_id"), cos.alias("cosine")
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "qid", "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            round6("cosine").alias("cosine"),
-        )
-    )
+    return _topk_rank(_scored(cand), k)
 
 
 # ---------------------------------------------------------------------------
@@ -1367,14 +1304,8 @@ def sq8_topk(
     ``ann_multiprobe_topk(codes=..., bounds=...)``."""
     coded = codes if codes is not None else sq8_encode(
         df, bounds, id_col, vec_col)
-    base = sq8_decode(coded, bounds).select(
-        "id", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("norm")
-    )
-    queries = base.filter(F.col("id").isin(query_ids)).select(
-        F.col("id").alias("qid"), F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    return _brute_cosine_rank(base, queries, k)
+    base = sq8_decode(coded, bounds).selectExpr("id", "v", f"{_norm('v')} AS norm")
+    return _brute_cosine_rank(base, _as_queries(base, query_ids), k)
 
 
 # ---------------------------------------------------------------------------
@@ -1451,7 +1382,7 @@ def bitext_mine(
 
     d = dim if dim is not None else _vec_dim(src, vec_col)
     planes = rademacher_planes(n_planes, d, seed)
-    dots = _fold_plane_dots(planes)
+    dots = _fold_plane_dots(sql_ident(vec_col), planes)
     bucket = _bucket_from_dots(n_planes)
 
     def hashed(df: DataFrame, with_dots: bool) -> DataFrame:
@@ -1460,16 +1391,9 @@ def bitext_mine(
         # with NULL cosines (and NULL-cosine candidates would still
         # count in the k-NN averages) — drop mismatched rows instead,
         # the same explicit policy as sq8_encode
-        base = (
-            df.filter(F.size(vec_col) == d)
-            .select(
-                F.col(id_col).alias("id"),
-                F.col(vec_col).alias("v"),
-                F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("norm"),
-                dots.alias("__dots"),
-            )
-            .withColumn("b", bucket)
-        )
+        base = _vec_base(
+            _width_gate(df, vec_col, d), id_col, vec_col, f"{dots} AS __dots"
+        ).selectExpr("*", f"{bucket} AS b")
         cols = ["id", "v", "norm", "b"] + (["__dots"] if with_dots else [])
         # no persist: each side feeds exactly one consumer (the probe
         # explode / the candidate join) — the THRICE-consumed relation
@@ -1479,21 +1403,13 @@ def bitext_mine(
     s = hashed(src, with_dots=True)
     t = hashed(tgt, with_dots=False)
     # multi-probe set on the src side (the shared Lv 2007 construction)
-    probes = _multiprobe_probes(n_planes, n_probes)
-    sprobed = s.select(
-        F.col("id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.explode(probes).alias("pb"),
+    sprobed = s.selectExpr(
+        "id AS qid", "v AS qv", "norm AS qnorm",
+        f"explode({_multiprobe_probes(n_planes, n_probes)}) AS pb",
     )
-    cos = _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("norm"))
     cand = (
-        t.join(sprobed, F.col("b") == F.col("pb"))
-        .select(
-            "qid",
-            F.col("id").alias("tid"),
-            cos.alias("cosine"),
-        )
+        t.join(sprobed, F.expr("b = pb"))
+        .selectExpr("qid", "id AS tid", f"{_cosine('qv', 'v', 'qnorm', 'norm')} AS cosine")
         .dropDuplicates(["qid", "tid"])
     )
     wq = Window.partitionBy("qid").orderBy(

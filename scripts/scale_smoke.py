@@ -884,7 +884,7 @@ def main() -> None:
         print("bitext sweep sides:", n_src, tgt.count())
         for p in (8, 14, 20):
             planes = rademacher_planes(p, 64, 7)
-            dots = _fold_plane_dots(planes)
+            dots = _fold_plane_dots("v", planes)
             bucket = _bucket_from_dots(p)
 
             def hashed(df):
@@ -893,13 +893,13 @@ def main() -> None:
                         F.col("vec_id").alias("id"),
                         F.col("embedding").alias("v"),
                     )
-                    .withColumn("__dots", dots)
-                    .withColumn("b", bucket)
+                    .selectExpr("*", f"{dots} AS __dots")
+                    .selectExpr("*", f"{bucket} AS b")
                 )
 
             sp = (
                 hashed(src)
-                .select(F.explode(_multiprobe_probes(p, 2)).alias("pb"))
+                .selectExpr(f"explode({_multiprobe_probes(p, 2)}) AS pb")
                 .groupBy("pb").agg(F.count(F.lit(1)).alias("cs"))
             )
             tb = hashed(tgt).groupBy("b").agg(

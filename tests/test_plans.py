@@ -167,6 +167,67 @@ def test_analyze_fans_out_single_partition_input(spark):
     assert "RoundRobinPartitioning" in p
 
 
+def test_repartition_for_width_follows_session_cores(spark, monkeypatch):
+    """The fan-out is the session's defaultParallelism, not a fixed 32
+    from an unset SPARK_GRAFT_CPUS: a vanilla session at any core count
+    fans a single-partition input out to exactly its cores."""
+    from hdk_spark.operators.dedup import repartition_for_width
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    df = repartition_for_width(spark.table("documents").coalesce(1))
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def _build_commands(spark, build) -> int:
+    """py4j commands the driver sends while ``build()`` composes a plan.
+    Memory-delete commands are not counted: they free whichever Python
+    proxies happen to die during the call, and the garbage collector is
+    off for the same reason."""
+    import gc
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal n
+        if not command.startswith("m\nd\n"):
+            n += 1
+        return send(command, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    client.send_command = counting
+    try:
+        df = build()
+    finally:
+        client.send_command = send
+        gc.enable()
+    assert df is not None
+    return n
+
+
+@pytest.mark.parametrize("op", ["analyze", "minhash_md5", "ann_numpy", "ann_deterministic"])
+def test_operator_plan_build_budget(spark, op):
+    """Fixed-shape expressions reach the JVM as SQL text: building each
+    doc_dedup_search operator's plan costs at most ~150 gateway round
+    trips (a Column-API tree cost 900-19,000, one per node)."""
+    from hdk_spark.operators.dedup import minhash_lsh_dedup
+    from hdk_spark.operators.similarity import ann_lsh_topk
+    from hdk_spark.operators.text import analyze
+
+    docs, emb = spark.table("documents"), spark.table("embeddings")
+    build = {
+        "analyze": lambda: analyze(docs),
+        "minhash_md5": lambda: minhash_lsh_dedup(docs, threshold=0.5, hash_basis="md5"),
+        "ann_numpy": lambda: ann_lsh_topk(emb, [0, 1, 2], k=5, dim=64),
+        "ann_deterministic": lambda: ann_lsh_topk(
+            emb, [0, 1, 2], k=5, dim=64, deterministic=True),
+    }[op]
+    n = _build_commands(spark, build)
+    assert n <= 150, f"{op}: {n} py4j commands to build the plan"
+
+
 def test_ngram_jaccard_joins_on_shingle_key(spark):
     from hdk_spark.operators.dedup import ngram_jaccard_pairs
 
