@@ -306,6 +306,31 @@ def entry(spark: SparkSession) -> DataFrame:
 # is missing from this list.
 # Regenerated by scripts/rotate_priority.py — rotated against r14; failed last check: 0, never checked: 0, green: 298  (window ~50).
 _PRIORITY: list[str] = [
+    # sketch-core lead: the sketch rows whose code path moved onto
+    # one keyed core per family (global, by-group and streaming forms)
+    "stats_cms_frequency",
+    "stats_cms_group_counts",
+    "stats_dds_group_quantile",
+    "stats_dds_merge",
+    "stats_dds_quantile",
+    "stats_heavy_hitters",
+    "stats_kmv_group_merge",
+    "stats_kmv_group_ndv",
+    "stats_kmv_group_pairwise",
+    "stats_kmv_jaccard",
+    "stats_kmv_ndv",
+    "stats_kmv_set_stats",
+    "stats_mg_group_hh",
+    "stats_mg_heavy_hitters",
+    "stats_mg_merge",
+    "streaming_cms_counts",
+    "streaming_cms_group_counts",
+    "streaming_dds_group_quantile",
+    "streaming_dds_quantile",
+    "streaming_frequent_items",
+    "streaming_kmv_group_ndv",
+    "streaming_kmv_ndv",
+    "streaming_mg_group_tops",
     # r15 lead: rows whose operator code changed in r15, then
     # the r14-rewritten rows the r14 driver window never checked
     "crawl_pipeline",
@@ -369,7 +394,6 @@ _PRIORITY: list[str] = [
     "stats_auc_exact",
     "stats_calibration_curve",
     "stats_chi2_independence",
-    "stats_heavy_hitters",
     "stats_k_anonymity",
     "stats_ks_test",
     "stats_ndv_sketch_rollup",
@@ -410,9 +434,7 @@ _PRIORITY: list[str] = [
     "search_bm25",
     "similarity_multiprobe_lsh",
     "similarity_sq8_topk",
-    "stats_cms_frequency",
     "stats_krippendorff_alpha",
-    "streaming_cms_counts",
     "streaming_distinct_users",
     "streaming_interval_join",
     "streaming_ndv_rollup",
@@ -443,20 +465,11 @@ _PRIORITY: list[str] = [
     "distinct_projection",
     "similarity_ann_ivf",
     "similarity_sq8_ann",
-    "stats_dds_merge",
-    "stats_dds_quantile",
-    "stats_kmv_jaccard",
-    "stats_kmv_ndv",
     "stats_mad",
-    "stats_mg_heavy_hitters",
-    "stats_mg_merge",
     "stats_mode",
     "stats_quantile_normalize",
     "stats_winsorize",
     "stats_zscore",
-    "streaming_dds_quantile",
-    "streaming_frequent_items",
-    "streaming_kmv_ndv",
     "temporal_gaps",
     "temporal_resample_fill",
     "temporal_rolling_zscore",
@@ -495,12 +508,6 @@ _PRIORITY: list[str] = [
     "rollup_lineitem_status",
     "scalar_subquery_above_avg",
     "sort_nulls_offset",
-    "stats_dds_group_quantile",
-    "stats_kmv_group_merge",
-    "stats_kmv_group_ndv",
-    "stats_kmv_set_stats",
-    "stats_mg_group_hh",
-    "streaming_kmv_group_ndv",
     "streaming_span_flags",
     "string_funcs",
     "string_funcs_extended",
@@ -546,12 +553,7 @@ _PRIORITY: list[str] = [
     "set_intersect_customers",
     "set_union_distinct",
     "similarity_cosine_topk",
-    "stats_cms_group_counts",
-    "stats_kmv_group_pairwise",
-    "streaming_cms_group_counts",
-    "streaming_dds_group_quantile",
     "streaming_dedup_counts",
-    "streaming_mg_group_tops",
     "string_like_regex",
     "text_ccnet_buckets",
     "union_all_parties",

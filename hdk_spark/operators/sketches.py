@@ -1,48 +1,57 @@
 """Mergeable sketches — sketch each ingest slice ONCE, store the
 summary beside the slice, and answer rollup questions by MERGING
 summaries, never by re-scanning history (the only maintenance model
-that survives 100 TB). Five families, one merge law each:
+that survives 100 TB).
 
-- distinct counts: HLL (ndv_rollup / merge_ndv_rollups /
-  ndv_estimate) — merge = register-wise max, idempotent. Built on
-  Spark's Apache DataSketches functions (hll_sketch_agg /
-  hll_union_agg, Spark ≥ 3.5), the family the reference's
-  approx_count_distinct maps to (SURVEY.md §2.5). HLL mergeability
-  is EXACT by construction: registers are per-hash maxima, so
-  sketch(A) ∪ sketch(B) has byte-for-byte the registers of
-  sketch(A∪B) at the same lgConfigK (property-tested).
-- point frequencies: Count-Min (cms_build / cms_merge / cms_query;
-  per-group: cms_build_by_group / cms_merge_by_group /
-  cms_query_by_group) — merge = linear cell sum.
-- frequency tops: Misra-Gries (mg_summary / mg_merge; exact-recount
-  heavy hitters via frequent_items; per-group: mg_summary_by_group /
-  mg_merge_by_group / mg_heavy_hitters_by_group) — merge = counter
-  add + one trim (Agarwal et al. 2012 "Mergeable Summaries" §3).
-- quantiles: DDSketch (dds_build / dds_merge / dds_quantile;
-  per-group: dds_build_by_group / dds_merge_by_group /
-  dds_quantile_by_group) — merge = linear cell sum like CMS (bucket
-  counters add), with the relative-error guarantee of Masson, Rim &
-  Lee 2019.
-- distinct samples: KMV / bottom-k (kmv_summary / kmv_merge /
-  kmv_ndv / kmv_jaccard / kmv_set_stats; per-group: kmv_by_group /
-  kmv_ndv_by_group / kmv_merge_by_group / kmv_pairwise_stats, the
-  all-pairs overlap matrix) — merge = bottom-k of the summary union
-  (Bar-Yossef et al. 2002; Beyer et al. 2007), which also answers
-  set-operation questions (Jaccard, union/intersection NDV, both
-  containments) no other family can.
+Layout: each family is defined ONCE, as a private core per step —
+cells (corpus rows → bounded summary cells), merge law (slice
+summaries → the summary of their union) and query (summary →
+answer) — parameterised by a list of key columns. A global sketch is
+a by-group sketch over a constant key: the global form passes no
+key, the ``_by_group`` form keys every step on ``grp``, and each
+global / ``_by_group`` pair is two thin wrappers over one core (the
+set-algebra queries kmv_jaccard, kmv_set_stats and kmv_pairwise_stats
+share the KMV estimator expressions). Cores that join derived
+relations back key on the injective NULL-safe ``_grp_key``
+(``__gk``) and carry ``grp`` along, so the NULL group, kept per SQL
+GROUP BY, survives the equi-joins. The key list also
+picks the physical shape: with no key every derived relation is
+bucket- or shard-sized, so the global form forces broadcasts (and
+KMV takes its bottom-k with TakeOrdered); keyed relations are
+groups-scaled, so the by-group form keeps plain equi-joins (AQE may
+still broadcast small ones) and takes bottom-k / top-(k+1) in the
+salted two-phase aggregation.
 
-Every family has a bounded-state streaming twin in
-hdk_spark.streaming: stream_ndv_rollup / stream_cms /
-stream_frequent_items / stream_dds / stream_kmv (sharded bottom-k
-state, exact vs the batch summary regardless of micro-batch
-splits) / stream_kmv_by_group (per-group bottom-k, the kmv_by_group
-twin) / stream_frequent_items_by_group (per-(grp, shard) MG state,
-the mg_summary_by_group twin) / stream_dds_by_group and
-stream_cms_by_group (per-group counter cells as streaming
-aggregation state — the linear-sketch twins)."""
+The families and their merge laws:
+
+- HLL distinct counts (ndv_rollup / merge_ndv_rollups /
+  ndv_estimate) — register-wise max, idempotent; Spark's Apache
+  DataSketches functions, the family the reference's
+  approx_count_distinct maps to (SURVEY.md §2.5). Exact by
+  construction: sketch(A) ∪ sketch(B) has byte-for-byte the
+  registers of sketch(A∪B) at the same lgConfigK (property-tested).
+- Count-Min point frequencies (cms_*) — linear cell sum.
+- Misra-Gries frequency tops (mg_*; exact recount via
+  frequent_items) — counter add + one trim (Agarwal et al. 2012
+  "Mergeable Summaries" §3).
+- DDSketch quantiles (dds_*) — linear bucket sum, with the
+  relative-error guarantee of Masson, Rim & Lee 2019.
+- KMV / bottom-k distinct samples (kmv_*) — bottom-k of the summary
+  union (Bar-Yossef et al. 2002; Beyer et al. 2007), which also
+  answers set-operation questions (Jaccard, union/intersection NDV,
+  both containments; kmv_pairwise_stats for every group pair).
+
+The streaming twins in hdk_spark.streaming apply each merge law per
+micro-batch: the linear and HLL twins (stream_cms, stream_dds, their
+by-group forms, stream_ndv_rollup) ARE the batch builds run as
+streaming aggregations; stream_frequent_items and stream_kmv (each
+one keyed builder, global or by group) hold MG counters / bottom-k
+lists as applyInPandasWithState state."""
 
 from __future__ import annotations
 
+import functools
+import operator
 import threading
 import weakref
 
@@ -63,6 +72,73 @@ __all__ = ["ndv_rollup", "merge_ndv_rollups", "ndv_estimate",
            "kmv_merge_by_group", "kmv_pairwise_stats",
            "release_caches",
 ]
+
+#: the by-group key of cores that join derived relations back: the
+#: NULL-safe join key (see _grp_key) and the group column it carries
+_GK = ["__gk", "grp"]
+
+#: salt fan-out of the two-phase per-key top-k (the MG rank-(k+1)
+#: median and the by-group KMV bottom-k): each phase-1 group holds
+#: ~distinct/(keys·salts) entries, so no single task ever sorts a
+#: whole shard's or group's vocabulary (VERDICT r11 #3)
+_TOPK_SALTS = 64
+
+
+def _check_k(k: int, lo: int) -> None:
+    if k < lo:
+        raise ValueError(f"k must be >= {lo}, got {k}")
+
+
+def _check_m(m: int) -> None:
+    if m < 1 or (m & (m - 1)) != 0:
+        raise ValueError(f"m must be a power of two >= 1, got {m}")
+
+
+def _grp_cols(group_col: "str | None") -> list:
+    """The key a build projects: nothing for the global form, the
+    group column cast to string as ``grp`` for the by-group form."""
+    return [] if group_col is None else [
+        F.col(group_col).cast("string").alias("grp")]
+
+
+def _grp_key(grp_col):
+    """Injective NOT-NULL join key for a nullable group column: SQL
+    equi-joins never match NULL = NULL, so any per-group operator
+    that JOINS its derived relations back on grp would silently drop
+    the NULL group's rows (the kept-per-SQL-GROUP-BY group). "n" for
+    the NULL group, "v:" + value otherwise — prefixes disjoint, so no
+    value collides with the NULL marker."""
+    return F.when(grp_col.isNull(), F.lit("n")).otherwise(
+        F.concat(F.lit("v:"), grp_col))
+
+
+def _with_gk(df: DataFrame, keys) -> DataFrame:
+    """Add the ``__gk`` join key when the core is keyed by group."""
+    return df.withColumn("__gk", _grp_key(F.col("grp"))) if keys else df
+
+
+def _small(df: DataFrame, keys) -> DataFrame:
+    """Broadcast hint for a derived relation of an UNKEYED core, where
+    every derived relation is bucket- or shard-sized; keyed relations
+    are groups-scaled, so the by-group form leaves the choice to AQE."""
+    return df if keys else F.broadcast(df)
+
+
+def _union_all(rels, err: str) -> DataFrame:
+    if not rels:
+        raise ValueError(err)
+    out = rels[0]
+    for r in rels[1:]:
+        out = out.unionByName(r)
+    return out
+
+
+def _sum_cells(sketches, cols, err: str) -> DataFrame:
+    """The linear merge law (CMS cells, DDS buckets): element-wise
+    counter sum over the union — EXACTLY the sketch of the
+    concatenated multisets."""
+    return _union_all(sketches, err).groupBy(*cols).agg(
+        F.sum("c").cast("long").alias("c"))
 
 
 def ndv_rollup(
@@ -89,11 +165,7 @@ def merge_ndv_rollups(*rollups: DataFrame) -> DataFrame:
     groups-sized relations + one partial-agg groupBy folding
     register-wise maxima. ``ndv_estimate(merge(r(A), r(B))) ==
     ndv_estimate(r(A ∪ B))`` exactly (property-tested)."""
-    if not rollups:
-        raise ValueError("merge_ndv_rollups needs at least one input")
-    out = rollups[0]
-    for r in rollups[1:]:
-        out = out.unionByName(r)
+    out = _union_all(rollups, "merge_ndv_rollups needs at least one input")
     return out.groupBy("grp").agg(
         F.sum("n_rows").cast("long").alias("n_rows"),
         F.hll_union_agg("sketch").alias("sketch"),
@@ -109,6 +181,9 @@ def ndv_estimate(rollup: DataFrame) -> DataFrame:
         "n_rows",
         F.round(F.hll_sketch_estimate("sketch")).cast("long").alias("ndv"),
     )
+
+
+# ---------------------------------------------------------------- Misra-Gries
 
 
 def _mg_trim(counters: "dict", k: int) -> None:
@@ -154,9 +229,13 @@ def frequent_items(
     against brute force). NULLs are excluded (not an item).
 
     Returns (item, cnt, n_total), descending cnt, ties on item.
+
+    Cache lifetime: the bounded candidate summary is persisted (the
+    total and the candidate set both read it) and the returned lazy
+    plan reads it; after materializing, ``release_caches(result)``
+    frees it.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
+    _check_k(k, 1)
     from collections.abc import Iterator
 
     import pandas as pd
@@ -189,7 +268,7 @@ def frequent_items(
     # tiny (≤ partitions·(k+1) rows); persisted because both the total
     # and the candidate set read it — without the persist the corpus
     # summary pass would run twice
-    summ = src.mapInPandas(summarize, out_schema).persist()
+    summ, _own = _persist_internal(src.mapInPandas(summarize, out_schema))
     n_total = summ.agg(F.sum("n_part")).collect()[0][0] or 0
     cands = summ.filter(F.col("item").isNotNull()).select("item").distinct()
     counted = (
@@ -198,9 +277,147 @@ def frequent_items(
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .filter(F.col("cnt") * F.lit(k) > F.lit(int(n_total)))
     )
-    return counted.select(
-        "item", "cnt", F.lit(int(n_total)).cast("long").alias("n_total")
-    ).orderBy(F.desc("cnt"), "item")
+    return _attach_caches(
+        counted.select(
+            "item", "cnt", F.lit(int(n_total)).cast("long").alias("n_total")
+        ).orderBy(F.desc("cnt"), "item"),
+        _own,
+    )
+
+
+def _mg_tops(cnt: DataFrame, k: int, keys, *aggs) -> DataFrame:
+    """Phase 1 of the windowless MG trim over a (*keys, shard, item,
+    c) count relation: per (*keys, shard, salt) the negated top-(k+1)
+    count list, plus any extra ``aggs`` computed in the same pass.
+
+    The rank-(k+1) value is found WITHOUT any Window over the count
+    relation (the r11 version row_numbered each whole shard through
+    one window partition — a vocabulary-sized single-task sort at
+    lake scale). Items salt into _TOPK_SALTS sub-groups per shard and
+    each sub-group keeps only its top-(k+1) counts (bounded
+    aggregation: the global rank-(k+1) row is necessarily within its
+    own sub-group's top-(k+1), since fewer than k+1 rows can precede
+    it anywhere); :func:`_mg_median_from_tops` merges the ≤
+    salts·(k+1) survivors per shard to the exact median value.
+
+    Bare negated counts, not (c, item) structs: the rank-(k+1) VALUE
+    depends only on the MULTISET of counts (any tie-break permutes
+    equal values without moving the value at a rank), so the r11
+    row_number's (c desc, item asc) order and this ascending-(-c)
+    order put the same c at rank k+1 — bit-identical output, and the
+    aggregation ships longs instead of structs."""
+    return (
+        cnt.withColumn(
+            "__salt",
+            F.pmod(F.xxhash64(F.col("item")), F.lit(_TOPK_SALTS))
+            .cast("int"),
+        )
+        .groupBy(*keys, "shard", "__salt")
+        .agg(
+            F.slice(F.array_sort(F.collect_list(-F.col("c"))), 1, k + 1)
+            .alias("tops"),
+            *aggs,
+        )
+    )
+
+
+def _mg_median_from_tops(part: DataFrame, k: int, jk) -> DataFrame:
+    """Merge per-(*jk, shard, salt) negated top-(k+1) count lists to
+    the exact per-shard rank-(k+1) value: explode the survivors, one
+    tiny aggregation, pick element k+1. Returns (*jk, shard, __med) —
+    shards with < k+1 distinct items emit no row (their trim
+    subtracts 0)."""
+    kp1 = k + 1
+    return (
+        part.select(*jk, "shard", F.explode("tops").alias("nc"))
+        .groupBy(*jk, "shard")
+        .agg(F.array_sort(F.collect_list("nc")).alias("tops"))
+        .filter(F.size("tops") >= kp1)
+        .select(
+            *jk, "shard",
+            (-F.element_at("tops", kp1)).cast("long").alias("__med"),
+        )
+    )
+
+
+def _mg_subtract(cnt: DataFrame, med_rel: DataFrame, jk) -> DataFrame:
+    """The MG trim's subtraction: join the median relation onto the
+    count relation, subtract, drop non-positives — the corpus-sized
+    side never sorts, never shuffles for this. Returns (*jk, shard,
+    item, cnt)."""
+    return (
+        cnt.join(_small(med_rel, jk), [*jk, "shard"], "left")
+        .select(
+            *jk, "shard", "item",
+            (F.col("c") - F.coalesce(F.col("__med"), F.lit(0)))
+            .cast("long").alias("cnt"),
+        )
+        .filter(F.col("cnt") > 0)
+    )
+
+
+def _mg_with_totals(trimmed: DataFrame, n_rel: DataFrame, keys) -> DataFrame:
+    """Attach the per-(key, shard) n_shard accounting to a trimmed
+    counter relation. Outer toward the totals: an all-trimmed shard
+    keeps its accounting row (item NULL, cnt NULL, n_shard). RIGHT
+    outer with the unkeyed broadcast hint on the LEFT (non-preserved)
+    side — hinting the preserved side of an outer join is silently
+    ignored and degrades to a sort-merge join with two extra
+    exchanges."""
+    return _small(trimmed, keys).join(
+        n_rel, [*keys[:1], "shard"], "right"
+    ).select(*keys[1:], "shard", "item", "cnt", "n_shard")
+
+
+def _mg_build(df, group_col, value_col, k, n_shards, hash_basis):
+    """The MG cells: exact per-(key, shard, item) counts, ONE trim
+    per (key, shard), n_shard accounting — eager, see mg_summary."""
+    _check_k(k, 1)
+    if n_shards < 1:
+        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
+    keys = _GK if group_col is not None else []
+    src = df.select(
+        *_grp_cols(group_col), F.col(value_col).cast("string").alias("item")
+    ).filter(F.col("item").isNotNull())
+    # persisted: cnt feeds BOTH the trim relation and the per-shard
+    # totals, and Spark's exchange reuse does not bridge the two
+    # subtrees — un-persisted, building one summary scanned the corpus
+    # twice (executed-plan-verified, 0 ReusedExchange). cnt is
+    # distinct-(key, shard, item)-sized; persist() is MEMORY_AND_DISK,
+    # so a huge vocabulary spills rather than OOMs, and one spilled
+    # pass still beats two corpus scans + two identical shuffles. The
+    # cnt cache is SCOPED TO THE BUILD: the summary (bounded, ≤
+    # keys·n_shards·(k+1) rows) is persisted and forced with one
+    # count() — a bounded driver action, the trainer convention — then
+    # cnt is released, so a session building summaries over many
+    # slices retains only k-sized caches, never the vocabularies.
+    cnt = _with_gk(
+        src.withColumn(
+            "shard",
+            F.pmod(
+                _cms_base_hash(F.col("item"), hash_basis), F.lit(n_shards)
+            ).cast("int"),
+        ),
+        keys,
+    ).groupBy(*keys, "shard", "item").agg(
+        F.count(F.lit(1)).cast("long").alias("c")
+    ).persist()
+    # ONE phase-1 pass computes BOTH trim ingredients: the salted
+    # top-(k+1) count lists for the rank-(k+1) median AND the partial
+    # totals for n_shard — so the build keeps exactly two passes over
+    # the cached count relation (this aggregation + the subtraction
+    # join). phase1 is tiny and build-scoped like cnt.
+    phase1 = _mg_tops(
+        cnt, k, keys, F.sum("c").cast("long").alias("__s")).persist()
+    med_rel = _mg_median_from_tops(phase1, k, keys[:1])
+    n_rel = phase1.groupBy(*keys, "shard").agg(
+        F.sum("__s").cast("long").alias("n_shard"))
+    summary = _mg_with_totals(
+        _mg_subtract(cnt, med_rel, keys[:1]), n_rel, keys).persist()
+    summary.count()
+    phase1.unpersist()
+    cnt.unpersist()
+    return summary
 
 
 def mg_summary(
@@ -236,14 +453,14 @@ def mg_summary(
     when an input slice's shard summarized to nothing. Consumers
     reading items should filter ``cnt IS NOT NULL``.
 
-    Scale note: this batch form windows over the per-shard distinct-
-    item counts, so it suits summary-building over slices; the
-    unbounded-ingest path is the streaming twin, and the EXACT
-    heavy-hitter query is ``frequent_items`` (which recounts). The
-    build is EAGER (one bounded count() action): the corpus is
-    scanned once, the ≤ n_shards·(k+1)-row summary is cached, and the
+    Scale note: the rank-(k+1) median comes from the salted two-phase
+    aggregation (_mg_tops), never a Window, and the ≤ n_shards-row
+    median relation broadcasts back for the subtraction. The build is
+    EAGER (one bounded count() action): the corpus is scanned once,
+    the ≤ n_shards·(k+1)-row summary is cached, and the
     vocabulary-sized intermediate is released — repeated builds in a
-    long-lived session retain only k-sized caches.
+    long-lived session retain only k-sized caches. The EXACT
+    heavy-hitter query is ``frequent_items`` (which recounts).
 
     Cache lifetime: the RETURNED summary stays persisted (its
     consumers — mg_merge, mg_heavy_hitters, the oracle replays — read
@@ -252,165 +469,43 @@ def mg_summary(
     building summaries over MANY slices should ``.unpersist()`` each
     returned summary once done with it; each entry is tiny
     (≤ n_shards·(k+1) rows) but the count is otherwise unbounded."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    src = df.select(F.col(value_col).cast("string").alias("item")).filter(
-        F.col("item").isNotNull()
+    return _mg_build(df, None, value_col, k, n_shards, hash_basis)
+
+
+def _mg_merge(summaries, k, keys, err):
+    """The MG merge law: per-(key, shard, item) counter ADD over the
+    tagged union, ONE trim, n_shard summed per input."""
+    _check_k(k, 1)
+    # each input is consumed by BOTH the counter union and the totals
+    # union; tagging rows with their input index and persisting the
+    # single tagged union makes every input's lineage run ONCE (an
+    # in-lineage mg_summary input would otherwise re-scan its corpus
+    # per consumer). The tag also keeps per-input totals distinct
+    # BEFORE summing — two inputs whose shard happens to carry the
+    # same n_shard value must contribute it twice.
+    u = _union_all([
+        s.select(*keys[1:], "shard", "item", "cnt", "n_shard",
+                 F.lit(i).alias("__src"))
+        for i, s in enumerate(summaries)
+    ], err)
+    # bounded: ≤ inputs·(k+1) rows per (key, shard); ownership-aware
+    # persist (repeat calls share one refcounted entry)
+    u, _own = _persist_internal(_with_gk(u, keys))
+    jk = keys[:1]
+    merged = (
+        u.filter(F.col("item").isNotNull())  # accounting rows
+        .groupBy(*jk, "shard", "item")
+        .agg(F.sum("cnt").cast("long").alias("c"))
     )
-    # persisted: cnt feeds BOTH the trim relation and the per-shard
-    # totals, and Spark's exchange reuse does not bridge the two
-    # subtrees — un-persisted, building one summary scanned the corpus
-    # twice (executed-plan-verified, 0 ReusedExchange). cnt is
-    # distinct-(shard, item)-sized; persist() is MEMORY_AND_DISK, so a
-    # huge vocabulary spills rather than OOMs, and one spilled pass
-    # still beats two corpus scans + two identical shuffles. The cnt
-    # cache is SCOPED TO THE BUILD: the summary (bounded, ≤
-    # n_shards·(k+1) rows) is persisted and forced with one count() —
-    # a bounded driver action, the trainer convention — then cnt is
-    # released, so a session building summaries over many slices
-    # retains only k-sized caches, never the vocabularies.
-    cnt = (
-        src.withColumn(
-            "shard",
-            F.pmod(
-                _cms_base_hash(F.col("item"), hash_basis), F.lit(n_shards)
-            ).cast("int"),
-        )
-        .groupBy("shard", "item")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()
+    n_rel = (
+        u.select(*keys, "shard", "n_shard", "__src").distinct()
+        .groupBy(*keys, "shard")
+        .agg(F.sum("n_shard").cast("long").alias("n_shard"))
     )
-    # ONE phase-1 pass computes BOTH trim ingredients: the salted
-    # per-(shard, salt) top-(k+1) count lists for the rank-(k+1)
-    # median (see _mg_trim_relation for the windowless argument) AND
-    # the per-(shard, salt) partial totals for n_shard — so the build
-    # keeps exactly two passes over the cached count relation (this
-    # aggregation + the subtraction join), the same count the r11
-    # window version had. phase1 is tiny (≤ n_shards·n_salts rows)
-    # and build-scoped like cnt.
-    kp1 = k + 1
-    phase1 = (
-        cnt.withColumn(
-            "__salt",
-            F.pmod(F.xxhash64(F.col("item")), F.lit(_MG_TRIM_SALTS))
-            .cast("int"),
-        )
-        .groupBy("shard", "__salt")
-        .agg(
-            F.slice(F.array_sort(F.collect_list(-F.col("c"))), 1, kp1)
-            .alias("tops"),
-            F.sum("c").cast("long").alias("__s"),
-        )
-        .persist()
-    )
-    med_rel = _mg_median_from_tops(phase1, k)
-    n_rel = phase1.groupBy("shard").agg(
-        F.sum("__s").cast("long").alias("n_shard"))
-    trimmed = _mg_subtract(cnt, med_rel)
-    # outer toward the totals: an all-trimmed shard keeps its
-    # accounting row (item NULL, cnt NULL, n_shard). RIGHT outer with
-    # the broadcast hint on the LEFT (non-preserved) side — hinting
-    # the preserved side of an outer join is silently ignored and
-    # degrades to a sort-merge join with two extra exchanges
-    summary = F.broadcast(trimmed).join(
-        n_rel, "shard", "right"
-    ).select("shard", "item", "cnt", "n_shard").persist()
-    summary.count()
-    phase1.unpersist()
-    cnt.unpersist()
-    return summary
-
-
-#: salt fan-out for the two-phase per-shard top-(k+1): each phase-1
-#: group holds ~distinct/(n_shards·salts) items, so no single task
-#: ever sorts a whole shard's vocabulary (VERDICT r11 #3)
-_MG_TRIM_SALTS = 64
-
-
-def _mg_trim_relation(
-    cnt: DataFrame, k: int, n_salts: int = _MG_TRIM_SALTS
-) -> DataFrame:
-    """One MG trim over a (shard, item, c) count relation — the shared
-    tail of mg_summary and mg_merge (one fix reaches both, and both
-    stay textually aligned with the contract oracles). Subtracts the
-    (k+1)-th largest count VALUE per shard under the total order
-    (c desc, item asc) and drops non-positives; callers attach their
-    own n_shard accounting (exact Σc for mg_summary, the summed input
-    n_shards for mg_merge — the merged counters are already
-    undercounts, so Σc would lie there). Returns (shard, item, cnt).
-
-    The rank-(k+1) value is found WITHOUT any Window over the count
-    relation (the r11 version row_numbered each whole shard through
-    one window partition — a vocabulary-sized single-task sort at
-    lake scale). Two-phase instead, the kmv_summary partial-then-
-    merge shape: items salt into ``n_salts`` sub-groups per shard and
-    each (shard, salt) group keeps only its top-(k+1) structs
-    (bounded aggregation: the global rank-(k+1) row is necessarily
-    within its own sub-group's top-(k+1), since fewer than k+1 rows
-    can precede it anywhere); the ≤ n_salts·(k+1) survivors per shard
-    merge in one tiny aggregation to the exact median value. The
-    resulting ≤ n_shards-row relation broadcast-joins back for the
-    subtraction — the corpus-sized side never sorts, never windows.
-    Phase-1 buffers hold ~distinct/(n_shards·n_salts) items; raise
-    ``n_salts`` for billion-item vocabularies. (mg_summary inlines
-    this same pipeline to fold its n_shard totals into the phase-1
-    pass — one fewer traversal of its cached count relation; the
-    pieces are shared as _mg_median_from_tops/_mg_subtract so the
-    arithmetic cannot drift apart.)"""
-    kp1 = k + 1
-    # bare negated counts, not (c, item) structs: the rank-(k+1)
-    # VALUE depends only on the MULTISET of counts (any tie-break
-    # permutes equal values without moving the value at a rank), so
-    # the r11 row_number's (c desc, item asc) order and this
-    # ascending-(-c) order put the same c at rank k+1 — bit-identical
-    # output, and the aggregation ships longs instead of structs
-    part = (
-        cnt.withColumn(
-            "__salt",
-            F.pmod(F.xxhash64(F.col("item")), F.lit(n_salts)).cast("int"),
-        )
-        .groupBy("shard", "__salt")
-        .agg(
-            F.slice(F.array_sort(F.collect_list(-F.col("c"))), 1, kp1)
-            .alias("tops")
-        )
-    )
-    return _mg_subtract(cnt, _mg_median_from_tops(part, k))
-
-
-def _mg_median_from_tops(part: DataFrame, k: int) -> DataFrame:
-    """Merge per-(shard, salt) negated top-(k+1) count lists to the
-    exact per-shard rank-(k+1) value: explode the ≤ n_salts·(k+1)
-    survivors, one tiny aggregation, pick element k+1. Returns
-    (shard, __med), ≤ n_shards rows — shards with < k+1 distinct
-    items emit no row (their trim subtracts 0)."""
-    kp1 = k + 1
-    return (
-        part.select("shard", F.explode("tops").alias("nc"))
-        .groupBy("shard")
-        .agg(F.array_sort(F.collect_list("nc")).alias("tops"))
-        .filter(F.size("tops") >= kp1)
-        .select(
-            "shard",
-            (-F.element_at("tops", kp1)).cast("long").alias("__med"),
-        )
-    )
-
-
-def _mg_subtract(cnt: DataFrame, med_rel: DataFrame) -> DataFrame:
-    """The MG trim's subtraction: broadcast the ≤ n_shards-row median
-    relation onto the count relation, subtract, drop non-positives —
-    the corpus-sized side never sorts, never shuffles for this."""
-    return (
-        cnt.join(F.broadcast(med_rel), "shard", "left")
-        .select(
-            "shard", "item",
-            (F.col("c") - F.coalesce(F.col("__med"), F.lit(0)))
-            .cast("long").alias("cnt"),
-        )
-        .filter(F.col("cnt") > 0)
+    med_rel = _mg_median_from_tops(_mg_tops(merged, k, jk), k, jk)
+    return _attach_caches(
+        _mg_with_totals(_mg_subtract(merged, med_rel, jk), n_rel, keys),
+        _own,
     )
 
 
@@ -443,41 +538,55 @@ def mg_merge(*summaries: DataFrame, k: int = 100) -> DataFrame:
     inputs·(k+1) rows per shard) and the returned lazy plan reads it;
     after materializing, release it with ``release_caches(result)`` —
     unpersisting the inputs is a no-op (Dataset.unpersist is
-    non-cascading), the same defect the by-group twins fixed."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if not summaries:
-        raise ValueError("mg_merge needs at least one input")
-    # each input is consumed by BOTH the counter union and the totals
-    # union; tagging rows with their input index and persisting the
-    # single tagged union makes every input's lineage run ONCE (an
-    # in-lineage mg_summary input would otherwise re-scan its corpus
-    # per consumer). The tag also keeps per-input totals distinct
-    # BEFORE summing — two inputs whose shard happens to carry the
-    # same n_shard value must contribute it twice.
-    u = summaries[0].select(
-        "shard", "item", "cnt", "n_shard", F.lit(0).alias("__src"))
-    for i, s in enumerate(summaries[1:], start=1):
-        u = u.unionByName(s.select(
-            "shard", "item", "cnt", "n_shard", F.lit(i).alias("__src")))
-    # bounded: ≤ inputs·(k+1) rows per shard; ownership-aware persist
-    # (repeat calls share one refcounted entry — see _persist_internal)
-    u, _own = _persist_internal(u)
-    merged = (
-        u.filter(F.col("item").isNotNull())  # accounting rows
-        .groupBy("shard", "item")
-        .agg(F.sum("cnt").cast("long").alias("c"))
+    non-cascading)."""
+    return _mg_merge(summaries, k, [], "mg_merge needs at least one input")
+
+
+def _mg_heavy_hitters(summary, phi, k, keys):
+    """The MG query: per-(key, shard) slack, per-key volume N, the
+    φ·N certain/possible split."""
+    _check_k(k, 1)
+    if not (0.0 < phi <= 1.0):
+        raise ValueError(f"phi must be in (0, 1], got {phi}")
+    jk, carried = keys[:1], keys[1:]
+    # three consumers (totals, slack, items) — persist the bounded
+    # summary so an in-lineage input's corpus derivation runs once;
+    # when the caller already cached it (mg_summary returns a
+    # persisted frame by contract) reuse THEIR cache and attach
+    # nothing, so release_caches(result) can never clobber it
+    summary, _own = _persist_internal(_with_gk(summary.select(
+        *carried, "shard", "item", "cnt", "n_shard"), keys))
+    totals = summary.select(*jk, "shard", "n_shard").distinct()
+    n_rel = totals.groupBy(*jk).agg(F.sum("n_shard").cast("long").alias("n"))
+    slack = (
+        summary.groupBy(*jk, "shard")
+        .agg(
+            F.floor(
+                (F.max("n_shard") - F.coalesce(F.sum("cnt"), F.lit(0)))
+                / F.lit(k + 1)
+            ).cast("long").alias("__slack")
+        )
     )
-    n_rel = (
-        u.select("shard", "n_shard", "__src").distinct()
-        .groupBy("shard")
-        .agg(F.sum("n_shard").cast("long").alias("n_shard"))
+    items = summary.filter(F.col("item").isNotNull()).join(
+        _small(slack, keys), [*jk, "shard"])
+    # unkeyed, N is ONE row: a broadcast nested-loop attach (the
+    # Krippendorff 1-row-aggregate pattern — the 'nested loop' is a
+    # constant)
+    items = items.join(n_rel, jk) if keys else items.crossJoin(
+        F.broadcast(n_rel))
+    scored = items.select(
+        *carried, "item",
+        F.col("cnt").alias("cnt_lower"),
+        (F.col("cnt") + F.col("__slack")).alias("cnt_upper"),
+        (F.col("cnt").cast("double") >= F.lit(phi) * F.col("n"))
+        .alias("certain"),
+        (F.col("cnt") + F.col("__slack")).cast("double").alias("__up"),
+        (F.lit(phi) * F.col("n")).alias("__thr"),
     )
-    # same right-outer + build-left broadcast as mg_summary
     return _attach_caches(
-        F.broadcast(_mg_trim_relation(merged, k)).join(
-            n_rel, "shard", "right"
-        ).select("shard", "item", "cnt", "n_shard"),
+        scored.filter(F.col("__up") >= F.col("__thr"))
+        .select(*carried, "item", "cnt_lower", "cnt_upper", "certain")
+        .orderBy(*carried, F.desc("cnt_lower"), "item"),
         _own,
     )
 
@@ -512,73 +621,64 @@ def mg_heavy_hitters(summary: DataFrame, phi: float, k: int) -> DataFrame:
     SAME k the summary was built/merged with (it is not stored in the
     relation). Pure shards-sized arithmetic: one totals distinct, one
     per-shard Σcnt aggregate, one broadcast hash join for the slack
-    and a ONE-ROW broadcast nested-loop for the global N (the
-    Krippendorff 1-row-aggregate-attach pattern — the build side is a
-    single row by construction, so the 'nested loop' is a constant);
-    no window, no corpus access. Returns (item, cnt_lower, cnt_upper,
-    certain), filterable fully in SQL (contract row
-    stats_mg_heavy_hitters).
+    and a ONE-ROW broadcast nested-loop for the global N; no window,
+    no corpus access. Returns (item, cnt_lower, cnt_upper, certain),
+    filterable fully in SQL (contract row stats_mg_heavy_hitters).
 
     Cache lifetime: the bounded summary is persisted for its three
     subtrees and the returned lazy plan reads it; after
-    materializing, ``release_caches(result)`` frees it — the same
-    discipline as the by-group twin. When the CALLER already cached
-    the summary (mg_summary returns a persisted frame), that cache is
-    reused and nothing is attached — release_caches(result) returns 0
-    and never clobbers a caller-owned cache."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if not (0.0 < phi <= 1.0):
-        raise ValueError(f"phi must be in (0, 1], got {phi}")
-    # three consumers (totals, slack, items) — persist the bounded
-    # summary so an in-lineage input's corpus derivation runs once;
-    # when the caller already cached it (mg_summary returns a
-    # persisted frame by contract) reuse THEIR cache and attach
-    # nothing, so release_caches(result) can never clobber it
-    summary, _own = _persist_internal(
-        summary.select("shard", "item", "cnt", "n_shard"))
-    totals = summary.select("shard", "n_shard").distinct()
-    n_total = totals.agg(F.sum("n_shard").cast("long").alias("n"))
-    slack = (
-        summary.groupBy("shard")
-        .agg(
-            F.floor(
-                (F.max("n_shard") - F.coalesce(F.sum("cnt"), F.lit(0)))
-                / F.lit(k + 1)
-            ).cast("long").alias("__slack")
-        )
-    )
-    items = summary.filter(F.col("item").isNotNull())
-    scored = (
-        items.join(F.broadcast(slack), "shard")
-        .crossJoin(F.broadcast(n_total))
-        .select(
-            "item",
-            F.col("cnt").alias("cnt_lower"),
-            (F.col("cnt") + F.col("__slack")).alias("cnt_upper"),
-            (F.col("cnt").cast("double") >= F.lit(phi) * F.col("n"))
-            .alias("certain"),
-            (F.col("cnt") + F.col("__slack")).cast("double")
-            .alias("__up"),
-            (F.lit(phi) * F.col("n")).alias("__thr"),
-        )
-    )
-    return _attach_caches(
-        scored.filter(F.col("__up") >= F.col("__thr"))
-        .select("item", "cnt_lower", "cnt_upper", "certain")
-        .orderBy(F.desc("cnt_lower"), "item"),
-        _own,
-    )
+    materializing, ``release_caches(result)`` frees it. When the
+    CALLER already cached the summary (mg_summary returns a persisted
+    frame), that cache is reused and nothing is attached —
+    release_caches(result) returns 0 and never clobbers a
+    caller-owned cache."""
+    return _mg_heavy_hitters(summary, phi, k, [])
+
+
+def mg_summary_by_group(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    k: int = 100,
+    n_shards: int = 8,
+    hash_basis: str = "xxhash64",
+) -> DataFrame:
+    """Per-GROUP :func:`mg_summary`: each group's rows ARE mg_summary
+    of that group's values with grp attached (sharding by ITEM hash —
+    grp does not enter the shard). Returns (grp, shard, item, cnt,
+    n_shard). NULL GROUPS are kept (SQL GROUP BY); the derived
+    relations are groups-scaled, so nothing is force-broadcast."""
+    return _mg_build(df, group_col, value_col, k, n_shards, hash_basis)
+
+
+def mg_merge_by_group(*summaries: DataFrame, k: int = 100) -> DataFrame:
+    """Per-GROUP :func:`mg_merge` of :func:`mg_summary_by_group`
+    relations: the same law per (grp, shard); groups missing from one
+    slice pass through. NULL GROUPS are kept; nothing is
+    force-broadcast. Release the tagged union with
+    ``release_caches(result)``."""
+    return _mg_merge(
+        summaries, k, _GK, "mg_merge_by_group needs at least one input")
+
+
+def mg_heavy_hitters_by_group(
+    summary: DataFrame, phi: float, k: int
+) -> DataFrame:
+    """Per-GROUP :func:`mg_heavy_hitters`: N is each GROUP's volume,
+    so φ asks "heavy within its group". Returns (grp, item,
+    cnt_lower, cnt_upper, certain) ordered per group. NULL GROUPS are
+    kept; nothing is force-broadcast. Release the keyed summary cache
+    with ``release_caches(result)``."""
+    return _mg_heavy_hitters(summary, phi, k, _GK)
 
 
 def release_caches(df: DataFrame) -> int:
     """Unpersist the bounded INTERNAL relations a sketch query
     operator persisted while building ``df``'s plan, returning how
     many were actually unpersisted. The query operators with lazy
-    returns (kmv_jaccard, kmv_set_stats, kmv_pairwise_stats, mg_merge,
-    mg_heavy_hitters, dds_quantile, mg_merge_by_group,
-    mg_heavy_hitters_by_group,
-    dds_quantile_by_group) persist derived projections their multiple
+    returns (frequent_items, kmv_jaccard, kmv_set_stats,
+    kmv_pairwise_stats, mg_merge, mg_heavy_hitters, dds_quantile and
+    their by-group forms) persist derived projections their multiple
     subtrees share; ``input.unpersist()`` cannot release those —
     Dataset.unpersist is non-cascading and matches only the exact
     cached plan, so the documented discipline needs THIS entry point:
@@ -735,261 +835,7 @@ def _persist_internal(df: DataFrame) -> "tuple[DataFrame, tuple]":
     return df, (df,)
 
 
-def _grp_key(grp_col):
-    """Injective NOT-NULL join key for a nullable group column: SQL
-    equi-joins never match NULL = NULL, so any per-group operator
-    that JOINS its derived relations back on grp would silently drop
-    the NULL group's rows (the kept-per-SQL-GROUP-BY group). "n" for
-    the NULL group, "v:" + value otherwise — prefixes disjoint, so no
-    value collides with the NULL marker."""
-    return F.when(grp_col.isNull(), F.lit("n")).otherwise(
-        F.concat(F.lit("v:"), grp_col))
-
-
-def mg_summary_by_group(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    k: int = 100,
-    n_shards: int = 8,
-    hash_basis: str = "xxhash64",
-) -> DataFrame:
-    """Per-GROUP one-round Misra-Gries summary — "top terms per
-    domain / hot items per source" as a stored, mergeable relation,
-    completing the per-group sketch trilogy (kmv_by_group distincts,
-    dds_*_by_group quantiles, now frequency tops). Each group's rows
-    ARE :func:`mg_summary` of that group's values with grp attached —
-    identical sharding (by ITEM hash; grp does not enter the shard),
-    exact per-(grp, shard) counts, ONE trim via the salted windowless
-    two-phase median, the same NULL-item accounting rows per (grp,
-    shard), and the same MG guarantees per group. NULL values
-    excluded; NULL GROUPS kept (SQL GROUP BY). Returns (grp, shard,
-    item, cnt, n_shard), ≤ k item rows per (grp, shard); eager build
-    with the mg_summary cache discipline (count intermediates
-    released, only the bounded summary retained — unpersist() it per
-    slice in long-lived sessions).
-
-    Scale note vs the global form: every derived relation here is
-    groups-scaled, so the median/accounting joins keep their
-    (grp, shard) equi-keys WITHOUT forced broadcasts (the
-    dds_quantile_by_group precedent) — AQE may still broadcast small
-    ones. The build transiently persists TWO relations (the distinct
-    count relation AND the fused phase-1) before releasing both, so
-    at a billion-(grp, item) vocabulary the transient cache is ~2×
-    the global form's; both are MEMORY_AND_DISK, so overflow spills
-    rather than evicting or failing."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    src = df.select(
-        F.col(group_col).cast("string").alias("grp"),
-        F.col(value_col).cast("string").alias("item"),
-    ).filter(F.col("item").isNotNull())
-    # __gk: injective not-null group key — every derived relation
-    # joins back on it so the NULL group (kept per SQL GROUP BY)
-    # survives the equi-joins; grp rides along for output
-    cnt = (
-        src.withColumn(
-            "shard",
-            F.pmod(
-                _cms_base_hash(F.col("item"), hash_basis), F.lit(n_shards)
-            ).cast("int"),
-        )
-        .withColumn("__gk", _grp_key(F.col("grp")))
-        .groupBy("__gk", "grp", "shard", "item")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()
-    )
-    # fused phase 1 (the mg_summary shape, keyed by (group, shard,
-    # salt)): top-(k+1) negated count lists AND partial totals in one
-    # pass over the cached count relation
-    kp1 = k + 1
-    phase1 = (
-        cnt.withColumn(
-            "__salt",
-            F.pmod(F.xxhash64(F.col("item")), F.lit(_MG_TRIM_SALTS))
-            .cast("int"),
-        )
-        .groupBy("__gk", "grp", "shard", "__salt")
-        .agg(
-            F.slice(F.array_sort(F.collect_list(-F.col("c"))), 1, kp1)
-            .alias("tops"),
-            F.sum("c").cast("long").alias("__s"),
-        )
-        .persist()
-    )
-    med_rel = (
-        phase1.select("__gk", "shard", F.explode("tops").alias("nc"))
-        .groupBy("__gk", "shard")
-        .agg(F.array_sort(F.collect_list("nc")).alias("tops"))
-        .filter(F.size("tops") >= kp1)
-        .select(
-            "__gk", "shard",
-            (-F.element_at("tops", kp1)).cast("long").alias("__med"),
-        )
-    )
-    n_rel = phase1.groupBy("__gk", "grp", "shard").agg(
-        F.sum("__s").cast("long").alias("n_shard"))
-    trimmed = (
-        cnt.join(med_rel, ["__gk", "shard"], "left")
-        .select(
-            "__gk", "shard", "item",
-            (F.col("c") - F.coalesce(F.col("__med"), F.lit(0)))
-            .cast("long").alias("cnt"),
-        )
-        .filter(F.col("cnt") > 0)
-    )
-    summary = trimmed.join(n_rel, ["__gk", "shard"], "right").select(
-        "grp", "shard", "item", "cnt", "n_shard").persist()
-    summary.count()
-    phase1.unpersist()
-    cnt.unpersist()
-    return summary
-
-
-def mg_merge_by_group(*summaries: DataFrame, k: int = 100) -> DataFrame:
-    """Combine :func:`mg_summary_by_group` relations from corpus
-    SLICES into per-group summaries of the union without re-reading
-    rows — :func:`mg_merge`'s arithmetic with grp carried through
-    every key: per-(grp, shard, item) counter ADD over the bounded
-    tagged union, ONE trim per (grp, shard) (the same windowless
-    two-phase median), n_shard accounting summed per input via the
-    __src tag, NULL-item accounting rows preserved so all-trimmed
-    (grp, shard) cells keep their volume. Groups missing from one
-    slice pass through. Same per-group guarantees as mg_merge's
-    global ones; same k/basis discipline.
-
-    Cache lifetime (the mg_summary discipline): the tagged union of
-    the inputs stays persisted — bounded at ≤ Σ inputs' rows (each
-    ≤ groups·shards·(k+1)) — because the RETURNED plan is lazy and
-    reads it from several sub-relations. Unpersisting the consumed
-    input summaries cannot release this internal relation: long-lived
-    sessions merging many slices should materialize the result, then
-    ``release_caches(result)``."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if not summaries:
-        raise ValueError("mg_merge_by_group needs at least one input")
-    u = summaries[0].select(
-        "grp", "shard", "item", "cnt", "n_shard", F.lit(0).alias("__src"))
-    for i, s in enumerate(summaries[1:], start=1):
-        u = u.unionByName(s.select(
-            "grp", "shard", "item", "cnt", "n_shard",
-            F.lit(i).alias("__src")))
-    # bounded: ≤ inputs·(k+1) rows per (grp, shard); __gk for the
-    # NULL-group-safe joins (see _grp_key)
-    u, _own = _persist_internal(
-        u.withColumn("__gk", _grp_key(F.col("grp"))))
-    merged = (
-        u.filter(F.col("item").isNotNull())
-        .groupBy("__gk", "shard", "item")
-        .agg(F.sum("cnt").cast("long").alias("c"))
-    )
-    n_rel = (
-        u.select("__gk", "grp", "shard", "n_shard", "__src").distinct()
-        .groupBy("__gk", "grp", "shard")
-        .agg(F.sum("n_shard").cast("long").alias("n_shard"))
-    )
-    kp1 = k + 1
-    part = (
-        merged.withColumn(
-            "__salt",
-            F.pmod(F.xxhash64(F.col("item")), F.lit(_MG_TRIM_SALTS))
-            .cast("int"),
-        )
-        .groupBy("__gk", "shard", "__salt")
-        .agg(
-            F.slice(F.array_sort(F.collect_list(-F.col("c"))), 1, kp1)
-            .alias("tops")
-        )
-    )
-    med_rel = (
-        part.select("__gk", "shard", F.explode("tops").alias("nc"))
-        .groupBy("__gk", "shard")
-        .agg(F.array_sort(F.collect_list("nc")).alias("tops"))
-        .filter(F.size("tops") >= kp1)
-        .select(
-            "__gk", "shard",
-            (-F.element_at("tops", kp1)).cast("long").alias("__med"),
-        )
-    )
-    trimmed = (
-        merged.join(med_rel, ["__gk", "shard"], "left")
-        .select(
-            "__gk", "shard", "item",
-            (F.col("c") - F.coalesce(F.col("__med"), F.lit(0)))
-            .cast("long").alias("cnt"),
-        )
-        .filter(F.col("cnt") > 0)
-    )
-    return _attach_caches(
-        trimmed.join(n_rel, ["__gk", "shard"], "right").select(
-            "grp", "shard", "item", "cnt", "n_shard"),
-        _own,
-    )
-
-
-def mg_heavy_hitters_by_group(
-    summary: DataFrame, phi: float, k: int
-) -> DataFrame:
-    """φ-heavy-hitter QUERY per group over an
-    :func:`mg_summary_by_group` relation — :func:`mg_heavy_hitters`'
-    bounds with every aggregate scoped to the group: N becomes each
-    GROUP's total volume (Σ its shards' n_shard, exact via the
-    accounting rows), slack is per (grp, shard), and the φ·N_grp
-    thresholds ask "heavy within its group" — hot items per domain,
-    not hot globally. Same completeness precondition per group
-    (φ·N_grp > n_{grp,shard}/(k+1)); pass the SAME k the summaries
-    were built/merged with. Summary-sized arithmetic only; no forced
-    broadcasts (groups-scaled sides). Returns (grp, item, cnt_lower,
-    cnt_upper, certain) ordered per group.
-
-    Cache lifetime (the mg_summary discipline): the keyed input
-    summary stays persisted — bounded, ≤ groups·shards·(k+1) rows —
-    because the RETURNED plan is lazy and reads it for totals, slack
-    AND the score join. Unpersisting the input summary cannot release
-    this keyed derivation: long-lived sessions issuing many queries
-    should materialize the result, then ``release_caches(result)``."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if not (0.0 < phi <= 1.0):
-        raise ValueError(f"phi must be in (0, 1], got {phi}")
-    # __gk: NULL-group-safe join key (see _grp_key)
-    summary, _own = _persist_internal(
-        summary.withColumn("__gk", _grp_key(F.col("grp"))))
-    totals = summary.select("__gk", "shard", "n_shard").distinct()
-    n_grp = totals.groupBy("__gk").agg(
-        F.sum("n_shard").cast("long").alias("n"))
-    slack = (
-        summary.groupBy("__gk", "shard")
-        .agg(
-            F.floor(
-                (F.max("n_shard") - F.coalesce(F.sum("cnt"), F.lit(0)))
-                / F.lit(k + 1)
-            ).cast("long").alias("__slack")
-        )
-    )
-    items = summary.filter(F.col("item").isNotNull())
-    scored = (
-        items.join(slack, ["__gk", "shard"])
-        .join(n_grp, "__gk")
-        .select(
-            "grp", "item",
-            F.col("cnt").alias("cnt_lower"),
-            (F.col("cnt") + F.col("__slack")).alias("cnt_upper"),
-            (F.col("cnt").cast("double") >= F.lit(phi) * F.col("n"))
-            .alias("certain"),
-            (F.col("cnt") + F.col("__slack")).cast("double").alias("__up"),
-            (F.lit(phi) * F.col("n")).alias("__thr"),
-        )
-    )
-    out = (
-        scored.filter(F.col("__up") >= F.col("__thr"))
-        .select("grp", "item", "cnt_lower", "cnt_upper", "certain")
-        .orderBy("grp", F.desc("cnt_lower"), "item")
-    )
-    return _attach_caches(out, _own)
+# ------------------------------------------------------------------- Count-Min
 
 
 def _cms_base_hash(col, hash_basis: str):
@@ -1011,12 +857,12 @@ def _cms_base_hash(col, hash_basis: str):
     raise ValueError(f"unknown hash_basis {hash_basis!r}")
 
 
-def _cms_cell_structs(xcol, depth: int, width: int, seed: int):
-    """The depth (r, b) cell coordinates of one hashed value: the
-    repo's arithmetic Knuth family ((x mod P)·MULT + seed + r·r_mult)
+def _cms_cell_rows(xcol, depth: int, width: int, seed: int):
+    """The depth (r, b) cells of one hashed value, exploded to one
+    ``rb`` struct row each: the repo's arithmetic Knuth family ((x mod P)·MULT + seed + r·r_mult)
     mod P mod width with P = 1e9+7 — every factor < 2^31 so the
     product stays inside int64 in Spark AND DuckDB."""
-    return [
+    return F.explode(F.array(*[
         F.struct(
             F.lit(r).alias("r"),
             (
@@ -1030,7 +876,73 @@ def _cms_cell_structs(xcol, depth: int, width: int, seed: int):
             ).cast("int").alias("b"),
         )
         for r in range(depth)
-    ]
+    ])).alias("rb")
+
+
+def _cms_build(df, group_col, value_col, depth, width, seed, hash_basis):
+    """The CMS cells: one map-side explode of depth cells per row +
+    ONE partial-agg groupBy over (key, r, b)."""
+    if depth < 1 or width < 1:
+        raise ValueError(f"depth/width must be >= 1, got {depth}/{width}")
+    keys = [] if group_col is None else ["grp"]
+    v = _cms_base_hash(F.col(value_col), hash_basis)
+    src = df.filter(F.col(value_col).isNotNull()).select(
+        *_grp_cols(group_col), v.alias("__x"))
+    cells = src.select(
+        *keys, _cms_cell_rows(F.col("__x"), depth, width, seed))
+    return cells.groupBy(
+        *keys, F.col("rb.r").alias("r"), F.col("rb.b").alias("b")
+    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
+
+
+def _probe_values(sketch: DataFrame, values) -> DataFrame:
+    """The probe relation (item): a Python list inlines as a literal
+    relation; a DataFrame's FIRST column is deduplicated with NULL
+    probes dropped (probe sets too large to ship as literals)."""
+    if isinstance(values, DataFrame):
+        # positional toDF rename, not F.col/df[name]: a first column
+        # whose name contains a dot would otherwise resolve as a
+        # struct-field path and fail analysis (r14 review; both
+        # accessors dot-parse in Spark 4)
+        vals = (
+            values.toDF(*[f"_c{i}" for i in range(len(values.columns))])
+            .select(F.col("_c0").cast("string").alias("item"))
+            .filter(F.col("item").isNotNull())
+            .dropDuplicates(["item"])
+        )
+        # same loud failure as the literal path: an upstream probe
+        # relation that came up empty (or all-NULL) must not return a
+        # silently empty answer — the one eager action here is a
+        # limit-1 probe of a relation the caller sized to be a probe
+        # set, not a corpus
+        if vals.isEmpty():
+            raise ValueError("values must be non-empty")
+        return vals
+    if not values:
+        raise ValueError("values must be non-empty")
+    return sketch.sparkSession.createDataFrame(
+        [(v,) for v in values], ["item"])
+
+
+def _cms_query(sketch, values, depth, width, seed, hash_basis, keys):
+    """The CMS query: every probe value against every key's depth
+    cells, min over them (absent cell = 0)."""
+    probes = _probe_values(sketch, values)
+    if keys:  # every group of the sketch × every probe value
+        probes = sketch.select(_grp_key(F.col("grp")).alias("__gk"),
+                               "grp").distinct().crossJoin(probes)
+        sketch = sketch.select(
+            _grp_key(F.col("grp")).alias("__gk"), "r", "b", "c")
+    x = _cms_base_hash(F.col("item"), hash_basis)
+    probes = probes.select(
+        *keys, "item", _cms_cell_rows(x, depth, width, seed)
+    ).select(*keys, "item", F.col("rb.r").alias("r"),
+             F.col("rb.b").alias("b"))
+    joined = probes.join(sketch, [*keys[:1], "r", "b"], "left").select(
+        *keys, "item", F.coalesce(F.col("c"), F.lit(0)).alias("c"))
+    return joined.groupBy(*keys, "item").agg(
+        F.min("c").cast("long").alias("est")
+    ).select(*keys[1:], "item", "est")
 
 
 def cms_build(
@@ -1056,18 +968,7 @@ def cms_build(
     base hash for the contract row (production default: xxhash64).
     NULLs are excluded (not an item).
     """
-    if depth < 1 or width < 1:
-        raise ValueError(f"depth/width must be >= 1, got {depth}/{width}")
-    v = _cms_base_hash(F.col(value_col), hash_basis)
-    src = df.filter(F.col(value_col).isNotNull()).select(v.alias("__x"))
-    cells = src.select(
-        F.explode(
-            F.array(*_cms_cell_structs(F.col("__x"), depth, width, seed))
-        ).alias("rb")
-    )
-    return cells.groupBy(
-        F.col("rb.r").alias("r"), F.col("rb.b").alias("b")
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
+    return _cms_build(df, None, value_col, depth, width, seed, hash_basis)
 
 
 def cms_merge(*sketches: DataFrame) -> DataFrame:
@@ -1077,12 +978,8 @@ def cms_merge(*sketches: DataFrame) -> DataFrame:
     register max this is even linear: deletions via negative slices
     work too). Property-pinned: estimates from merge(A, B) equal
     estimates from build(A ++ B) bit-for-bit."""
-    if not sketches:
-        raise ValueError("cms_merge needs at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("r", "b").agg(F.sum("c").cast("long").alias("c"))
+    return _sum_cells(sketches, ["r", "b"],
+                      "cms_merge needs at least one sketch")
 
 
 def cms_query(
@@ -1099,24 +996,7 @@ def cms_query(
     probability 1 − (1/2)^depth for width = ⌈e/ε⌉ (property-tested:
     never under, overestimate bounded on a planted stream). The query
     relation is |values|·depth rows — broadcast-sized."""
-    if not values:
-        raise ValueError("values must be non-empty")
-    vals = sketch.sparkSession.createDataFrame(
-        [(v,) for v in values], ["item"]
-    )
-    x = _cms_base_hash(F.col("item"), hash_basis)
-    probes = vals.select(
-        "item",
-        F.explode(
-            F.array(*_cms_cell_structs(x, depth, width, seed))
-        ).alias("rb"),
-    ).select("item", F.col("rb.r").alias("r"), F.col("rb.b").alias("b"))
-    joined = probes.join(sketch, ["r", "b"], "left").select(
-        "item", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
-    return joined.groupBy("item").agg(
-        F.min("c").cast("long").alias("est")
-    )
+    return _cms_query(sketch, values, depth, width, seed, hash_basis, [])
 
 
 def cms_build_by_group(
@@ -1128,47 +1008,18 @@ def cms_build_by_group(
     seed: int = 37,
     hash_basis: str = "xxhash64",
 ) -> DataFrame:
-    """Per-GROUP Count-Min sketch: (grp, r, b, c) cells — "how often
-    did X appear WITHIN group Y" as a stored, mergeable relation,
-    completing the per-group sketch matrix (KMV distincts, DDS
-    quantiles, MG tops, now CMS point frequencies). Same build shape
-    as :func:`cms_build` (one map-side explode of depth cells + ONE
-    partial-agg groupBy, no join, no window) with grp in the
-    aggregation key; each group's cells ARE the cms_build of that
-    group's values with grp attached (row-for-row law,
-    property-tested), so per-group state is bounded at
-    ≤ depth·width cells per group regardless of the group's
-    cardinality. NULL values excluded (not an item); NULL GROUPS
-    kept (SQL GROUP BY), like the other per-group builds."""
-    if depth < 1 or width < 1:
-        raise ValueError(f"depth/width must be >= 1, got {depth}/{width}")
-    v = _cms_base_hash(F.col(value_col), hash_basis)
-    src = df.filter(F.col(value_col).isNotNull()).select(
-        F.col(group_col).cast("string").alias("grp"), v.alias("__x"))
-    cells = src.select(
-        "grp",
-        F.explode(
-            F.array(*_cms_cell_structs(F.col("__x"), depth, width, seed))
-        ).alias("rb"),
-    )
-    return cells.groupBy(
-        "grp", F.col("rb.r").alias("r"), F.col("rb.b").alias("b")
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
+    """Per-GROUP :func:`cms_build`: (grp, r, b, c) cells, each group's
+    cells ARE the cms_build of that group's values (row-for-row law,
+    property-tested). NULL GROUPS are kept (SQL GROUP BY)."""
+    return _cms_build(df, group_col, value_col, depth, width, seed,
+                      hash_basis)
 
 
 def cms_merge_by_group(*sketches: DataFrame) -> DataFrame:
-    """Merge :func:`cms_build_by_group` relations built with the SAME
-    (depth, width, seed): element-wise cell sum per (grp, r, b) —
-    exactly the per-group sketch of the concatenated multisets
-    (linear counters, deletions via negative slices work too).
-    Groups missing from one slice pass through."""
-    if not sketches:
-        raise ValueError("cms_merge_by_group needs at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("grp", "r", "b").agg(
-        F.sum("c").cast("long").alias("c"))
+    """Per-GROUP :func:`cms_merge`: cell sum per (grp, r, b); groups
+    missing from one slice pass through."""
+    return _sum_cells(sketches, ["grp", "r", "b"],
+                      "cms_merge_by_group needs at least one sketch")
 
 
 def cms_query_by_group(
@@ -1179,66 +1030,17 @@ def cms_query_by_group(
     seed: int = 37,
     hash_basis: str = "xxhash64",
 ) -> DataFrame:
-    """Point-frequency estimates PER GROUP from a
-    :func:`cms_build_by_group` relation: every probe value is
-    estimated against EVERY group in the sketch (min over its depth
-    cells; absent cell = 0) — "how often does token X appear per
-    domain" from the stored cells alone. The probe relation is
-    groups·|values|·depth rows (bounded; the group list comes from
-    one distinct over the sketch) and the cell lookup is an equi-join
-    on the injective NULL-safe group key + (r, b) — no forced
-    broadcast (groups-scaled sides, the per-group family's standing
-    call). Same ≥-true / ≤ true + εN_grp guarantee per group, with
-    N_grp the GROUP's volume. Returns (grp, item, est).
+    """Per-GROUP :func:`cms_query`: every probe value is estimated
+    against EVERY group in the sketch; returns (grp, item, est). NULL
+    GROUPS are kept (the cell lookup joins on the NULL-safe group
+    key); nothing is force-broadcast. ``values`` may also be a
+    DataFrame whose FIRST column holds the probe items (deduplicated,
+    NULL probes dropped — property-tested bit-equal to the list
+    path)."""
+    return _cms_query(sketch, values, depth, width, seed, hash_basis, _GK)
 
-    ``values`` is either a Python list (small probe sets inline as a
-    literal relation) or a DataFrame whose FIRST column holds the
-    probe items (probe sets too large to ship as literals — e.g. a
-    stored vocabulary or a top-terms relation; VERDICT r13 #5,
-    mirroring vocab_coverage's two paths). The DataFrame path
-    deduplicates and drops NULL probes, then runs the IDENTICAL cell
-    arithmetic — the two paths are property-tested bit-equal."""
-    if isinstance(values, DataFrame):
-        # positional toDF rename, not F.col/df[name]: a first column
-        # whose name contains a dot would otherwise resolve as a
-        # struct-field path and fail analysis (r14 review; both
-        # accessors dot-parse in Spark 4)
-        vals = (
-            values.toDF(*[f"_c{i}" for i in range(len(values.columns))])
-            .select(F.col("_c0").cast("string").alias("item"))
-            .filter(F.col("item").isNotNull())
-            .dropDuplicates(["item"])
-        )
-        # same loud failure as the literal path: an upstream probe
-        # relation that came up empty (or all-NULL) must not return a
-        # silently empty answer — the one eager action here is a
-        # limit-1 probe of a relation the caller sized to be a probe
-        # set, not a corpus
-        if vals.isEmpty():
-            raise ValueError("values must be non-empty")
-    else:
-        if not values:
-            raise ValueError("values must be non-empty")
-        vals = sketch.sparkSession.createDataFrame(
-            [(v,) for v in values], ["item"])
-    groups = sketch.select(
-        _grp_key(F.col("grp")).alias("__gk"), "grp").distinct()
-    x = _cms_base_hash(F.col("item"), hash_basis)
-    probes = groups.crossJoin(vals).select(
-        "__gk", "grp", "item",
-        F.explode(
-            F.array(*_cms_cell_structs(x, depth, width, seed))
-        ).alias("rb"),
-    ).select("__gk", "grp", "item",
-             F.col("rb.r").alias("r"), F.col("rb.b").alias("b"))
-    keyed = sketch.select(
-        _grp_key(F.col("grp")).alias("__gk"), "r", "b", "c")
-    joined = probes.join(keyed, ["__gk", "r", "b"], "left").select(
-        "__gk", "grp", "item",
-        F.coalesce(F.col("c"), F.lit(0)).alias("c"))
-    return joined.groupBy("__gk", "grp", "item").agg(
-        F.min("c").cast("long").alias("est")
-    ).select("grp", "item", "est")
+
+# -------------------------------------------------------------------- DDSketch
 
 
 def _dds_cells(x, m: int):
@@ -1262,6 +1064,103 @@ def _dds_cells(x, m: int):
     ).cast("long")
     j = F.floor((x / F.pow(F.lit(2.0), b) - F.lit(1.0)) * F.lit(float(m)))
     return b, j.cast("long")
+
+
+def _dds_build(df, group_col, value_col, m):
+    """The DDS cells: the finite-value gate, the (store, b, j)
+    projection and ONE partial-agg groupBy over (key, store, b, j)."""
+    _check_m(m)
+    x = F.col(value_col).cast("double")
+    ax = F.abs(x)
+    b, j = _dds_cells(ax, m)
+    finite = (
+        x.isNotNull() & ~F.isnan(x)
+        & (ax != F.lit(float("inf")))
+    )
+    src = df.filter(finite).select(
+        *_grp_cols(group_col),
+        F.when(x > 0, F.lit(1)).when(x < 0, F.lit(-1)).otherwise(F.lit(0))
+        .cast("int").alias("store"),
+        F.when(x == 0, F.lit(0)).otherwise(b).cast("long").alias("b"),
+        F.when(x == 0, F.lit(0)).otherwise(j).cast("long").alias("j"),
+    )
+    keys = [] if group_col is None else ["grp"]
+    return src.groupBy(*keys, "store", "b", "j").agg(
+        F.count(F.lit(1)).cast("long").alias("c")
+    )
+
+
+def _dds_quantile(sketch, qs, m, keys):
+    """The DDS query: per key the value-ordered cumulative bucket walk
+    and the rank-⌊q·(n−1)⌋+1 bucket pick, answered with the bucket
+    midpoint."""
+    _check_m(m)
+    if not qs:
+        raise ValueError("qs must be non-empty")
+    if any(not (0.0 <= q <= 1.0) for q in qs):
+        raise ValueError(f"quantiles must be in [0, 1], got {qs}")
+    from pyspark.sql.window import Window
+
+    jk, carried = keys[:1], keys[1:]
+    # consumed by THREE subtrees (cumulative walk, totals, rank
+    # targets) — bounded rows, the family's persist rule; an
+    # already-persisted input is reused and nothing is attached (see
+    # _persist_internal)
+    sketch, _own = _persist_internal(_with_gk(
+        sketch.select(*carried, "store", "b", "j", "c"), keys))
+    ordered = sketch.select(
+        *jk, "store", "b", "j", "c",
+        F.when(F.col("store") == -1, -F.col("b")).otherwise(F.col("b"))
+        .alias("__kb"),
+        F.when(F.col("store") == -1, -F.col("j")).otherwise(F.col("j"))
+        .alias("__kj"),
+    )
+    w = (
+        Window.partitionBy(*jk).orderBy("store", "__kb", "__kj")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = ordered.select(
+        *[F.col(c).alias("__cg") for c in jk], "store", "b", "j", "c",
+        F.sum("c").over(w).alias("__cum"),
+    )
+    # unkeyed, an EMPTY sketch still aggregates to one row: (q, NULL,
+    # 0), a stable row shape; a keyed empty group has no row at all
+    tot = F.sum("c") if keys else F.coalesce(F.sum("c"), F.lit(0))
+    n_rel = sketch.groupBy(*keys).agg(tot.cast("long").alias("n"))
+    qrel = sketch.sparkSession.createDataFrame(
+        [(float(q),) for q in qs], "q: double"
+    )
+    # broadcast whichever side is bounded: the 1-row total unkeyed,
+    # the |qs|-row literal relation against groups-scaled totals
+    targets = (n_rel.crossJoin(F.broadcast(qrel)) if keys
+               else qrel.crossJoin(F.broadcast(n_rel))).select(
+        *keys, "q", "n",
+        (F.floor(F.col("q") * (F.col("n") - 1)) + 1).alias("__tgt"),
+    )
+    est = (
+        F.when(F.col("store") == 0, F.lit(0.0))
+        .otherwise(
+            F.col("store")
+            * F.pow(F.lit(2.0), F.col("b"))
+            * (F.lit(1.0) + (F.col("j") + F.lit(0.5)) / F.lit(float(m)))
+        )
+    )
+    hit = targets.join(
+        _small(cum, keys),
+        functools.reduce(operator.and_, [
+            *[F.col(c) == F.col("__cg") for c in jk],
+            F.col("__cum") >= F.col("__tgt"),
+            F.col("__cum") - F.col("c") < F.col("__tgt"),
+        ]),
+        "left",
+    )
+    return _attach_caches(
+        hit.select(
+            *carried, "q", F.round(est, 6).alias("est"),
+            F.col("n").cast("long").alias("n"),
+        ).orderBy(*carried, "q"),
+        _own,
+    )
 
 
 def dds_build(df: DataFrame, value_col: str, m: int = 64) -> DataFrame:
@@ -1288,24 +1187,7 @@ def dds_build(df: DataFrame, value_col: str, m: int = 64) -> DataFrame:
     meaningful quantile rank, and a lake column with sensor glitches
     must not corrupt the summary (test-pinned). m must be a power of
     two — that is what makes the sub-bucket arithmetic exact."""
-    if m < 1 or (m & (m - 1)) != 0:
-        raise ValueError(f"m must be a power of two >= 1, got {m}")
-    x = F.col(value_col).cast("double")
-    ax = F.abs(x)
-    b, j = _dds_cells(ax, m)
-    finite = (
-        x.isNotNull() & ~F.isnan(x)
-        & (ax != F.lit(float("inf")))
-    )
-    src = df.filter(finite).select(
-        F.when(x > 0, F.lit(1)).when(x < 0, F.lit(-1)).otherwise(F.lit(0))
-        .cast("int").alias("store"),
-        F.when(x == 0, F.lit(0)).otherwise(b).cast("long").alias("b"),
-        F.when(x == 0, F.lit(0)).otherwise(j).cast("long").alias("j"),
-    )
-    return src.groupBy("store", "b", "j").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
+    return _dds_build(df, None, value_col, m)
 
 
 def dds_merge(*sketches: DataFrame) -> DataFrame:
@@ -1315,14 +1197,8 @@ def dds_merge(*sketches: DataFrame) -> DataFrame:
     the merged sketch is bit-for-bit the single-pass build;
     property-tested). The error bound never degrades under merging —
     the 'fully mergeable' property of the paper's title."""
-    if not sketches:
-        raise ValueError("dds_merge needs at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("store", "b", "j").agg(
-        F.sum("c").cast("long").alias("c")
-    )
+    return _sum_cells(sketches, ["store", "b", "j"],
+                      "dds_merge needs at least one sketch")
 
 
 def dds_quantile(
@@ -1341,211 +1217,51 @@ def dds_quantile(
     it is persisted here — bounded rows, and without it an IN-LINEAGE
     sketch re-derives its corpus aggregation once per subtree (the
     un-persisted static plan carried FOUR corpus scans, plan-pinned
-    down to one; stored/parquet sketches only re-read kilobytes, but
-    the persist is still strictly cheaper). Returns (q, est, n),
-    ordered by q; an EMPTY sketch answers (q, NULL, 0) — no data has
-    no quantiles, but the row shape stays stable (test-pinned).
+    down to one). Returns (q, est, n), ordered by q; an EMPTY sketch
+    answers (q, NULL, 0) — no data has no quantiles, but the row
+    shape stays stable (test-pinned).
 
     Cache lifetime: the bounded sketch is persisted for its three
     subtrees and the returned lazy plan reads it; after
     materializing, ``release_caches(result)`` frees it — unpersisting
-    the input sketch cannot (non-cascading), matching the by-group
-    twin's discipline. When the caller already cached the sketch,
-    that cache is reused and nothing is attached —
+    the input sketch cannot (non-cascading). When the caller already
+    cached the sketch, that cache is reused and nothing is attached —
     release_caches(result) returns 0 and never clobbers a
     caller-owned cache."""
-    if m < 1 or (m & (m - 1)) != 0:
-        raise ValueError(f"m must be a power of two >= 1, got {m}")
-    if not qs:
-        raise ValueError("qs must be non-empty")
-    if any(not (0.0 <= q <= 1.0) for q in qs):
-        raise ValueError(f"quantiles must be in [0, 1], got {qs}")
-    from pyspark.sql.window import Window
-
-    # an already-persisted input must not become OUR releasable cache:
-    # reuse the caller's cache and attach nothing (see _persist_internal)
-    sketch, _own = _persist_internal(sketch.select("store", "b", "j", "c"))
-    ordered = sketch.select(
-        "store", "b", "j", "c",
-        F.when(F.col("store") == -1, -F.col("b")).otherwise(F.col("b"))
-        .alias("__kb"),
-        F.when(F.col("store") == -1, -F.col("j")).otherwise(F.col("j"))
-        .alias("__kj"),
-    )
-    w = (
-        Window.orderBy("store", "__kb", "__kj")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = ordered.select(
-        "store", "b", "j", "c", F.sum("c").over(w).alias("__cum")
-    )
-    n_total = sketch.agg(
-        F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n"))
-    qrel = sketch.sparkSession.createDataFrame(
-        [(float(q),) for q in qs], "q: double"
-    )
-    targets = qrel.crossJoin(F.broadcast(n_total)).select(
-        "q", "n",
-        (F.floor(F.col("q") * (F.col("n") - 1)) + 1).alias("__tgt"),
-    )
-    est = (
-        F.when(F.col("store") == 0, F.lit(0.0))
-        .otherwise(
-            F.col("store")
-            * F.pow(F.lit(2.0), F.col("b"))
-            * (F.lit(1.0) + (F.col("j") + F.lit(0.5)) / F.lit(float(m)))
-        )
-    )
-    hit = targets.join(
-        F.broadcast(cum),
-        (F.col("__cum") >= F.col("__tgt"))
-        & (F.col("__cum") - F.col("c") < F.col("__tgt")),
-        "left",
-    )
-    return _attach_caches(
-        hit.select(
-            "q", F.round(est, 6).alias("est"),
-            F.col("n").cast("long").alias("n")
-        ).orderBy("q"),
-        _own,
-    )
+    return _dds_quantile(sketch, qs, m, [])
 
 
 def dds_build_by_group(
     df: DataFrame, group_col: str, value_col: str, m: int = 64
 ) -> DataFrame:
-    """Per-GROUP DDSketch: (grp, store, b, j, c) bucket counters —
-    MERGEABLE per-group quantiles, which ``approx_percentile`` with a
-    GROUP BY cannot give you (its digests are per-query; these
-    relations are stored per ingest slice and merged with
-    ``dds_merge_by_group`` without re-reading rows — the per-group
-    member of the merge-not-rescan family, joining kmv_by_group).
-    Same build shape as :func:`dds_build` (ONE map-only projection +
-    ONE partial-agg groupBy, no join, no window), same
-    bit-deterministic binary-interpolated mapping, same NaN/±Inf drop
-    gate and relative-error bound ≤ 1/(2m) per group. Each group's
-    rows ARE the dds_build of that group's values with grp attached
-    (row-for-row law, property-tested). NULL values excluded; NULL
-    GROUPS kept (SQL GROUP BY), like kmv_by_group."""
-    if m < 1 or (m & (m - 1)) != 0:
-        raise ValueError(f"m must be a power of two >= 1, got {m}")
-    x = F.col(value_col).cast("double")
-    ax = F.abs(x)
-    b, j = _dds_cells(ax, m)
-    finite = (
-        x.isNotNull() & ~F.isnan(x)
-        & (ax != F.lit(float("inf")))
-    )
-    src = df.filter(finite).select(
-        F.col(group_col).cast("string").alias("grp"),
-        F.when(x > 0, F.lit(1)).when(x < 0, F.lit(-1)).otherwise(F.lit(0))
-        .cast("int").alias("store"),
-        F.when(x == 0, F.lit(0)).otherwise(b).cast("long").alias("b"),
-        F.when(x == 0, F.lit(0)).otherwise(j).cast("long").alias("j"),
-    )
-    return src.groupBy("grp", "store", "b", "j").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
+    """Per-GROUP :func:`dds_build`: (grp, store, b, j, c) bucket
+    counters, each group's rows ARE the dds_build of that group's
+    values (row-for-row law, property-tested) — MERGEABLE per-group
+    quantiles, which ``approx_percentile`` with a GROUP BY cannot
+    give. NULL GROUPS are kept (SQL GROUP BY)."""
+    return _dds_build(df, group_col, value_col, m)
 
 
 def dds_merge_by_group(*sketches: DataFrame) -> DataFrame:
-    """Merge :func:`dds_build_by_group` relations built with the SAME
-    m: element-wise bucket sum per (grp, store, b, j) — exactly the
-    per-group sketch of the concatenated multisets (linear counters,
-    the paper's fully-mergeable property, per group). Groups missing
-    from one slice pass through from the other."""
-    if not sketches:
-        raise ValueError("dds_merge_by_group needs at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("grp", "store", "b", "j").agg(
-        F.sum("c").cast("long").alias("c")
-    )
+    """Per-GROUP :func:`dds_merge`: bucket sum per (grp, store, b,
+    j); groups missing from one slice pass through."""
+    return _sum_cells(sketches, ["grp", "store", "b", "j"],
+                      "dds_merge_by_group needs at least one sketch")
 
 
 def dds_quantile_by_group(
     sketch: DataFrame, qs: "list[float]", m: int = 64
 ) -> DataFrame:
-    """Per-group quantile QUERY over a :func:`dds_build_by_group`
-    relation: dds_quantile's value-ordered cumulative walk and
-    rank-⌊q·(n−1)⌋+1 bucket pick, PARTITIONED BY GROUP. Every
-    relation here is sketch-sized — each group's walk covers
-    ≤ stores·binades·m rows (bounded by the value RANGE, never the
-    volume), and the targets⋈cum join carries the grp equi-key, so
-    unlike the global form nothing is force-broadcast: with many
-    groups both sides are groups-scaled and the equi-key hash join is
-    the scale-safe shape (AQE may still broadcast small ones).
-    Returns (grp, q, est, n) ordered; groups absent from the sketch
-    produce no rows (an all-NULL/empty group has no quantiles).
+    """Per-GROUP :func:`dds_quantile`: the walk is partitioned by
+    group; returns (grp, q, est, n) ordered. NULL GROUPS are kept (the
+    walk joins on the NULL-safe group key); groups absent from the
+    sketch produce no rows, where the global form answers an empty
+    sketch with (q, NULL, 0). Nothing is force-broadcast. Release the
+    keyed sketch cache with ``release_caches(result)``."""
+    return _dds_quantile(sketch, qs, m, _GK)
 
-    Cache lifetime (the mg_summary discipline): the keyed input
-    sketch stays persisted — bounded at ≤ groups·stores·binades·m
-    rows — because the RETURNED plan is lazy and reads it for the
-    walk AND the totals. Unpersisting the input sketch cannot release
-    this keyed derivation: long-lived sessions issuing many quantile
-    queries should materialize the result, then
-    ``release_caches(result)``."""
-    if m < 1 or (m & (m - 1)) != 0:
-        raise ValueError(f"m must be a power of two >= 1, got {m}")
-    if not qs:
-        raise ValueError("qs must be non-empty")
-    if any(not (0.0 <= q <= 1.0) for q in qs):
-        raise ValueError(f"quantiles must be in [0, 1], got {qs}")
-    from pyspark.sql.window import Window
 
-    # consumed by the cumulative walk AND the per-group totals —
-    # bounded (groups·stores·binades·m rows), the family's persist
-    # rule. __gk: NULL-group-safe join key (see _grp_key) — a plain
-    # grp equi-join would silently drop the NULL group's quantiles.
-    sketch, _own = _persist_internal(
-        sketch.withColumn("__gk", _grp_key(F.col("grp"))))
-    ordered = sketch.select(
-        "__gk", "store", "b", "j", "c",
-        F.when(F.col("store") == -1, -F.col("b")).otherwise(F.col("b"))
-        .alias("__kb"),
-        F.when(F.col("store") == -1, -F.col("j")).otherwise(F.col("j"))
-        .alias("__kj"),
-    )
-    w = (
-        Window.partitionBy("__gk").orderBy("store", "__kb", "__kj")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = ordered.select(
-        F.col("__gk").alias("__cg"), "store", "b", "j", "c",
-        F.sum("c").over(w).alias("__cum"),
-    )
-    n_total = sketch.groupBy("__gk", "grp").agg(
-        F.sum("c").cast("long").alias("n"))
-    qrel = sketch.sparkSession.createDataFrame(
-        [(float(q),) for q in qs], "q: double"
-    )
-    targets = n_total.crossJoin(F.broadcast(qrel)).select(
-        "__gk", "grp", "q", "n",
-        (F.floor(F.col("q") * (F.col("n") - 1)) + 1).alias("__tgt"),
-    )
-    est = (
-        F.when(F.col("store") == 0, F.lit(0.0))
-        .otherwise(
-            F.col("store")
-            * F.pow(F.lit(2.0), F.col("b"))
-            * (F.lit(1.0) + (F.col("j") + F.lit(0.5)) / F.lit(float(m)))
-        )
-    )
-    hit = targets.join(
-        cum,
-        (F.col("__gk") == F.col("__cg"))
-        & (F.col("__cum") >= F.col("__tgt"))
-        & (F.col("__cum") - F.col("c") < F.col("__tgt")),
-        "left",
-    )
-    return _attach_caches(
-        hit.select(
-            "grp", "q", F.round(est, 6).alias("est"),
-            F.col("n").cast("long").alias("n"),
-        ).orderBy("grp", "q"),
-        _own,
-    )
+# ------------------------------------------------------------ KMV / bottom-k
 
 
 def _kmv_unit(hcol, hash_basis: str):
@@ -1558,6 +1274,118 @@ def _kmv_unit(hcol, hash_basis: str):
     if hash_basis == "xxhash64":
         return hcol.cast("double") / F.lit(1.8446744073709552e19) + F.lit(0.5)
     raise ValueError(f"unknown hash_basis {hash_basis!r}")
+
+
+def _kmv_bottom_k(rel: DataFrame, k: int, keys) -> DataFrame:
+    """The KMV cells and merge law at once: per key, the k smallest
+    distinct hashes of an (*keys, h, item) relation, hash collisions
+    keeping the smallest item (a pure function of the value set).
+
+    Unkeyed: orderBy(h).limit(k), which Spark compiles to
+    TakeOrderedAndProject (per-partition bottom-k, k-sized merge) —
+    NOT a global sort or window. Keyed: the salted two-phase shape
+    the MG trim uses (_mg_tops, flipped to ascending): each (key,
+    salt) sub-group keeps its k smallest (h, item) structs in a
+    bounded aggregation — any of a key's true bottom-k is necessarily
+    inside its own sub-group's bottom-k — and the ≤ salts·k survivors
+    per key merge in one tiny aggregation. No Window over the
+    distinct relation (a per-group row_number sorts whole groups
+    through single tasks), no per-group TakeOrdered jobs."""
+    rel = rel.groupBy(*keys, "h").agg(F.min("item").alias("item"))
+    if not keys:
+        return rel.orderBy("h").limit(k)
+    entry = F.struct(F.col("h").alias("h"), F.col("item").alias("item"))
+    part = (
+        rel.withColumn(
+            "__salt", F.pmod(F.col("h"), F.lit(_TOPK_SALTS)).cast("int")
+        )
+        .groupBy(*keys, "__salt")
+        .agg(F.slice(F.array_sort(F.collect_list(entry)), 1, k)
+             .alias("tops"))
+    )
+    return (
+        part.select(*keys, F.explode("tops").alias("t"))
+        .groupBy(*keys)
+        .agg(F.slice(F.array_sort(F.collect_list("t")), 1, k).alias("tops"))
+        .select(*keys, F.explode("tops").alias("t"))
+        .select(*keys, F.col("t.h").alias("h"), F.col("t.item").alias("item"))
+    )
+
+
+def _kmv_build(df, group_col, value_col, k, hash_basis):
+    _check_k(k, 2)
+    keys = [] if group_col is None else ["grp"]
+    src = df.select(
+        *_grp_cols(group_col), F.col(value_col).cast("string").alias("item")
+    ).filter(F.col("item").isNotNull())
+    return _kmv_bottom_k(src.select(
+        *keys, _cms_base_hash(F.col("item"), hash_basis).alias("h"), "item"
+    ), k, keys)
+
+
+def _kmv_sides(rel: DataFrame, keys, hash_basis: str, n: str, uk: str):
+    """Per key: the kept-hash count and the largest kept hash on the
+    unit interval — the two inputs of :func:`_kmv_est`."""
+    return rel.groupBy(*keys).agg(
+        F.count(F.lit(1)).cast("long").alias(n),
+        F.max(_kmv_unit(F.col("h"), hash_basis)).alias(uk),
+    )
+
+
+def _kmv_est(n: str, uk: str, k: int):
+    """The KMV distinct-value estimate: exact (the summary IS the
+    distinct set) below k kept hashes, else the Beyer et al. 2007
+    unbiased (k−1)/u_k, standard error ~1/√(k−2)."""
+    return F.when(F.col(n) < k, F.col(n).cast("double")).otherwise(
+        F.lit(float(k - 1)) / F.col(uk))
+
+
+def _kmv_ndv(summary, k, hash_basis, keys):
+    _check_k(k, 2)
+    return _kmv_sides(summary, keys, hash_basis, "n_kept", "__uk").select(
+        *keys, "n_kept",
+        F.round(_kmv_est("n_kept", "__uk", k), 4).alias("ndv_est"),
+    )
+
+
+def _kmv_overlap_cols(k: int) -> list:
+    """The Beyer et al. 2007 §5 set-operation estimators over one
+    (n_k, n_inter, __uk, __na, __uka, __nb, __ukb) row per pair:
+    union NDV from the union bottom-k K; ρ = |K ∩ A ∩ B| / |K|
+    estimates |A∩B| / |A∪B|; intersection NDV = ρ · D̂_union; both
+    containments D̂_inter / D̂_side, NULL when a side is empty. The
+    estimates stay un-rounded until the output so the SQL oracles
+    replay them bit-for-bit."""
+    eu = _kmv_est("n_k", "__uk", k)
+    ea = _kmv_est("__na", "__uka", k)
+    eb = _kmv_est("__nb", "__ukb", k)
+    rho = F.col("n_inter") / F.col("n_k")
+    ei = rho * eu
+    return [
+        "n_k", "n_inter",
+        F.round(eu, 4).alias("ndv_union"),
+        F.round(ei, 4).alias("ndv_inter"),
+        F.round(ea, 4).alias("ndv_a"),
+        F.round(eb, 4).alias("ndv_b"),
+        F.when(F.col("__na") > 0, F.round(ei / ea, 4))
+        .alias("containment_a_in_b"),
+        F.when(F.col("__nb") > 0, F.round(ei / eb, 4))
+        .alias("containment_b_in_a"),
+        F.round(rho, 4).alias("jaccard_est"),
+    ]
+
+
+def _kmv_pair(summary_a, summary_b, k):
+    """The two persisted ≤ k-row hash projections and K, the bottom-k
+    of their union. Each summary feeds the union AND a membership
+    probe, and the bottom-k TakeOrdered cannot be exchange-reused —
+    un-persisted, in-lineage summaries re-ran their corpus
+    distinct+bottom-k per consumer (executed-plan-verified)."""
+    _check_k(k, 2)
+    ha, _own_a = _persist_internal(summary_a.select("h"))
+    hb, _own_b = _persist_internal(summary_b.select("h"))
+    kk = ha.unionByName(hb).distinct().orderBy("h").limit(k)
+    return ha, hb, kk, _own_a + _own_b
 
 
 def kmv_summary(
@@ -1576,28 +1404,14 @@ def kmv_summary(
     one k-row relation per slice.
 
     Scale shape: one distinct-keyed partial-agg groupBy then
-    orderBy(h).limit(k) — Spark compiles the latter to
-    TakeOrderedAndProject (per-partition bottom-k, k-sized merge),
-    NOT a global sort or window; the full distinct relation never
-    funnels through one partition (plan-pinned). Hash collisions
-    keep the smallest item so the summary is a pure function of the
-    value set. NULLs excluded. ``hash_basis='md5'`` pins the
-    DuckDB-computable base hash (contract rows); production default
-    xxhash64. Returns (h, item), ≤ k rows."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    src = df.select(F.col(value_col).cast("string").alias("item")).filter(
-        F.col("item").isNotNull()
-    )
-    hashed = (
-        src.distinct()
-        .select(
-            _cms_base_hash(F.col("item"), hash_basis).alias("h"), "item"
-        )
-        .groupBy("h")
-        .agg(F.min("item").alias("item"))
-    )
-    return hashed.orderBy("h").limit(k)
+    orderBy(h).limit(k) — TakeOrderedAndProject, never a global sort
+    or window; the full distinct relation never funnels through one
+    partition (plan-pinned). Hash collisions keep the smallest item
+    so the summary is a pure function of the value set. NULLs
+    excluded. ``hash_basis='md5'`` pins the DuckDB-computable base
+    hash (contract rows); production default xxhash64. Returns (h,
+    item), ≤ k rows."""
+    return _kmv_build(df, None, value_col, k, hash_basis)
 
 
 def kmv_merge(*summaries: DataFrame, k: int = 256) -> DataFrame:
@@ -1609,17 +1423,9 @@ def kmv_merge(*summaries: DataFrame, k: int = 256) -> DataFrame:
     kmv_summary(A ∪ B) bit-for-bit (property-tested; overlapping
     slices are idempotent for the same reason — it is a SET union).
     Same k and hash basis as the inputs, or smaller k to tighten."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    if not summaries:
-        raise ValueError("kmv_merge needs at least one input")
-    out = summaries[0]
-    for s in summaries[1:]:
-        out = out.unionByName(s)
-    return (
-        out.groupBy("h").agg(F.min("item").alias("item"))
-        .orderBy("h").limit(k)
-    )
+    _check_k(k, 2)
+    return _kmv_bottom_k(
+        _union_all(summaries, "kmv_merge needs at least one input"), k, [])
 
 
 def kmv_ndv(
@@ -1631,20 +1437,7 @@ def kmv_ndv(
     where u_k is the k-th smallest hash mapped to the unit interval —
     standard error ~1/√(k−2). One k-row aggregate; returns a single
     row (n_kept, ndv_est)."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    agg = summary.agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.max(_kmv_unit(F.col("h"), hash_basis)).alias("__uk"),
-    )
-    return agg.select(
-        "n_kept",
-        F.round(
-            F.when(F.col("n_kept") < k, F.col("n_kept").cast("double"))
-            .otherwise(F.lit(float(k - 1)) / F.col("__uk")),
-            4,
-        ).alias("ndv_est"),
-    )
+    return _kmv_ndv(summary, k, hash_basis, [])
 
 
 def kmv_jaccard(
@@ -1659,15 +1452,7 @@ def kmv_jaccard(
     (THE way to compare column domains across 100 TB slices: ship
     two k-row summaries, not two scans). Returns one row (n_k,
     n_inter, jaccard_est)."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    # each ≤ k-row summary feeds the union AND a membership probe, and
-    # the bottom-k TakeOrdered cannot be exchange-reused — un-persisted,
-    # in-lineage summaries re-ran their corpus distinct+bottom-k per
-    # consumer (executed-plan-verified)
-    ha, _own_a = _persist_internal(summary_a.select("h"))
-    hb, _own_b = _persist_internal(summary_b.select("h"))
-    kk = ha.unionByName(hb).distinct().orderBy("h").limit(k)
+    ha, hb, kk, own = _kmv_pair(summary_a, summary_b, k)
     inter = (
         kk.join(F.broadcast(ha), "h", "left_semi")
         .join(F.broadcast(hb), "h", "left_semi")
@@ -1680,7 +1465,7 @@ def kmv_jaccard(
             F.round(F.col("n_inter") / F.col("n_k"), 4)
             .alias("jaccard_est"),
         ),
-        _own_a + _own_b,
+        own,
     )
 
 
@@ -1694,7 +1479,8 @@ def kmv_set_stats(
     2007 §5, "On synopses for distinct-value estimation under
     multiset operations"): union NDV, intersection NDV, per-side NDV
     and both containments |A∩B|/|A| and |A∩B|/|B| — from the two
-    k-row relations ALONE, no corpus access. The estimators:
+    k-row relations ALONE, no corpus access. The estimators
+    (_kmv_overlap_cols):
 
     - K = bottom-k of the summary union is itself the KMV summary of
       A ∪ B (closure), so union NDV is the standard (k−1)/u_k —
@@ -1714,23 +1500,12 @@ def kmv_set_stats(
     one row (n_k, n_inter, ndv_union, ndv_inter, ndv_a, ndv_b,
     containment_a_in_b, containment_b_in_a, jaccard_est).
 
-    Cache lifetime (the mg_summary discipline): both ≤ k-row input
-    projections stay persisted because the RETURNED plan is lazy and
-    reads each twice (union + flag join). ``input.unpersist()``
-    CANNOT release them (Dataset.unpersist is non-cascading and these
-    are derived projections): callers comparing MANY summary pairs in
-    a long-lived session should materialize the 1-row result, then
-    ``release_caches(result)`` — each entry is tiny but the count is
-    otherwise unbounded."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    # same persist rationale as kmv_jaccard: each summary feeds the
-    # union AND a membership flag join, and TakeOrdered subtrees
-    # don't exchange-reuse — in-lineage summaries would re-run their
-    # corpus distinct+bottom-k per consumer
-    ha, _own_a = _persist_internal(summary_a.select("h"))
-    hb, _own_b = _persist_internal(summary_b.select("h"))
-    kk = ha.unionByName(hb).distinct().orderBy("h").limit(k)
+    Cache lifetime: both ≤ k-row input projections stay persisted
+    because the RETURNED plan is lazy and reads each twice (union +
+    flag join); ``input.unpersist()`` CANNOT release them. Callers
+    comparing MANY summary pairs in a long-lived session should
+    materialize the 1-row result, then ``release_caches(result)``."""
+    ha, hb, kk, own = _kmv_pair(summary_a, summary_b, k)
     flagged = kk.join(
         F.broadcast(ha.select("h", F.lit(1).alias("__ina"))), "h", "left"
     ).join(F.broadcast(hb.select("h", F.lit(1).alias("__inb"))), "h", "left")
@@ -1742,42 +1517,10 @@ def kmv_set_stats(
         ).cast("long").alias("n_inter"),
         F.max(_kmv_unit(F.col("h"), hash_basis)).alias("__uk"),
     )
-    side_a = ha.agg(
-        F.count(F.lit(1)).cast("long").alias("__na"),
-        F.max(_kmv_unit(F.col("h"), hash_basis)).alias("__uka"),
-    )
-    side_b = hb.agg(
-        F.count(F.lit(1)).cast("long").alias("__nb"),
-        F.max(_kmv_unit(F.col("h"), hash_basis)).alias("__ukb"),
-    )
-    joined = stats.crossJoin(F.broadcast(side_a)).crossJoin(
-        F.broadcast(side_b))
-    km1 = F.lit(float(k - 1))
-    # raw (un-rounded) estimates: every derived column reuses the SAME
-    # expression shapes so the SQL oracle replays bit-for-bit
-    eu = F.when(F.col("n_k") < k, F.col("n_k").cast("double")).otherwise(
-        km1 / F.col("__uk"))
-    ea = F.when(F.col("__na") < k, F.col("__na").cast("double")).otherwise(
-        km1 / F.col("__uka"))
-    eb = F.when(F.col("__nb") < k, F.col("__nb").cast("double")).otherwise(
-        km1 / F.col("__ukb"))
-    rho = F.col("n_inter") / F.col("n_k")
-    ei = rho * eu
-    return _attach_caches(
-        joined.select(
-            "n_k", "n_inter",
-            F.round(eu, 4).alias("ndv_union"),
-            F.round(ei, 4).alias("ndv_inter"),
-            F.round(ea, 4).alias("ndv_a"),
-            F.round(eb, 4).alias("ndv_b"),
-            F.when(F.col("__na") > 0, F.round(ei / ea, 4))
-            .alias("containment_a_in_b"),
-            F.when(F.col("__nb") > 0, F.round(ei / eb, 4))
-            .alias("containment_b_in_a"),
-            F.round(rho, 4).alias("jaccard_est"),
-        ),
-        _own_a + _own_b,
-    )
+    joined = stats.crossJoin(
+        F.broadcast(_kmv_sides(ha, [], hash_basis, "__na", "__uka"))
+    ).crossJoin(F.broadcast(_kmv_sides(hb, [], hash_basis, "__nb", "__ukb")))
+    return _attach_caches(joined.select(*_kmv_overlap_cols(k)), own)
 
 
 def kmv_by_group(
@@ -1786,128 +1529,34 @@ def kmv_by_group(
     value_col: str,
     k: int = 256,
     hash_basis: str = "xxhash64",
-    n_salts: int = _MG_TRIM_SALTS,
 ) -> DataFrame:
-    """Per-GROUP KMV bottom-k summaries in ONE pass over the corpus —
-    the sketched form of "distinct X per Y" (users per domain, vocab
-    per source, orders per segment), the group-by companion to the
-    global :func:`kmv_summary`. Exact distinct-count-per-group
-    shuffles every (group, value) pair and holds each group's whole
-    value set; this keeps k rows per group, and each group's rows ARE
-    a kmv_summary of that group's values (same hash, same bottom-k),
-    so kmv_ndv arithmetic, kmv_merge across slices and kmv_set_stats
-    between two groups' summaries all apply unchanged.
-
-    Scale shape: one distinct-(group, hash) aggregation (map-side
-    partial combine), then the salted two-phase bottom-k the MG trim
-    uses (_mg_trim_relation's argument, flipped to ascending): each
-    (group, salt) sub-group keeps its k smallest (h, item) structs in
-    a bounded aggregation — any of a group's true bottom-k is
-    necessarily inside its own sub-group's bottom-k — and the
-    ≤ n_salts·k survivors per group merge in one tiny aggregation.
-    NO Window over the distinct relation (a row_number per group
-    sorts whole groups through single tasks — the r11 MG defect), NO
-    per-group TakeOrdered jobs (one job total, however many groups).
-    Phase-1 buffers hold ~group_distinct/n_salts entries; raise
-    ``n_salts`` for billion-distinct groups.
-
-    NULL values are excluded (kmv_summary's rule); NULL GROUPS are
-    KEPT as their own group (matching SQL GROUP BY). Hash collisions
-    keep the smallest item — each group's summary is a pure function
-    of its value set. Returns (grp, h, item), ≤ k rows per group."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    src = df.select(
-        F.col(group_col).cast("string").alias("grp"),
-        F.col(value_col).cast("string").alias("item"),
-    ).filter(F.col("item").isNotNull())
-    hashed = (
-        src.select(
-            "grp", _cms_base_hash(F.col("item"), hash_basis).alias("h"),
-            "item",
-        )
-        .groupBy("grp", "h")
-        .agg(F.min("item").alias("item"))
-    )
-    return _group_bottom_k(hashed, k, n_salts)
+    """Per-GROUP :func:`kmv_summary` in ONE pass over the corpus —
+    "distinct X per Y" at k rows per group; each group's rows ARE a
+    kmv_summary of that group's values, so kmv_ndv, kmv_merge and
+    kmv_set_stats apply unchanged. Returns (grp, h, item). NULL
+    GROUPS are kept (SQL GROUP BY); the bottom-k is the salted
+    two-phase aggregation instead of TakeOrdered (one job, however
+    many groups)."""
+    return _kmv_build(df, group_col, value_col, k, hash_basis)
 
 
-def _group_bottom_k(rel: DataFrame, k: int, n_salts: int) -> DataFrame:
-    """Per-group bottom-k of a (grp, h, item) relation with h distinct
-    within each group — the salted two-phase shape shared by
-    kmv_by_group (over the corpus-distinct relation) and
-    kmv_merge_by_group (over a summary union): bounded per-(grp,
-    salt) bottom-k lists, tiny per-group merge, never a Window or a
-    per-group job. Returns (grp, h, item), ≤ k rows per group."""
-    entry = F.struct(F.col("h").alias("h"), F.col("item").alias("item"))
-    part = (
-        rel.withColumn(
-            "__salt", F.pmod(F.col("h"), F.lit(n_salts)).cast("int")
-        )
-        .groupBy("grp", "__salt")
-        .agg(F.slice(F.array_sort(F.collect_list(entry)), 1, k)
-             .alias("tops"))
-    )
-    return (
-        part.select("grp", F.explode("tops").alias("t"))
-        .groupBy("grp")
-        .agg(F.slice(F.array_sort(F.collect_list("t")), 1, k).alias("tops"))
-        .select("grp", F.explode("tops").alias("t"))
-        .select("grp", F.col("t.h").alias("h"), F.col("t.item").alias("item"))
-    )
-
-
-def kmv_merge_by_group(
-    *summaries: DataFrame, k: int = 256, n_salts: int = _MG_TRIM_SALTS
-) -> DataFrame:
-    """Combine :func:`kmv_by_group` relations from corpus SLICES into
-    the per-group summary of the union WITHOUT touching any rows —
-    the per-group form of :func:`kmv_merge`, and the missing piece of
-    the per-group maintenance model ("k rows per group per slice,
-    merge forever"). Exact per group by the same bottom-k closure:
-    within a group, any of the k smallest distinct hashes of A ∪ B is
-    among the k smallest of whichever slice contains it, so
+def kmv_merge_by_group(*summaries: DataFrame, k: int = 256) -> DataFrame:
+    """Per-GROUP :func:`kmv_merge` of :func:`kmv_by_group` relations:
     merge(kmv_by_group(A), kmv_by_group(B)) == kmv_by_group(A ∪ B)
-    row-for-row (property-tested; overlapping slices idempotent —
-    SET union per group). Groups missing from one slice pass through
-    from the other. Inputs are ≤ groups·k rows each, so every step is
-    summary-sized. Same k and hash basis as the inputs, or smaller k
-    to tighten."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    if not summaries:
-        raise ValueError("kmv_merge_by_group needs at least one input")
-    out = summaries[0]
-    for s in summaries[1:]:
-        out = out.unionByName(s)
-    merged = out.groupBy("grp", "h").agg(F.min("item").alias("item"))
-    return _group_bottom_k(merged, k, n_salts)
+    row-for-row; groups missing from one slice pass through. NULL
+    GROUPS are kept; the bottom-k is the salted two-phase
+    aggregation."""
+    _check_k(k, 2)
+    return _kmv_bottom_k(_union_all(
+        summaries, "kmv_merge_by_group needs at least one input"), k, ["grp"])
 
 
 def kmv_ndv_by_group(
     summary: DataFrame, k: int = 256, hash_basis: str = "xxhash64"
 ) -> DataFrame:
-    """Per-group distinct-value estimates from a :func:`kmv_by_group`
-    relation: each group applies the kmv_ndv rule independently —
-    exact count below k (the group's summary IS its distinct set),
-    else the Beyer et al. 2007 (k−1)/u_k estimator. One bounded
-    aggregate over the ≤ groups·k-row relation; returns (grp, n_kept,
-    ndv_est) — the lake-scale "distinct per group" answer at k rows
-    of state per group."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    agg = summary.groupBy("grp").agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.max(_kmv_unit(F.col("h"), hash_basis)).alias("__uk"),
-    )
-    return agg.select(
-        "grp", "n_kept",
-        F.round(
-            F.when(F.col("n_kept") < k, F.col("n_kept").cast("double"))
-            .otherwise(F.lit(float(k - 1)) / F.col("__uk")),
-            4,
-        ).alias("ndv_est"),
-    )
+    """Per-GROUP :func:`kmv_ndv` over a :func:`kmv_by_group` relation:
+    returns (grp, n_kept, ndv_est). NULL GROUPS are kept."""
+    return _kmv_ndv(summary, k, hash_basis, ["grp"])
 
 
 def kmv_pairwise_stats(
@@ -1920,47 +1569,34 @@ def kmv_pairwise_stats(
     over groups, no per-pair jobs). Each pair's row is BIT-IDENTICAL
     to kmv_set_stats of the two groups' summaries (property-tested):
     the per-pair union bottom-k equals the KMV summary of A ∪ B by
-    the same closure — each group's summary is the bottom-k of its
-    distinct hash set, so the k smallest of S_a ∪ S_b are the k
-    smallest of A ∪ B (Beyer et al. 2007 §5 compound estimators).
+    the same closure, and the estimators are the same expressions
+    (_kmv_overlap_cols).
 
     Shape: one pass over the ≤ groups·k-row summary for per-side
     stats; the pair enumeration and the tagged per-pair union are
     DELIBERATELY groups²-scaled — that is the size of the answer (the
-    pair matrix itself), not an avoidable blow-up. Everything is
-    summary-derived: the union relation is ≤ pairs·2k rows and the
-    bottom-k walk windows only over it (the dds_quantile_by_group
-    precedent — never over a corpus relation). With a large group
-    domain, filter the summary to the groups of interest first; the
-    matrix is quadratic in whatever you pass in. Joins keep their
-    group-key equi-joins without forced broadcasts (groups-scaled
-    sides, the per-group family's standing call). NULL groups
-    participate via the injective ``_grp_key`` (the NULL = NULL
-    equi-join fix), ordered before every value group in the pair
-    orientation.
+    pair matrix itself), not an avoidable blow-up. The union relation
+    is ≤ pairs·2k rows and the bottom-k walk windows only over it
+    (never over a corpus relation). With a large group domain, filter
+    the summary to the groups of interest first. Joins keep their
+    group-key equi-joins without forced broadcasts. NULL groups
+    participate via the injective ``_grp_key``, ordered before every
+    value group in the pair orientation.
 
     Returns one row per unordered pair (grp_a < grp_b by the group
     key): (grp_a, grp_b, n_k, n_inter, ndv_union, ndv_inter, ndv_a,
-    ndv_b, containment_a_in_b, containment_b_in_a, jaccard_est) —
-    the same estimator expressions as kmv_set_stats, NULL-guarded
-    divisions included.
+    ndv_b, containment_a_in_b, containment_b_in_a, jaccard_est).
 
-    Cache lifetime (the mg_summary discipline): the keyed summary
-    projection stays persisted — bounded at ≤ groups·k rows — because
-    the RETURNED plan is lazy and reads it three times (side stats +
-    both pair tags). Unpersisting the input summary cannot release
-    this keyed projection: long-lived sessions should materialize the
-    matrix, then ``release_caches(result)``."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
+    Cache lifetime: the keyed summary projection stays persisted —
+    bounded at ≤ groups·k rows — because the RETURNED plan is lazy
+    and reads it three times (side stats + both pair tags);
+    materialize the matrix, then ``release_caches(result)``."""
+    _check_k(k, 2)
     from pyspark.sql.window import Window
 
     s, _own = _persist_internal(summary.select(
         _grp_key(F.col("grp")).alias("__gk"), "grp", "h"))
-    sides = s.groupBy("__gk", "grp").agg(
-        F.count(F.lit(1)).cast("long").alias("__n"),
-        F.max(_kmv_unit(F.col("h"), hash_basis)).alias("__uks"),
-    )
+    sides = _kmv_sides(s, _GK, hash_basis, "__n", "__uks")
     pa = sides.select(
         F.col("__gk").alias("__ga"), F.col("grp").alias("grp_a"),
         F.col("__n").alias("__na"), F.col("__uks").alias("__uka"))
@@ -1987,28 +1623,5 @@ def kmv_pairwise_stats(
         F.max(_kmv_unit(F.col("h"), hash_basis)).alias("__uk"),
     )
     joined = stats.join(pairs, ["__ga", "__gb"])
-    km1 = F.lit(float(k - 1))
-    # the kmv_set_stats estimator expressions, verbatim, per pair
-    eu = F.when(F.col("n_k") < k, F.col("n_k").cast("double")).otherwise(
-        km1 / F.col("__uk"))
-    ea = F.when(F.col("__na") < k, F.col("__na").cast("double")).otherwise(
-        km1 / F.col("__uka"))
-    eb = F.when(F.col("__nb") < k, F.col("__nb").cast("double")).otherwise(
-        km1 / F.col("__ukb"))
-    rho = F.col("n_inter") / F.col("n_k")
-    ei = rho * eu
     return _attach_caches(
-        joined.select(
-            "grp_a", "grp_b", "n_k", "n_inter",
-            F.round(eu, 4).alias("ndv_union"),
-            F.round(ei, 4).alias("ndv_inter"),
-            F.round(ea, 4).alias("ndv_a"),
-            F.round(eb, 4).alias("ndv_b"),
-            F.when(F.col("__na") > 0, F.round(ei / ea, 4))
-            .alias("containment_a_in_b"),
-            F.when(F.col("__nb") > 0, F.round(ei / eb, 4))
-            .alias("containment_b_in_a"),
-            F.round(rho, 4).alias("jaccard_est"),
-        ),
-        _own,
-    )
+        joined.select("grp_a", "grp_b", *_kmv_overlap_cols(k)), _own)

@@ -1747,8 +1747,9 @@ def gopher_quality_flags(
     appeared 12× in the collapsed plan) and interpreted HOFs get no
     codegen subexpression elimination — restaging measured 1.7×
     on a 500k-row corpus (median 4.20 s → 2.45 s, 5/5 interleaved ABBA
-    pairs; scripts/microbench_hof_staging.py). Values are identical:
-    the same expressions evaluate once each instead of N times."""
+    pairs; OPTIMIZATION_r14.md "HOF-subtree duplication sweep"). Values
+    are identical: the same expressions evaluate once each instead of N
+    times."""
     t = F.col(text_col)
     toks = tokenize(t)
     ltoks = tokenize(F.lower(t))
@@ -1850,8 +1851,8 @@ def c4_line_filter(
     :func:`analyze` / :func:`gopher_quality_flags`: CollapseProject
     inlined the `lines` subtree ~5× and re-filtered `kept` twice —
     restaging measured 1.5× on a 500k-row corpus, median 2.00 s →
-    1.30 s, 5/5 interleaved ABBA pairs;
-    scripts/microbench_hof_staging.py). Values identical."""
+    1.30 s, 5/5 interleaved ABBA pairs; OPTIMIZATION_r14.md
+    "HOF-subtree duplication sweep"). Values identical."""
     t = F.col(text_col)
     lines = F.filter(
         F.transform(F.split(t, r"\r?\n"), lambda s: F.trim(s)),
@@ -2057,8 +2058,9 @@ def code_quality_flags(
     # character-class counts: deleting an explicit 62/52-char set is a
     # per-char map lookup vs a per-char regex-class match — measured
     # ~14% faster on a 500k-row corpus, winning 8/10 interleaved ABBA
-    # pairs (scripts/microbench_text_kernels.py; the SMALL-class counts
-    # — punct, '#' — measured FASTER with regexp_replace and keep it).
+    # pairs (OPTIMIZATION_r14.md "Per-row text-kernel sweep"; the
+    # SMALL-class counts — punct, '#' — measured FASTER with
+    # regexp_replace and keep it).
     # Identical values: both delete exactly the same character set.
     _alnum_chars = (
         "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789"

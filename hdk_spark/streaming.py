@@ -26,8 +26,12 @@ session says now.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 #: Seconds any wait on a streaming query may take before the query is
@@ -519,14 +523,60 @@ def stream_cms(
     return cms_build(stream_df, value_col, depth, width, seed, hash_basis)
 
 
-def _mg_state_update(k: int, make_frame):
-    """Shared applyInPandasWithState update for the Misra-Gries
-    streaming twins (global sharded and per-group): recover counters +
-    row count from state, absorb the micro-batch's EXACT per-key
-    counts, ONE trim (Agarwal et al. 2012 §3 — so a one-batch run
-    replays the batch summary bit-for-bit), store, then emit via
-    ``make_frame(key, items, counters, n)`` — the only part that
-    differs between the twins (key shape and output columns)."""
+#: each streaming sketch key column: (Spark type, Python cast, pandas dtype)
+_KEY_TYPES = {"grp": (T.StringType(), str, "string"),
+              "shard": (T.IntegerType(), int, "int32")}
+
+
+def _key_frame(keys, key, n_rows: int) -> dict:
+    """The key columns of one emitted applyInPandasWithState frame."""
+    import pandas as pd
+
+    return {
+        c: pd.array([_KEY_TYPES[c][1](v)] * n_rows, dtype=_KEY_TYPES[c][2])
+        for c, v in zip(keys, key)
+    }
+
+
+def _sketch_state(rel: DataFrame, keys, update, fields, state) -> DataFrame:
+    """Run a sketch's state update per key as update-mode
+    applyInPandasWithState: emits (*keys, *fields), keeps ``state``."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    return rel.groupBy(*keys).applyInPandasWithState(
+        update,
+        outputStructType=T.StructType(
+            [T.StructField(c, _KEY_TYPES[c][0]) for c in keys]
+            + [T.StructField(n, t) for n, t in fields]),
+        stateStructType=T.StructType(
+            [T.StructField(n, t) for n, t in state]),
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _keyed_items(stream_df, group_col, value_col) -> DataFrame:
+    """(grp?, item) with NULL items — and, keyed, NULL groups —
+    dropped: the stateful twins cannot hold a NULL group key."""
+    from hdk_spark.operators.sketches import _grp_cols
+
+    cols = ["item"] + ([] if group_col is None else ["grp"])
+    return stream_df.select(
+        *_grp_cols(group_col), F.col(value_col).cast("string").alias("item")
+    ).filter(functools.reduce(
+        operator.and_, [F.col(c).isNotNull() for c in cols]))
+
+
+def _mg_state_update(k: int, keys):
+    """The Misra-Gries merge law per micro-batch, for one key: recover
+    counters + row count from state, absorb the micro-batch's EXACT
+    per-key counts, ONE trim (Agarwal et al. 2012 §3 — so a one-batch
+    run replays the batch summary bit-for-bit), store, then emit the
+    full summary (*keys, item, cnt, n_shard). An all-trimmed key
+    emits ONE accounting row (item NULL, cnt NULL, n_shard) — the
+    batch mg_summary convention, so volume is never lost."""
+    import pandas as pd
+
     from hdk_spark.operators.sketches import _mg_trim
 
     def update(key, pdfs, state):
@@ -545,9 +595,39 @@ def _mg_state_update(k: int, make_frame):
         _mg_trim(counters, k)
         items = sorted(counters)
         state.update((items, [counters[i] for i in items], n))
-        yield make_frame(key, items, counters, n)
+        n_rows = max(len(items), 1)
+        yield pd.DataFrame({
+            **_key_frame(keys, key, n_rows),
+            "item": pd.array(items or [None], dtype="string"),
+            "cnt": pd.array(
+                [counters[i] for i in items] or [None], dtype="Int64"),
+            "n_shard": pd.array([n] * n_rows, dtype="int64"),
+        })
 
     return update
+
+
+def _stream_mg(stream_df, group_col, value_col, k, n_shards, hash_basis):
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    if n_shards < 1:
+        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
+    from hdk_spark.operators.sketches import _cms_base_hash
+
+    keys = ([] if group_col is None else ["grp"]) + ["shard"]
+    sharded = _keyed_items(stream_df, group_col, value_col).withColumn(
+        "shard",
+        F.pmod(
+            _cms_base_hash(F.col("item"), hash_basis), F.lit(n_shards)
+        ).cast("int"),
+    )
+    return _sketch_state(
+        sharded, keys, _mg_state_update(k, keys),
+        [("item", T.StringType()), ("cnt", T.LongType()),
+         ("n_shard", T.LongType())],
+        [("items", T.ArrayType(T.StringType())),
+         ("cnts", T.ArrayType(T.LongType())), ("n", T.LongType())],
+    )
 
 
 def stream_frequent_items(
@@ -563,20 +643,18 @@ def stream_frequent_items(
     n_shards); each shard's state is one MG summary of ≤ k counters,
     so TOTAL state is ≤ n_shards·k (item, count) pairs for an
     unbounded stream — vs streaming groupBy(item).count(), which
-    holds every distinct item ever seen. Completes the mergeable-
-    sketch trio: CMS (linear cell add), HLL (register max), MG
-    (counter add + trim — Agarwal et al. 2012 "Mergeable Summaries"
-    §3, which is exactly what each micro-batch update performs:
-    absorb the batch's EXACT per-shard counts, then ONE trim).
+    holds every distinct item ever seen. Each micro-batch update is
+    the MG merge law (Agarwal et al. 2012 "Mergeable Summaries" §3):
+    absorb the batch's EXACT per-shard counts, then ONE trim.
 
     Emission (update mode — applyInPandasWithState has no complete
     mode): every updated shard re-emits its FULL current summary
     (shard, item, cnt, n_shard), so the latest emission per shard IS
     the complete table; a memory-sink consumer takes the last batch's
     rows per shard. An all-trimmed shard emits one accounting row
-    (item NULL, cnt NULL, n_shard) — the batch mg_summary convention,
-    so shard volume is never lost. When the whole history arrives in one micro-batch
-    (availableNow over a single file), the emission equals the batch
+    (item NULL, cnt NULL, n_shard) — the batch mg_summary convention.
+    When the whole history arrives in one micro-batch (availableNow
+    over a single file), the emission equals the batch
     ``sketches.mg_summary`` relation BIT-FOR-BIT — the contract row's
     oracle replays that (md5 basis). Across arbitrary micro-batch
     splits the counter VALUES are split-dependent (trim is not
@@ -589,66 +667,7 @@ def stream_frequent_items(
     exactly like stream_ndv_rollup's n_rows caveat (MG adds — only
     exactly-once sinks see multiset-true summaries).
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from hdk_spark.operators.sketches import _cms_base_hash
-
-    out_schema = T.StructType(
-        [
-            T.StructField("shard", T.IntegerType()),
-            T.StructField("item", T.StringType()),
-            T.StructField("cnt", T.LongType()),
-            T.StructField("n_shard", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("items", T.ArrayType(T.StringType())),
-            T.StructField("cnts", T.ArrayType(T.LongType())),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-
-    # an all-trimmed shard still emits ONE accounting row (item NULL,
-    # cnt NULL, n_shard) — same convention as the batch mg_summary,
-    # so shard volume is never lost
-    def make_frame(key, items, counters, n):
-        n_rows = max(len(items), 1)
-        return pd.DataFrame(
-            {
-                "shard": pd.array([int(key[0])] * n_rows, dtype="int32"),
-                "item": pd.array(items or [None], dtype="string"),
-                "cnt": pd.array(
-                    [counters[i] for i in items] or [None], dtype="Int64"),
-                "n_shard": pd.array([n] * n_rows, dtype="int64"),
-            }
-        )
-
-    update = _mg_state_update(k, make_frame)
-
-    sharded = (
-        stream_df.select(F.col(value_col).cast("string").alias("item"))
-        .filter(F.col("item").isNotNull())
-        .withColumn(
-            "shard",
-            F.pmod(
-                _cms_base_hash(F.col("item"), hash_basis), F.lit(n_shards)
-            ).cast("int"),
-        )
-    )
-    return sharded.groupBy("shard").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _stream_mg(stream_df, None, value_col, k, n_shards, hash_basis)
 
 
 def stream_frequent_items_by_group(
@@ -659,104 +678,16 @@ def stream_frequent_items_by_group(
     n_shards: int = 8,
     hash_basis: str = "xxhash64",
 ) -> DataFrame:
-    """Streaming per-GROUP Misra-Gries — "hot items per domain, live":
-    the streaming twin of ``sketches.mg_summary_by_group``, completing
-    the per-group streaming pair beside ``stream_kmv_by_group`` (the
-    batch per-group family KMV/DDS/MG all merge; KMV and now MG also
-    stream). State is keyed by (GROUP, shard): each key holds ONE MG
-    summary of ≤ k counters plus that cell's row count, so total state
-    is ≤ groups·n_shards·k (item, cnt) pairs for an unbounded stream —
-    the group count is data-dependent (cap or bucket unbounded group
-    domains upstream, the stream_kmv_by_group caveat). Sharding is by
-    ITEM hash exactly like the batch form (grp does not enter the
-    shard), so each (grp, shard) cell's update IS stream_frequent_
-    items' update for that group's sub-stream: absorb the micro-
-    batch's EXACT per-cell counts, then ONE trim (Agarwal et al. 2012
-    "Mergeable Summaries" §3).
-
-    When the whole history arrives in one micro-batch (availableNow
-    over a single file) the emission equals the batch
-    ``mg_summary_by_group`` relation BIT-FOR-BIT for non-NULL groups —
-    the contract row's oracle replays that per (grp, shard). Across
-    arbitrary splits counter VALUES are split-dependent (trim is not
-    linear) but the per-cell MG guarantees hold: cnt never exceeds the
-    true (grp, shard) count, undercount ≤ (n_shard − Σcnt)/(k+1), and
-    every item with true cell count > n_shard/(k+1) survives —
-    property-pinned over a forced multi-batch run, with restart
-    transparency pinned like stream_frequent_items'.
-
-    NULL items excluded (not an item); NULL GROUPS are DROPPED here
-    (the batch form keeps them per SQL GROUP BY — coalesce to a
-    sentinel upstream if a NULL group must stream; the
-    stream_kmv_by_group divergence, documented there too). Emission
-    (update mode): every updated (grp, shard) re-emits its full
-    summary (grp, shard, item, cnt, n_shard); an all-trimmed cell
-    emits one accounting row (item NULL, cnt NULL, n_shard) — the
-    batch convention, so cell volume is never lost. n_shard strictly
-    grows per cell, so the latest emission per (grp, shard) is the
-    max-n_shard one."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from hdk_spark.operators.sketches import _cms_base_hash
-
-    out_schema = T.StructType(
-        [
-            T.StructField("grp", T.StringType()),
-            T.StructField("shard", T.IntegerType()),
-            T.StructField("item", T.StringType()),
-            T.StructField("cnt", T.LongType()),
-            T.StructField("n_shard", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("items", T.ArrayType(T.StringType())),
-            T.StructField("cnts", T.ArrayType(T.LongType())),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-
-    def make_frame(key, items, counters, n):
-        n_rows = max(len(items), 1)
-        return pd.DataFrame(
-            {
-                "grp": pd.array([str(key[0])] * n_rows, dtype="string"),
-                "shard": pd.array([int(key[1])] * n_rows, dtype="int32"),
-                "item": pd.array(items or [None], dtype="string"),
-                "cnt": pd.array(
-                    [counters[i] for i in items] or [None], dtype="Int64"),
-                "n_shard": pd.array([n] * n_rows, dtype="int64"),
-            }
-        )
-
-    update = _mg_state_update(k, make_frame)
-
-    sharded = (
-        stream_df.select(
-            F.col(group_col).cast("string").alias("grp"),
-            F.col(value_col).cast("string").alias("item"),
-        )
-        .filter(F.col("item").isNotNull() & F.col("grp").isNotNull())
-        .withColumn(
-            "shard",
-            F.pmod(
-                _cms_base_hash(F.col("item"), hash_basis), F.lit(n_shards)
-            ).cast("int"),
-        )
-    )
-    return sharded.groupBy("grp", "shard").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    """Per-GROUP :func:`stream_frequent_items`, the streaming twin of
+    ``sketches.mg_summary_by_group``: state and emission are keyed by
+    (grp, shard) — (grp, shard, item, cnt, n_shard) — with the same
+    per-cell law and guarantees; one-batch runs equal the batch form
+    bit-for-bit for non-NULL groups. NULL GROUPS are DROPPED here (the
+    batch form keeps them; coalesce to a sentinel upstream if a NULL
+    group must stream). The group count is data-dependent — cap or
+    bucket unbounded group domains upstream."""
+    return _stream_mg(stream_df, group_col, value_col, k, n_shards,
+                      hash_basis)
 
 
 def stream_dds(
@@ -787,24 +718,10 @@ def stream_dds_by_group(
     value_col: str,
     m: int = 64,
 ) -> DataFrame:
-    """Streaming per-GROUP DDSketch — the last per-group streaming
-    twin (KMV: stream_kmv_by_group; MG: stream_frequent_items_by_
-    group; now DDS): ``dds_build_by_group``'s (grp, store, b, j, c)
-    bucket relation as a streaming aggregation. Exactly ``stream_
-    dds``'s argument with grp in the grouping key: the per-batch
-    state update IS ``dds_merge_by_group`` (linear counter add per
-    (grp, store, b, j)), so order never matters and complete mode
-    equals ``dds_build_by_group`` over the full history BIT-FOR-BIT —
-    including NULL groups, which the groupBy KEEPS (unlike the
-    stateful applyInPandasWithState twins, which drop them): a plain
-    streaming aggregation has no join-back, so the batch form's SQL
-    GROUP BY semantics carry through unchanged. State bounded at
-    ≤ groups·stores·binades·m cells for an unbounded stream (group
-    count data-dependent — the per-group family's standing caveat).
-    Query the completed/stored buckets with ``dds_quantile_by_group``
-    as usual; counters add, so replayed rows double-count (the
-    stream_cms caveat: only exactly-once sinks see multiset-true
-    sketches)."""
+    """Per-GROUP :func:`stream_dds`: ``dds_build_by_group`` as a
+    streaming aggregation. A plain streaming aggregation has no
+    join-back, so NULL GROUPS are KEPT, exactly as in the batch
+    form."""
     from hdk_spark.operators.sketches import dds_build_by_group
 
     return dds_build_by_group(stream_df, group_col, value_col, m)
@@ -819,90 +736,26 @@ def stream_cms_by_group(
     seed: int = 37,
     hash_basis: str = "xxhash64",
 ) -> DataFrame:
-    """Streaming per-GROUP Count-Min — the fourth and last per-group
-    streaming twin (KMV / MG / DDS / now CMS): ``cms_build_by_
-    group``'s (grp, r, b, c) cell relation as a plain streaming
-    aggregation. The per-batch state update IS ``cms_merge_by_group``
-    (linear cell add), so complete mode equals ``cms_build_by_group``
-    over the full history BIT-FOR-BIT regardless of micro-batch
-    splits, and the NULL group is KEPT (no join-back — the
-    stream_dds_by_group argument). State bounded at
-    ≤ groups·depth·width cells for an unbounded stream (group count
-    data-dependent — the family's standing caveat). Query the
-    completed/stored cells with ``cms_query_by_group`` as usual;
-    counters add, so replayed rows double-count (only exactly-once
-    sinks see multiset-true sketches)."""
+    """Per-GROUP :func:`stream_cms`: ``cms_build_by_group`` as a
+    streaming aggregation. A plain streaming aggregation has no
+    join-back, so NULL GROUPS are KEPT, exactly as in the batch
+    form."""
     from hdk_spark.operators.sketches import cms_build_by_group
 
     return cms_build_by_group(stream_df, group_col, value_col,
                               depth, width, seed, hash_basis)
 
 
-def stream_kmv(
-    stream_df: DataFrame,
-    value_col: str,
-    k: int = 256,
-    n_shards: int = 8,
-    hash_basis: str = "xxhash64",
-) -> DataFrame:
-    """Streaming KMV / bottom-k sketch — the LAST streaming twin in
-    the mergeable-sketch set (CMS linear add, HLL register max, MG
-    counter-add + trim, DDSketch bucket add, now KMV bottom-k union):
-    maintains the k smallest distinct base hashes of ``value_col``
-    (with a representative item each) as sharded
-    applyInPandasWithState state. Values shard on pmod(hash, n_shards)
-    and each shard keeps ITS bottom-k, so TOTAL state is ≤ n_shards·k
-    (h, item) pairs for an unbounded stream — vs streaming
-    ``dropDuplicates``/COUNT DISTINCT, which holds every key ever
-    seen. Merging the shards' latest emissions with
-    ``sketches.kmv_merge`` yields the batch ``kmv_summary`` of the
-    full history BIT-FOR-BIT regardless of micro-batch splits: each
-    global bottom-k hash lands in some shard, where at most k hashes
-    can be smaller, so the shard's bottom-k retains it — the same
-    bottom-k closure property that makes kmv_merge exact (Beyer et
-    al. 2007), and each micro-batch update IS that merge
-    (property-pinned across a forced multi-batch run).
-
-    Unlike the counter sketches, KMV is a pure function of the value
-    SET, so replayed/duplicate rows leave the summary UNCHANGED —
-    at-least-once sources still converge to the exact bottom-k; only
-    the companion ``n_seen`` row counter double-counts replays (the
-    stream_ndv_rollup n_rows caveat).
-
-    Emission (update mode): every updated shard re-emits its full
-    current summary (shard, h, item, n_seen); n_seen strictly grows
-    per update, so the latest emission per shard is the max-n_seen
-    one. NULLs excluded. Feed the merged summary to ``kmv_ndv`` /
-    ``kmv_jaccard`` as usual. Hash collisions keep the smallest item,
-    compared as Python str — code-point order, identical to the batch
-    ``F.min`` for the ASCII/BMP items the repo plants."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
+def _kmv_state_update(k: int, keys):
+    """The KMV merge law per micro-batch, for one key: the bottom-k
+    of the state's (h, item) pairs and the batch's, hash collisions
+    keeping the smallest item (compared as Python str — code-point
+    order, identical to the batch ``F.min`` for the ASCII/BMP items
+    the repo plants); emits the full summary (*keys, h, item,
+    n_seen)."""
     import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from hdk_spark.operators.sketches import _cms_base_hash
-
-    out_schema = T.StructType(
-        [
-            T.StructField("shard", T.IntegerType()),
-            T.StructField("h", T.LongType()),
-            T.StructField("item", T.StringType()),
-            T.StructField("n_seen", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("hs", T.ArrayType(T.LongType())),
-            T.StructField("items", T.ArrayType(T.StringType())),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-
-    def update(key, pdfs, state: GroupState):
+    def update(key, pdfs, state):
         if state.exists:
             st_hs, st_items, n = state.get
             summ = dict(zip((int(h) for h in st_hs), st_items))
@@ -938,29 +791,73 @@ def stream_kmv(
                 summ = {h: summ[h] for h in sorted(summ)[:k]}
         hs = sorted(summ)
         state.update((hs, [summ[h] for h in hs], n))
-        yield pd.DataFrame(
-            {
-                "shard": pd.array([int(key[0])] * len(hs), dtype="int32"),
-                "h": pd.array(hs, dtype="int64"),
-                "item": pd.array([summ[h] for h in hs], dtype="string"),
-                "n_seen": pd.array([n] * len(hs), dtype="int64"),
-            }
-        )
+        yield pd.DataFrame({
+            **_key_frame(keys, key, len(hs)),
+            "h": pd.array(hs, dtype="int64"),
+            "item": pd.array([summ[h] for h in hs], dtype="string"),
+            "n_seen": pd.array([n] * len(hs), dtype="int64"),
+        })
 
-    sharded = (
-        stream_df.select(F.col(value_col).cast("string").alias("item"))
-        .filter(F.col("item").isNotNull())
-        .withColumn("h", _cms_base_hash(F.col("item"), hash_basis))
-        .withColumn("shard",
-                    F.pmod(F.col("h"), F.lit(n_shards)).cast("int"))
+    return update
+
+
+def _stream_kmv(stream_df, group_col, value_col, k, n_shards, hash_basis):
+    if k < 2:
+        raise ValueError(f"k must be >= 2, got {k}")
+    from hdk_spark.operators.sketches import _cms_base_hash
+
+    rel = _keyed_items(stream_df, group_col, value_col).withColumn(
+        "h", _cms_base_hash(F.col("item"), hash_basis))
+    keys = ["grp"]
+    if group_col is None:
+        if n_shards < 1:
+            raise ValueError(f"n_shards must be >= 1, got {n_shards}")
+        keys = ["shard"]
+        rel = rel.withColumn(
+            "shard", F.pmod(F.col("h"), F.lit(n_shards)).cast("int"))
+    return _sketch_state(
+        rel, keys, _kmv_state_update(k, keys),
+        [("h", T.LongType()), ("item", T.StringType()),
+         ("n_seen", T.LongType())],
+        [("hs", T.ArrayType(T.LongType())),
+         ("items", T.ArrayType(T.StringType())), ("n", T.LongType())],
     )
-    return sharded.groupBy("shard").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+
+
+def stream_kmv(
+    stream_df: DataFrame,
+    value_col: str,
+    k: int = 256,
+    n_shards: int = 8,
+    hash_basis: str = "xxhash64",
+) -> DataFrame:
+    """Streaming KMV / bottom-k sketch: maintains the k smallest
+    distinct base hashes of ``value_col`` (with a representative item
+    each) as sharded applyInPandasWithState state. Values shard on
+    pmod(hash, n_shards) and each shard keeps ITS bottom-k, so TOTAL
+    state is ≤ n_shards·k (h, item) pairs for an unbounded stream —
+    vs streaming ``dropDuplicates``/COUNT DISTINCT, which holds every
+    key ever seen. Merging the shards' latest emissions with
+    ``sketches.kmv_merge`` yields the batch ``kmv_summary`` of the
+    full history BIT-FOR-BIT regardless of micro-batch splits: each
+    global bottom-k hash lands in some shard, where at most k hashes
+    can be smaller, so the shard's bottom-k retains it — the same
+    bottom-k closure property that makes kmv_merge exact (Beyer et
+    al. 2007), and each micro-batch update IS that merge
+    (property-pinned across a forced multi-batch run).
+
+    Unlike the counter sketches, KMV is a pure function of the value
+    SET, so replayed/duplicate rows leave the summary UNCHANGED —
+    at-least-once sources still converge to the exact bottom-k; only
+    the companion ``n_seen`` row counter double-counts replays (the
+    stream_ndv_rollup n_rows caveat).
+
+    Emission (update mode): every updated shard re-emits its full
+    current summary (shard, h, item, n_seen); n_seen strictly grows
+    per update, so the latest emission per shard is the max-n_seen
+    one. NULLs excluded. Feed the merged summary to ``kmv_ndv`` /
+    ``kmv_jaccard`` as usual."""
+    return _stream_kmv(stream_df, None, value_col, k, n_shards, hash_basis)
 
 
 def stream_kmv_by_group(
@@ -970,100 +867,15 @@ def stream_kmv_by_group(
     k: int = 256,
     hash_basis: str = "xxhash64",
 ) -> DataFrame:
-    """Streaming per-GROUP KMV bottom-k — the streaming twin of
-    ``sketches.kmv_by_group`` (this round's per-group family: build /
-    merge / NDV / now stream): state keyed by GROUP holds that
-    group's k smallest distinct (h, item) pairs plus a row counter,
-    so each group's latest emission equals ``kmv_by_group`` of the
-    full history for that group BIT-FOR-BIT regardless of micro-batch
-    splits (pure set function per group; the bottom-k closure). Where
-    ``stream_ndv_rollup`` (HLL) answers only per-group NDV, this
-    keeps a mergeable uniform SAMPLE per group: emissions feed
-    kmv_ndv_by_group unchanged, kmv_merge_by_group composes them with
-    batch slice summaries, and two groups' emissions feed
-    kmv_set_stats (per-group jaccard / containment, live).
-
-    State: ≤ k (h, item) pairs PER GROUP — bounded per group, but the
-    GROUP COUNT is data-dependent (any per-group statistic shares
-    this; cap or bucket unbounded group domains upstream). Replays
-    converge to the exact bottom-k (set function); only n_seen
-    double-counts, like stream_kmv. NULL values excluded; NULL GROUPS
-    are DROPPED here (the batch form keeps them per SQL GROUP BY —
-    coalesce to a sentinel upstream if a NULL group must stream).
-    Emission (update mode): every updated group re-emits its full
-    summary (grp, h, item, n_seen); n_seen strictly grows, so the
-    latest emission per group is the max-n_seen one."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from hdk_spark.operators.sketches import _cms_base_hash
-
-    out_schema = T.StructType(
-        [
-            T.StructField("grp", T.StringType()),
-            T.StructField("h", T.LongType()),
-            T.StructField("item", T.StringType()),
-            T.StructField("n_seen", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("hs", T.ArrayType(T.LongType())),
-            T.StructField("items", T.ArrayType(T.StringType())),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            st_hs, st_items, n = state.get
-            summ = dict(zip((int(h) for h in st_hs), st_items))
-            n = int(n)
-        else:
-            summ, n = {}, 0
-        # per-chunk trim + chunk-start-stale threshold: stream_kmv's
-        # bounded-memory discipline, unchanged (bottom-k associative)
-        for pdf in pdfs:
-            n += len(pdf)
-            thresh = max(summ) if len(summ) >= k else None
-            for h, it in zip(pdf["h"], pdf["item"]):
-                h = int(h)
-                if thresh is not None and h > thresh:
-                    continue
-                prev = summ.get(h)
-                if prev is None or it < prev:
-                    summ[h] = it
-            if len(summ) > k:
-                summ = {h: summ[h] for h in sorted(summ)[:k]}
-        hs = sorted(summ)
-        state.update((hs, [summ[h] for h in hs], n))
-        yield pd.DataFrame(
-            {
-                "grp": pd.array([str(key[0])] * len(hs), dtype="string"),
-                "h": pd.array(hs, dtype="int64"),
-                "item": pd.array([summ[h] for h in hs], dtype="string"),
-                "n_seen": pd.array([n] * len(hs), dtype="int64"),
-            }
-        )
-
-    grouped = (
-        stream_df.select(
-            F.col(group_col).cast("string").alias("grp"),
-            F.col(value_col).cast("string").alias("item"),
-        )
-        .filter(F.col("item").isNotNull() & F.col("grp").isNotNull())
-        .withColumn("h", _cms_base_hash(F.col("item"), hash_basis))
-    )
-    return grouped.groupBy("grp").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    """Per-GROUP :func:`stream_kmv`, the streaming twin of
+    ``sketches.kmv_by_group``: state is keyed by GROUP, not shard —
+    each group's latest emission (grp, h, item, n_seen) equals
+    kmv_by_group of its full history bit-for-bit. NULL GROUPS are
+    DROPPED here (the batch form keeps them; coalesce to a sentinel
+    upstream if a NULL group must stream). The group count is
+    data-dependent — cap or bucket unbounded group domains
+    upstream."""
+    return _stream_kmv(stream_df, group_col, value_col, k, None, hash_basis)
 
 
 def stream_ndv_rollup(

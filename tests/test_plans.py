@@ -1120,7 +1120,7 @@ def test_round11_sketch_plan_shapes(spark):
 
 
 def test_mg_trim_has_no_window_over_count_relation(spark):
-    """VERDICT r11 #3: _mg_trim_relation's rank-(k+1) median must not
+    """VERDICT r11 #3: the MG trim's rank-(k+1) median must not
     row_number whole shards through window partitions (a vocabulary-
     sized single-task sort at lake scale). The windowless two-phase
     form pins here: NO Window anywhere in mg_summary's plan — the

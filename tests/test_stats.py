@@ -1539,7 +1539,7 @@ def test_release_caches_frees_internal_persists(spark):
 
     from hdk_spark.operators.sketches import (
         dds_build, dds_build_by_group, dds_quantile,
-        dds_quantile_by_group, kmv_by_group, kmv_jaccard,
+        dds_quantile_by_group, frequent_items, kmv_by_group, kmv_jaccard,
         kmv_pairwise_stats, kmv_set_stats, kmv_summary,
         mg_heavy_hitters, mg_heavy_hitters_by_group, mg_merge,
         mg_merge_by_group, mg_summary, mg_summary_by_group,
@@ -1576,6 +1576,7 @@ def test_release_caches_frees_internal_persists(spark):
         dds_build_by_group(df, "g", "x", m=16), [0.5], m=16), 1)
     gsumm = mg_summary(df, "v", k=4, n_shards=2)
     spin(mg_merge(gsumm, gsumm, k=4), 1)
+    spin(frequent_items(df, "v", k=4), 1)
     # ownership (r14 review): mg_summary returns a PERSISTED frame the
     # caller owns — a caller-cached input is REUSED, nothing is
     # attached (release_caches returns 0), and the caller's cache
