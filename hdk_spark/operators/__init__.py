@@ -13,8 +13,12 @@ job it describes. Measured build cost (gateway commands, memory deletes
 excluded; sf0.01 tables): ``text.analyze`` 1,770 → 55,
 ``minhash_lsh_dedup(hash_basis="md5")`` 1,957 → 138,
 ``ann_lsh_topk(dim=64)`` 909 → 125, and its deterministic mode
-14,417 → 91. ``tests/test_plans.py`` holds each under 150. Literal
-rules for the text:
+14,417 → 91. ``tests/test_plans.py`` holds each under 150. The
+k-means centroid expressions of ``clustering`` took
+``semantic_dedup(threshold=0.8)`` from 17,589 to 1,279 (sf0.1; its
+eager k-means rounds and connected-components loop included) and
+``ann_ivf_topk(centroids=...)`` from 7,192 to 265. Literal rules for
+the text:
 
 - doubles carry a ``D`` suffix (or a ``CAST``): a bare ``0.5`` parses
   as DECIMAL;

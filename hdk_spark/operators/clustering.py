@@ -19,54 +19,58 @@ Scale design:
   so any engine's first-element fold agrees bit-for-bit); argmin ties
   break on the lower cluster id. Two engines running this spec produce
   IDENTICAL assignments — the driver's DuckDB oracle does.
+- **Built as SQL text** (the ``hdk_spark.operators`` rule): the k
+  distance folds, the sorted struct array and the per-dimension sums
+  each reach the JVM as one expression string, not as a Column tree of
+  k×dim literal nodes.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from hdk_spark.operators.sampling import hash_bucket
+from hdk_spark.functions.scalar import sql_ident
+from hdk_spark.operators.sampling import hash_bucket_sql
+from hdk_spark.operators.similarity import _double_array
 
 __all__ = ["kmeans_assignments", "kmeans_centroids"]
 
 
-def _dist_sq(vec, centroid: list[float]):
-    c = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(
-            vec, c, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _dist_sq(vec: str, centroid: list[float]) -> str:
+    """SQL text of the squared L2 distance from array column ``vec`` to
+    a literal centroid: a left fold from 0.0 in double precision."""
+    return (
+        f"aggregate(zip_with({vec}, {_double_array(centroid)}, "
+        "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
+        "0.0D, (acc, x) -> acc + x)"
     )
+
+
+def _by_distance(vec: str, cents: dict[int, list[float]]) -> str:
+    """SQL text of ONE sorted array of (d, c) structs, one per centroid:
+    struct ordering is (d asc, c asc), so element 0 is the nearest
+    centroid with ties to the lower id, and a prefix is a probe set.
+    A when-chain argmin re-nests every prior distance expression per
+    centroid (tree size doubles each step: fine at k=4, analysis
+    explosion at k=16 — measured as a hang on the IVF quantizer)."""
+    return "array_sort(array(" + ", ".join(
+        f"struct({_dist_sq(vec, cents[cid])} AS d, CAST({cid} AS BIGINT) AS c)"
+        for cid in sorted(cents)
+    ) + "))"
 
 
 def _assign(df: DataFrame, id_col: str, vec_col: str, cents: dict[int, list[float]]):
-    # argmin via ONE sorted (distance, id) struct array — struct
-    # ordering is (d asc, c asc), i.e. ties keep the lower cluster id.
-    # A when-chain argmin re-nests every prior distance expression per
-    # centroid (tree size doubles each step: fine at k=4, analysis
-    # explosion at k=16 — measured as a hang on the IVF quantizer).
-    vec = F.col(vec_col)
-    entries = F.array(
-        *[
-            F.struct(
-                _dist_sq(vec, cents[cid]).alias("d"),
-                F.lit(cid).cast("bigint").alias("c"),
-            )
-            for cid in sorted(cents)
-        ]
-    )
-    best = F.array_sort(entries)[0]
     # cdist (exact squared distance to the winning centroid) rides along
     # for free — it is the winning struct's sort key. semantic_dedup's
     # keep-farthest-from-centroid rule consumes it; kmeans callers that
     # don't need it project it away.
-    return df.select(
-        F.col(id_col),
-        vec.alias(vec_col),
-        best["c"].alias("cluster"),
-        best["d"].alias("cdist"),
+    vec = sql_ident(vec_col)
+    best = f"{_by_distance(vec, cents)}[0]"
+    return df.selectExpr(
+        sql_ident(id_col),
+        f"{vec} AS `{vec_col}`",
+        f"{best}.c AS cluster",
+        f"{best}.d AS cdist",
     )
 
 
@@ -85,33 +89,33 @@ def kmeans_centroids(
     oracle-checkable path."""
     dim = len(df.select(vec_col).first()[0])
 
+    vec = sql_ident(vec_col)
+    ident = sql_ident(id_col)
     init = (
-        df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-        .withColumn("__h", hash_bucket(F.col("__id"), 1_000_000_007, seed))
+        df.selectExpr(
+            f"{ident} AS __id", f"{vec} AS __v",
+            f"{hash_bucket_sql(ident, 1_000_000_007, seed)} AS __h",
+        )
         .orderBy("__h", "__id")
         .limit(k)
         .collect()
     )
     cents = {i: [float(x) for x in r["__v"]] for i, r in enumerate(init)}
 
-    for _ in range(iters):
-        assigned = _assign(df, id_col, vec_col, cents)
-        # exact decimal per-dimension sums -> shuffle-order-independent
-        aggs = [
-            (
-                F.sum(
-                    F.element_at(F.col(vec_col), d + 1)
-                    .cast("double")
-                    .cast("decimal(20,10)")
-                ).cast("double")
-                / F.count(F.lit(1))
-            ).alias(f"d{d}")
+    # exact decimal per-dimension sums -> shuffle-order-independent; all
+    # dimensions in one array-valued aggregate expression
+    means = F.expr(
+        "array("
+        + ", ".join(
+            f"CAST(sum(CAST(CAST(element_at({vec}, {d + 1}) AS DOUBLE) AS DECIMAL(20,10)))"
+            " AS DOUBLE) / count(1)"
             for d in range(dim)
-        ]
-        rows = assigned.groupBy("cluster").agg(*aggs).collect()
-        cents = {
-            int(r["cluster"]): [float(r[f"d{d}"]) for d in range(dim)] for r in rows
-        }
+        )
+        + ") AS means"
+    )
+    for _ in range(iters):
+        rows = _assign(df, id_col, vec_col, cents).groupBy("cluster").agg(means).collect()
+        cents = {int(r["cluster"]): [float(x) for x in r["means"]] for r in rows}
     return cents
 
 

@@ -417,9 +417,24 @@ def repartition_for_width(df: DataFrame, target_parallelism: int | None = None) 
     CPU-heavy per-row operators. At real scale the scan already has
     enough splits and this is a no-op. The fan-out defaults to the
     session's ``defaultParallelism`` (its cores), so a vanilla session
-    at any core count fans out to exactly what it can run at once."""
+    at any core count fans out to exactly what it can run at once.
+
+    The input's width is read from its physical plan, so building runs
+    no job (``df.rdd.getNumPartitions()`` executes every shuffle stage
+    of an adaptive plan). An input that ends in a shuffle declares its
+    partition count (one per core under ``get_spark`` and
+    ``load_tables``); a plan without exchanges counts its scan splits
+    on the driver; any other adaptive plan (a scan streamed through a
+    broadcast join, say) fans out, since only running it would tell."""
     target = target_parallelism or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    plan = df._jdf.queryExecution().executedPlan()
+    adaptive = plan.nodeName() == "AdaptiveSparkPlan"
+    if adaptive:
+        plan = plan.executedPlan()
+    width = plan.outputPartitioning().numPartitions()
+    if width == 0 and not adaptive:
+        width = df.rdd.getNumPartitions()
+    if width < target:
         return df.repartition(target)
     return df
 

@@ -292,29 +292,14 @@ def ann_ivf_topk(
         gate_d = _vec_dim(df, vec_col)
     base = _vec_base(_width_gate(df, vec_col, gate_d), id_col, vec_col)
     if centroids is not None:
-        from hdk_spark.operators.clustering import _dist_sq
+        from hdk_spark.operators.clustering import _by_distance
 
         cents = {int(c): [float(x) for x in v] for c, v in centroids.items()}
-        vec = F.col("v")
         # ONE sorted (distance, id) struct array serves both assignment
-        # (first element) and the nprobe probe set (first nprobe) —
-        # struct ordering = (d asc, c asc), ties to the lower list id.
-        # Never a when-chain argmin: that re-nests every prior distance
-        # expression per centroid and blows up analysis at k=16.
-        entries = F.array(
-            *[
-                F.struct(
-                    _dist_sq(vec, cents[cid]).alias("d"),
-                    F.lit(cid).cast("long").alias("c"),
-                )
-                for cid in sorted(cents)
-            ]
-        )
-        sorted_entries = F.array_sort(entries)
-        assign_col = sorted_entries[0]["c"]
-        probe_col = F.transform(
-            F.slice(sorted_entries, 1, nprobe), lambda s: s["c"]
-        )
+        # (first element) and the nprobe probe set (first nprobe)
+        ranked = _by_distance("v", cents)
+        assign_col = F.expr(f"{ranked}[0].c")
+        probe_col = F.expr(f"transform(slice({ranked}, 1, {int(nprobe)}), s -> s.c)")
     else:
         from pyspark.sql.pandas.functions import pandas_udf
 
@@ -764,29 +749,18 @@ def ann_ivfpq_topk(
     exploded query probe set; ADC joins only probed codes. No
     corpus-sized shuffle anywhere; the window ranks per-query
     candidate subsets."""
-    from hdk_spark.operators.clustering import _dist_sq
+    from hdk_spark.operators.clustering import _by_distance
 
     cbs, ksub, dsub = _check_codebooks(codebooks)
     m = len(cbs)
     cents = {int(c): [float(x) for x in v] for c, v in centroids.items()}
-    vec = F.col(vec_col)
-    entries = F.array(
-        *[
-            F.struct(
-                _dist_sq(vec, cents[cid]).alias("d"),
-                F.lit(cid).cast("long").alias("c"),
-            )
-            for cid in sorted(cents)
-        ]
-    )
-    sorted_entries = F.array_sort(entries)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        vec.alias("v"),
-        sorted_entries[0]["c"].alias("list_id"),
-        F.transform(
-            F.slice(sorted_entries, 1, nprobe), lambda s: s["c"]
-        ).alias("probes"),
+    vec = sql_ident(vec_col)
+    ranked = _by_distance(vec, cents)
+    base = df.selectExpr(
+        f"{sql_ident(id_col)} AS id",
+        f"{vec} AS v",
+        f"{ranked}[0].c AS list_id",
+        f"transform(slice({ranked}, 1, {int(nprobe)}), s -> s.c) AS probes",
     )
     codes = pq_encode(
         base.select(F.col("id").alias(id_col), F.col("v").alias(vec_col)),

@@ -14,6 +14,16 @@ gets its session from, so the tuning story is consistent:
 - Arrow enabled for toPandas()/pandas-UDF boundaries.
 - UTC session timezone so results compare cleanly against UTC-naive
   oracles (DuckDB) and parquet ms/ns timestamps.
+- Python workers fork from :mod:`hdk_spark.daemon` on ``local[...]``
+  masters. Spark's worker calls ``importlib.invalidate_caches()`` on
+  every task, and before CPython 3.12 that re-reads the central
+  directory of every zip on the worker path, the ``spark-core`` jar
+  included: ~150 ms before each task's kernel starts, even in a reused
+  worker. The daemon re-reads an archive only when it changed. The
+  directory that holds the package goes on the workers' PYTHONPATH
+  (Spark merges it with its own), so the daemon imports from any cwd.
+  Other masters keep Spark's default daemon, and a session that does
+  not come from ``get_spark`` (the driver contract's) is untouched.
 """
 
 from __future__ import annotations
@@ -21,6 +31,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: the directory that holds the ``hdk_spark`` package
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: set only for ``local[...]`` masters, where workers share this file system
+_LOCAL_ONLY = ("spark.python.daemon.module", "spark.executorEnv.PYTHONPATH")
 
 _DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
@@ -50,6 +66,10 @@ _DEFAULTS = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
     "spark.ui.enabled": "false",
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    # Workers fork from hdk_spark.daemon, which stops each task from
+    # re-reading the Spark jar's zip directory (module docstring).
+    "spark.python.daemon.module": "hdk_spark.daemon",
+    "spark.executorEnv.PYTHONPATH": _PKG_PARENT,
     # DELIBERATELY NOT SET:
     # spark.sql.adaptive.coalescePartitions.initialPartitionNum=512.
     # r13c's sf10 claim for it (q5 16.1 s → 6.6 s, attributed to sort
@@ -68,7 +88,11 @@ _DEFAULTS = {
     # pipeline's REUSED signature exchange (two consumers share
     # `Exchange hashpartitioning(signature, N)`), so this knob sets
     # that stage's task count directly — 512 tasks of ~KB each, and
-    # per-task Python round-trips dominate until workers warm.
+    # the fixed cost of each Python task dominates. That cost was not
+    # worker warm-up: every task, warm worker or not, re-read the zip
+    # directories on the worker path (~150 ms; hdk_spark.daemon now
+    # skips unchanged archives), so the 512-task figures above predate
+    # that fix.
     # Callers running at sf10+ scale should set it per session —
     # get_spark(scale_hint_rows=...) / scale_conf(rows) encode the
     # measured rule (SCALE.md r13c/r14a).
@@ -138,13 +162,23 @@ def build_conf(
 ) -> "dict[str, str]":
     """The conf dict ``get_spark`` applies: defaults, then the
     :func:`scale_conf` preset when a scale hint is given, then caller
-    overrides (strongest last). Pure — pinned by tests without
-    building a session."""
+    overrides (strongest last). The worker daemon and its PYTHONPATH
+    are dropped unless the master is ``local[...]``. Pure — pinned by
+    tests without building a session."""
     conf = dict(_DEFAULTS)
+    master = _master()
+    if master != "local" and not master.startswith("local["):
+        for k in _LOCAL_ONLY:
+            del conf[k]
     if scale_hint_rows is not None:
         conf.update(scale_conf(scale_hint_rows))
     conf.update(overrides)
     return conf
+
+
+def _master() -> str:
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
 
 
 def get_spark(
@@ -159,10 +193,7 @@ def get_spark(
     :func:`scale_conf` partition-sizing preset (SCALE.md r13c/r14a).
     Omitted (the default), nothing changes — the bench and test
     profiles run the unmodified defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = SparkSession.builder.master(
-        os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    ).appName(app_name)
+    builder = SparkSession.builder.master(_master()).appName(app_name)
     for k, v in build_conf(scale_hint_rows, **overrides).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -178,6 +178,30 @@ def test_repartition_for_width_follows_session_cores(spark, monkeypatch):
     assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
+@pytest.mark.parametrize("shape", ["scan", "groupBy", "broadcast_join"])
+def test_repartition_for_width_runs_no_job(spark, shape):
+    """The fan-out is decided from the physical plan: building it runs
+    no job, also when the input ends in a shuffle (asking an adaptive
+    plan for its partition count executes its shuffle stages)."""
+    from hdk_spark.operators.dedup import repartition_for_width
+
+    docs = spark.table("documents")
+    df = {
+        "scan": docs,
+        "groupBy": docs.groupBy("doc_id").agg(F.max("text").alias("text")),
+        "broadcast_join": docs.join(F.broadcast(docs.select("doc_id").limit(5)), "doc_id"),
+    }[shape]
+    sc = spark.sparkContext
+    group = f"repartition_for_width_{shape}"
+    sc.setJobGroup(group, group)
+    try:
+        repartition_for_width(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def _build_commands(spark, build) -> int:
     """py4j commands the driver sends while ``build()`` composes a plan.
     Memory-delete commands are not counted: they free whichever Python
@@ -207,12 +231,17 @@ def _build_commands(spark, build) -> int:
     return n
 
 
-@pytest.mark.parametrize("op", ["analyze", "minhash_md5", "ann_numpy", "ann_deterministic"])
+@pytest.mark.parametrize(
+    "op", ["analyze", "minhash_md5", "ann_numpy", "ann_deterministic", "semantic_dedup"]
+)
 def test_operator_plan_build_budget(spark, op):
     """Fixed-shape expressions reach the JVM as SQL text: building each
     doc_dedup_search operator's plan costs at most ~150 gateway round
-    trips (a Column-API tree cost 900-19,000, one per node)."""
-    from hdk_spark.operators.dedup import minhash_lsh_dedup
+    trips (a Column-API tree cost 900-19,000, one per node).
+    ``semantic_dedup`` runs its k-means rounds and connected-components
+    loop while it builds, so its budget covers those jobs too; its
+    k=4 x 64-dim centroid expressions cost 17,589 commands as trees."""
+    from hdk_spark.operators.dedup import minhash_lsh_dedup, semantic_dedup
     from hdk_spark.operators.similarity import ann_lsh_topk
     from hdk_spark.operators.text import analyze
 
@@ -223,9 +252,11 @@ def test_operator_plan_build_budget(spark, op):
         "ann_numpy": lambda: ann_lsh_topk(emb, [0, 1, 2], k=5, dim=64),
         "ann_deterministic": lambda: ann_lsh_topk(
             emb, [0, 1, 2], k=5, dim=64, deterministic=True),
+        "semantic_dedup": lambda: semantic_dedup(emb, threshold=0.8),
     }[op]
     n = _build_commands(spark, build)
-    assert n <= 150, f"{op}: {n} py4j commands to build the plan"
+    budget = {"semantic_dedup": 1500}.get(op, 150)
+    assert n <= budget, f"{op}: {n} py4j commands to build the plan"
 
 
 def test_ngram_jaccard_joins_on_shingle_key(spark):
