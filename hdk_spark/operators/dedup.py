@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from hdk_spark.functions.scalar import round6, sql_ident
+from hdk_spark.operators.sketches import _attach_caches, _persist_internal
 
 # ---------------------------------------------------------------------------
 # exact
@@ -361,8 +362,10 @@ def minhash_signatures(
         # optimizer from re-evaluating/reordering the call; per-row
         # output is unchanged (the sketch is genuinely deterministic).
         _sig_nd = _sig.asNondeterministic()
+        # the UDF takes the column by name: an F.col argument costs ~10
+        # more py4j round trips (PySpark's DataFrame-debugging origin)
         return (
-            df.select(F.expr(f"{sql_ident(id_col)} AS id"), _sig_nd(F.col(text_col)).alias("signature"))
+            df.select(F.expr(f"{sql_ident(id_col)} AS id"), _sig_nd(text_col).alias("signature"))
             .where("signature IS NOT NULL")
         )
 
@@ -489,7 +492,10 @@ def minhash_lsh_dedup(
     ``persist_signatures`` keeps the collapsed signature relation in
     cluster cache: dedup workflows typically re-query it (other
     thresholds, incremental batches), and Spark's cache manager
-    plan-matches repeated calls past the Python sketch stage.
+    plan-matches repeated calls past the Python sketch stage. The
+    cache is operator-internal: materialize the result, then
+    ``release_caches(result)`` frees it (refcounted across calls that
+    share it, as for the sketch operators).
 
     ``max_bucket_size`` bounds both degenerate band buckets and clone
     groups (> cap members pair quadratically in the OUTPUT itself);
@@ -520,8 +526,9 @@ def minhash_lsh_dedup(
             "gids",
             F.expr(f"CASE WHEN size(gids) <= {int(max_bucket_size)} THEN gids ELSE array(id) END"),
         )
+    caches = ()
     if persist_signatures:
-        groups = groups.persist()
+        groups, caches = _persist_internal(groups)
     # member lists ride along with the signature so cross-group pair
     # expansion is a projection explode — no join back to the groups.
     # Per-doc band hashes are computed ONCE into `bhs` and reused for
@@ -606,12 +613,12 @@ def minhash_lsh_dedup(
 
     # every (ga × gb) member pair of every emitted pair, normalized to
     # id_a < id_b, in one generator
-    return buckets.selectExpr(
+    return _attach_caches(buckets.selectExpr(
         f"inline(flatten(transform(concat({cross_arr}, {intra_arr}), "
         "p -> flatten(transform(p.ga, ma -> transform(p.gb, mb -> named_struct("
         "'id_a', least(ma, mb), 'id_b', greatest(ma, mb), "
         "'jaccard_est', round(p.jaccard_est, 6))))))))"
-    )
+    ), caches)
 
 
 # ---------------------------------------------------------------------------

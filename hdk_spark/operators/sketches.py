@@ -679,7 +679,8 @@ def release_caches(df: DataFrame) -> int:
     returns (frequent_items, kmv_jaccard, kmv_set_stats,
     kmv_pairwise_stats, mg_merge, mg_heavy_hitters, dds_quantile and
     their by-group forms) persist derived projections their multiple
-    subtrees share; ``input.unpersist()`` cannot release those —
+    subtrees share, and ``dedup.minhash_lsh_dedup`` its signature
+    groups; ``input.unpersist()`` cannot release those —
     Dataset.unpersist is non-cascading and matches only the exact
     cached plan, so the documented discipline needs THIS entry point:
     materialize the result, then ``release_caches(result)``. Must be
@@ -816,7 +817,9 @@ def _persist_internal(df: DataFrame) -> "tuple[DataFrame, tuple]":
             return match[1], (match[1],)
         if not ents:
             _CACHE_REGISTRY.pop(key, None)
-    if df.storageLevel.useMemory or df.storageLevel.useDisk:
+    # isValid: uses memory or disk. Two py4j round trips, where each
+    # DataFrame.storageLevel read costs six.
+    if df._jdf.storageLevel().isValid():
         return df, ()  # caller-owned cache: reuse, never attach
     df = df.persist()
     with _CACHE_REG_LOCK:

@@ -24,6 +24,34 @@ gets its session from, so the tuning story is consistent:
   (Spark merges it with its own), so the daemon imports from any cwd.
   Other masters keep Spark's default daemon, and a session that does
   not come from ``get_spark`` (the driver contract's) is untouched.
+- Streaming checkpoints and state-store files go through Hadoop's
+  ``FileSystem`` API (``FileSystemBasedCheckpointFileManager``, Spark's
+  own fallback where ``FileContext`` is unsupported) on ``local[...]``
+  masters, by the same rule as the daemon. Without the native Hadoop
+  library, every permission change and symlink lookup on the local
+  file system forks a process. Spark's default ``FileContext`` manager
+  renames each atomically written file through ``FileContext.rename``,
+  which looks up links: eight ``readlink`` forks per file (source and
+  destination, twice each, for the file and for its ``.crc``). Every
+  state-store delta, offsets/commits/sources log entry and checksum
+  file is written that way, so a micro-batch of a 4-store query forked
+  about 90 of them, most of its commit time. This manager renames with
+  the 2-argument ``FileSystem.rename``, a POSIX ``rename(2)``, and
+  forks no ``readlink``. Both managers still fork one ``chmod`` for
+  each new file and one for its ``.crc``. The files
+  are the same (Spark's ``<v>.delta.crc`` and Hadoop's ``.crc``
+  sidecars are still written and verified), so a checkpoint restarts
+  under either manager. One difference: a create that must not
+  overwrite checks ``exists`` and then renames, so two *processes*
+  racing on one checkpoint inside that window are not refused by the
+  file system. Within one Spark application a second ``start()`` on
+  an active query's checkpoint still never runs beside the first:
+  Spark's active-run check stops the old run, or refuses the new one
+  when ``spark.sql.streaming.stopActiveRunOnRestart`` is false.
+- ``spark.driver.memory`` (``SPARK_GRAFT_DRIVER_MEM``) and
+  ``spark.sql.shuffle.partitions`` (``SPARK_GRAFT_CPUS``) are read from
+  the environment when the conf is built, like the master, not when
+  this module is imported.
 """
 
 from __future__ import annotations
@@ -36,7 +64,11 @@ from pyspark.sql import SparkSession
 _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: set only for ``local[...]`` masters, where workers share this file system
-_LOCAL_ONLY = ("spark.python.daemon.module", "spark.executorEnv.PYTHONPATH")
+_LOCAL_ONLY = (
+    "spark.python.daemon.module",
+    "spark.executorEnv.PYTHONPATH",
+    "spark.sql.streaming.checkpointFileManagerClass",
+)
 
 _DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
@@ -62,14 +94,24 @@ _DEFAULTS = {
     # results) without ever risking a driver-side build of a
     # misestimated fact table.
     "spark.sql.adaptive.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
-    # local[...] runs one JVM: the driver is the only memory pool.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
     "spark.ui.enabled": "false",
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     # Workers fork from hdk_spark.daemon, which stops each task from
     # re-reading the Spark jar's zip directory (module docstring).
     "spark.python.daemon.module": "hdk_spark.daemon",
     "spark.executorEnv.PYTHONPATH": _PKG_PARENT,
+    # Checkpoint and state-store files through FileSystem, not
+    # FileContext: without libhadoop, FileContext's rename forks eight
+    # readlinks per file (source and destination of the file and its
+    # .crc, twice each), ~90 forks per stateful micro-batch. Same
+    # files, same checksums; a no-overwrite create is
+    # exists-then-rename, so two processes racing on one checkpoint are
+    # not refused by the file system (module docstring). Spark 4.1's
+    # package: the pre-4.1 ``...execution.streaming.`` name fails
+    # query start.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
     # DELIBERATELY NOT SET:
     # spark.sql.adaptive.coalescePartitions.initialPartitionNum=512.
     # r13c's sf10 claim for it (q5 16.1 s → 6.6 s, attributed to sort
@@ -149,7 +191,7 @@ def scale_conf(rows: int, cores: "int | None" = None) -> "dict[str, str]":
     if rows < 0:
         raise ValueError(f"rows must be >= 0, got {rows}")
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(_cpus())
     n = max(cores, -(-rows // _ROWS_PER_INITIAL_PARTITION))
     n = 1 << (n - 1).bit_length()  # next power of two, ≥ n
     return {
@@ -163,9 +205,11 @@ def build_conf(
     """The conf dict ``get_spark`` applies: defaults, then the
     :func:`scale_conf` preset when a scale hint is given, then caller
     overrides (strongest last). The worker daemon and its PYTHONPATH
-    are dropped unless the master is ``local[...]``. Pure — pinned by
-    tests without building a session."""
-    conf = dict(_DEFAULTS)
+    are dropped unless the master is ``local[...]``, as is the
+    checkpoint manager. The driver heap and shuffle partitions come
+    from the environment at this call. Pure — pinned by tests without
+    building a session."""
+    conf = {**_DEFAULTS, **_env_conf()}
     master = _master()
     if master != "local" and not master.startswith("local["):
         for k in _LOCAL_ONLY:
@@ -176,9 +220,21 @@ def build_conf(
     return conf
 
 
+def _cpus() -> str:
+    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
+def _env_conf() -> "dict[str, str]":
+    """The defaults read from the environment, at call time."""
+    return {
+        # local[...] runs one JVM: the driver is the only memory pool.
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+        "spark.sql.shuffle.partitions": _cpus(),
+    }
+
+
 def _master() -> str:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    return os.environ.get("SPARK_GRAFT_MASTER", f"local[{_cpus()}]")
 
 
 def get_spark(

@@ -6,7 +6,7 @@ import pytest
 # The driver heap defaults to 32g, more than a 16 GB box has: the test
 # JVM and the second one scripts/pipeline_demo.py starts (it inherits
 # this environment) then grow until the kernel OOM-kills one of them.
-# Set before any test module imports hdk_spark.session, which reads it.
+# hdk_spark.session reads it when it builds the session's conf.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

@@ -142,7 +142,7 @@ def test_scale_conf_preset_pins_measured_rule():
     profile is untouched; the preset only ever sets the
     runtime-settable initialPartitionNum, never shuffle.partitions;
     and no-hint build_conf equals the bare defaults."""
-    from hdk_spark.session import _DEFAULTS, build_conf, scale_conf
+    from hdk_spark.session import _DEFAULTS, _env_conf, build_conf, scale_conf
 
     knob = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     assert scale_conf(60_000_000, cores=32) == {knob: "512"}
@@ -154,11 +154,12 @@ def test_scale_conf_preset_pins_measured_rule():
     with pytest.raises(ValueError):
         scale_conf(-1)
 
-    assert build_conf() == _DEFAULTS
-    assert knob not in _DEFAULTS  # the preset is opt-in, not a default
+    defaults = {**_DEFAULTS, **_env_conf()}
+    assert build_conf() == defaults
+    assert knob not in defaults  # the preset is opt-in, not a default
     c = build_conf(scale_hint_rows=60_000_000)
     assert c[knob] == "512"
-    assert c["spark.sql.shuffle.partitions"] == _DEFAULTS[
+    assert c["spark.sql.shuffle.partitions"] == defaults[
         "spark.sql.shuffle.partitions"]
     # caller overrides beat the preset
     assert build_conf(scale_hint_rows=60_000_000, **{knob: "64"})[knob] == "64"

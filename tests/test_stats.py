@@ -1533,10 +1533,12 @@ def test_release_caches_frees_internal_persists(spark):
     mg_heavy_hitters_by_group and dds_quantile_by_group, and (ADVICE
     r13) for the GLOBAL trio that had the same leak — mg_merge's
     tagged union, mg_heavy_hitters' summary, dds_quantile's sketch —
-    the attached frames' storage level actually clears, a second call
-    is a no-op, and a plain DataFrame returns 0."""
+    and for minhash_lsh_dedup's signature groups: the attached frames'
+    storage level actually clears, a second call is a no-op, and a
+    plain DataFrame returns 0."""
     from pyspark.sql import functions as F
 
+    from hdk_spark.operators.dedup import minhash_lsh_dedup
     from hdk_spark.operators.sketches import (
         dds_build, dds_build_by_group, dds_quantile,
         dds_quantile_by_group, frequent_items, kmv_by_group, kmv_jaccard,
@@ -1577,6 +1579,9 @@ def test_release_caches_frees_internal_persists(spark):
     gsumm = mg_summary(df, "v", k=4, n_shards=2)
     spin(mg_merge(gsumm, gsumm, k=4), 1)
     spin(frequent_items(df, "v", k=4), 1)
+    docs = spark.range(60).selectExpr(
+        "id AS doc_id", "concat('doc text ', CAST(id % 7 AS STRING)) AS text")
+    spin(minhash_lsh_dedup(docs, hash_basis="md5"), 1)
     # ownership (r14 review): mg_summary returns a PERSISTED frame the
     # caller owns — a caller-cached input is REUSED, nothing is
     # attached (release_caches returns 0), and the caller's cache

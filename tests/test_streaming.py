@@ -1562,3 +1562,146 @@ def test_stream_cms_by_group_equals_batch(spark, tmp_path):
         got, ["hot", "w0", "c5"], **kw).collect()}
     assert est[("code", "hot")] >= 100  # never under the true count
     assert est[(None, "w0")] >= 1
+
+
+_CPM = "spark.sql.streaming.checkpointFileManagerClass"
+_FC_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+               "FileContextBasedCheckpointFileManager")
+
+
+def _start_with_manager(spark, manager, start):
+    """Run ``start()`` with the checkpoint manager set to ``manager``
+    (None: the session's), then restore the session's value. The key
+    is a runtime SQL conf; the query reads it when it starts."""
+    prev = spark.conf.get(_CPM, None)
+    if manager is not None:
+        spark.conf.set(_CPM, manager)
+    try:
+        return start()
+    finally:
+        if prev is None:
+            spark.conf.unset(_CPM)
+        else:
+            spark.conf.set(_CPM, prev)
+
+
+@pytest.mark.parametrize("first,second", [
+    (_FC_MANAGER, None), (None, _FC_MANAGER),
+], ids=["filecontext_then_session", "session_then_filecontext"])
+def test_checkpoint_restarts_across_checkpoint_managers(
+        spark, tmp_path, first, second):
+    """A get_spark session writes checkpoints through FileSystem, not
+    Spark's default FileContext manager. The files are the same, so a
+    stateful stream restarts from a checkpoint the other manager wrote,
+    in either direction, and its latest cells equal the batch twin."""
+    from pyspark.sql.window import Window
+
+    from hdk_spark.operators.sketches import cms_build_by_group
+
+    assert spark.conf.get(_CPM).endswith(
+        ".checkpointing.FileSystemBasedCheckpointFileManager")
+    kw = dict(depth=3, width=32, seed=5, hash_basis="md5")
+    src, cp = str(tmp_path / "src"), str(tmp_path / "cp")
+    out = str(tmp_path / "out")
+    os.makedirs(src)
+    f1 = spark.createDataFrame(
+        [(i, "a" if i % 3 else "b", f"x{i % 23}") for i in range(300)],
+        "id: long, g: string, v: string")
+    f2 = spark.createDataFrame(
+        [(i, "c" if i % 2 else "a", f"y{i % 11}") for i in range(200)],
+        "id: long, g: string, v: string")
+    f1.coalesce(1).write.parquet(src + "/p1")
+
+    def run(manager):
+        def sink(batch_df, batch_id):
+            batch_df.withColumn("__b", F.lit(batch_id)).write.mode(
+                "append").parquet(out)
+
+        st = (spark.readStream.schema(f1.schema)
+              .option("maxFilesPerTrigger", 1)
+              .option("recursiveFileLookup", "true").parquet(src))
+        q = _start_with_manager(spark, manager, lambda: (
+            streaming.stream_cms_by_group(st, "g", "v", **kw)
+            .writeStream.foreachBatch(sink).outputMode("update")
+            .option("checkpointLocation", cp)
+            .trigger(availableNow=True).start()))
+        streaming.await_termination(q)
+
+    run(first)
+    f2.coalesce(1).write.parquet(src + "/p2")
+    run(second)  # restart: recovers state, reads only p2
+
+    w = Window.partitionBy("grp", "r", "b")
+    latest = (
+        spark.read.parquet(out)
+        .withColumn("__m", F.max("__b").over(w))
+        .filter(F.col("__b") == F.col("__m"))
+        .select("grp", "r", "b", "c")
+    )
+    batch = cms_build_by_group(
+        f1.unionByName(f2).select("g", "v"), "g", "v", **kw)
+    assert sorted(map(tuple, latest.collect())) == \
+        sorted(map(tuple, batch.collect()))
+    assert spark.read.parquet(out).agg(F.max("__b")).first()[0] == 1
+
+
+def test_checkpoint_state_versions_keep_both_checksums(spark, tmp_path):
+    """After two micro-batches under the session's checkpoint manager,
+    every state-store version has Spark's checksum file
+    (``<v>.delta.crc``) and Hadoop's checksum sidecar
+    (``.<v>.delta.crc``)."""
+    src, cp = str(tmp_path / "src"), str(tmp_path / "cp")
+    part = spark.range(40).selectExpr("id", "CAST(id % 5 AS STRING) AS g")
+    for name in ("p1", "p2"):
+        part.coalesce(1).write.parquet(f"{src}/{name}")
+    st = (spark.readStream.schema(part.schema)
+          .option("maxFilesPerTrigger", 1)
+          .option("recursiveFileLookup", "true").parquet(src))
+    q = (st.groupBy("g").count()
+         .writeStream.format("memory").queryName("t_checksums")
+         .outputMode("complete").option("checkpointLocation", cp)
+         .trigger(availableNow=True).start())
+    streaming.await_termination(q)
+    stores = [os.path.join(dp, "") for dp, _dirs, files in
+              os.walk(os.path.join(cp, "state"))
+              if any(f.endswith(".delta") for f in files)]
+    assert stores
+    for store in stores:
+        files = set(os.listdir(store))
+        versions = {f[:-len(".delta")] for f in files if f.endswith(".delta")}
+        assert len(versions) >= 2, (store, sorted(files))
+        for v in versions:
+            assert f"{v}.delta.crc" in files, (store, v, sorted(files))
+            assert f".{v}.delta.crc" in files, (store, v, sorted(files))
+
+
+def test_second_start_on_active_checkpoint_never_runs_alongside(
+        spark, tmp_path):
+    """Under the FileSystem checkpoint manager a query started on a
+    checkpoint another active query holds still never runs beside it:
+    Spark's active-run check refuses it when
+    ``stopActiveRunOnRestart`` is off, and stops the old run first
+    when it is on (the default)."""
+    cp = str(tmp_path / "cp")
+    rate = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+
+    def start():
+        return (rate.writeStream.format("noop")
+                .option("checkpointLocation", cp)
+                .trigger(processingTime="10 seconds").start())
+
+    key = "spark.sql.streaming.stopActiveRunOnRestart"
+    q1 = start()
+    q2 = None
+    try:
+        spark.conf.set(key, "false")
+        with pytest.raises(Exception, match="already active"):
+            q2 = start()
+        spark.conf.unset(key)
+        q2 = start()
+        assert q2.isActive and not q1.isActive
+    finally:
+        spark.conf.unset(key)
+        q1.stop()
+        if q2 is not None:
+            q2.stop()

@@ -105,10 +105,26 @@ def test_build_conf_sets_daemon_only_for_local_masters(monkeypatch):
     from hdk_spark.session import build_conf
 
     daemon, path = "spark.python.daemon.module", "spark.executorEnv.PYTHONPATH"
+    cpm = "spark.sql.streaming.checkpointFileManagerClass"
     monkeypatch.setenv("SPARK_GRAFT_MASTER", "local[2]")
     conf = build_conf()
     assert conf[daemon] == "hdk_spark.daemon"
     assert conf[path] == REPO
+    assert conf[cpm] == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager")
     monkeypatch.setenv("SPARK_GRAFT_MASTER", "spark://cluster:7077")
     conf = build_conf()
-    assert daemon not in conf and path not in conf
+    assert daemon not in conf and path not in conf and cpm not in conf
+
+
+def test_build_conf_reads_environment_at_call_time(monkeypatch):
+    """The core count and driver heap set after import reach the conf."""
+    from hdk_spark.session import build_conf
+
+    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1234m")
+    conf = build_conf()
+    assert conf["spark.sql.shuffle.partitions"] == "3"
+    assert conf["spark.driver.memory"] == "1234m"
