@@ -271,6 +271,7 @@ BENCH_SQL = {
 def main() -> None:
     from pyspark.sql import functions as F
 
+    from hdk_spark.operators.sketches import release_caches
     from hdk_spark.session import get_spark
     from __spark_entry__ import load_tables
 
@@ -344,6 +345,7 @@ def main() -> None:
 
     def best_of(make_df, python_stage: bool = False) -> float:
         best = float("inf")
+        frames = []
         if python_stage:
             ramp_python()
         for _ in range(iters):
@@ -352,8 +354,14 @@ def main() -> None:
             # ramped cores (see the vCPU-throttle note above)
             ramp_jvm()
             t0 = time.perf_counter()
-            execute(make_df())
+            execute(df := make_df())
             best = min(best, time.perf_counter() - t0)
+            frames.append(df)
+        # untimed: free the operator-internal caches (q7's signature
+        # groups, q9's bucket relation) so the next query does not
+        # run beside them
+        for df in frames:
+            release_caches(df)
         return round(best, 4)
 
     timings: dict[str, float] = {}

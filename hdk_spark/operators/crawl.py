@@ -79,8 +79,9 @@ def crawl_curate(
     SURVIVORS. Materializing any one stage therefore moves the text
     payload through AT MOST ONE hash exchange (the r14 shape shipped
     text through 2-3: the lang join-back, the dedup-keep join, and
-    the cap join each re-shuffled it — plan_audit_payload flagged it
-    as the one genuinely heavy repeat-mover). The extraction pass
+    the cap join each re-shuffled it — the payload audit, now
+    plan_audit.py's heavy_hash column, flagged it as the one genuinely
+    heavy repeat-mover). The extraction pass
     runs over ALL 200/text-html pages, including robots-disallowed
     ones the old shape skipped — per-row map-only work (no shuffle)
     traded for two fewer payload shuffles, the guide §8 economics.

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from hdk_spark.functions.scalar import round6, round6_sql, sql_ident
+from hdk_spark.operators.sketches import _attach_caches, _persist_internal
 
 
 def _dot(a: str, b: str) -> str:
@@ -391,7 +392,8 @@ def ann_lsh_topk(
     bytes — measured faster than narrow-rows + re-attach joins up to
     10× local scale); for corpora where that amplification doesn't fit
     cache, ann_ivf_topk is the scale path (×1 vector storage, bounded
-    driver-side training).
+    driver-side training). Free the cached bucket relation with
+    ``sketches.release_caches(result)`` once the result is materialized.
 
     Measured boundary (SCALE.md, d=64, 16 queries, n_tables=8): the
     cached relation is exactly n_tables × the vector storage — 459 MB
@@ -439,11 +441,9 @@ def ann_lsh_topk(
     if deterministic:
         # fold-based JVM expressions: bit-reproducible in a SQL oracle
         buckets = "array(" + ", ".join(_bucket_expr("v", tbl) for tbl in tables) + ")"
-        # persist: referenced by both sides of the candidate join (same
-        # reasoning as dedup sketches)
         hashed = _vec_base(df, id_col, vec_col).selectExpr(
             "id", "v", "norm", f"posexplode({buckets}) AS (tbl, b)"
-        ).persist()
+        )
     else:
         from pyspark.sql.pandas.functions import pandas_udf
 
@@ -471,8 +471,10 @@ def ann_lsh_topk(
                 f"{sql_ident(id_col)} AS id", f"{sql_ident(vec_col)} AS v",
                 "__sk.norm AS norm", "posexplode(__sk.bs) AS (tbl, b)",
             )
-            .persist()
         )
+    # persist: referenced by both sides of the candidate join (same
+    # reasoning as dedup sketches); release_caches(result) frees it
+    hashed, caches = _persist_internal(hashed)
     queries = _as_queries(hashed, query_ids, "tbl AS qtbl", "b AS qb")
     # One qid-keyed exchange serves BOTH the candidate dedup and the
     # top-k window (r15, VERDICT r14 #7): hashpartitioning(qid)
@@ -495,7 +497,7 @@ def ann_lsh_topk(
         .repartition("qid")
         .dropDuplicates(["qid", "id"])
     )
-    return _topk_rank(_scored(cand), k)
+    return _attach_caches(_topk_rank(_scored(cand), k), caches)
 
 
 # measured LSH→IVF crossover (SCALE.md, d=64/8 tables): the LSH bucket

@@ -11,7 +11,8 @@ operators composed the way a real corpus job chains them:
 Run: python scripts/pipeline_demo.py [sf_dir] [out_dir]
 Prints one JSON line of per-stage row counts (the numbers a pipeline
 owner monitors). Every stage is the library operator the driver
-contract checks; this script only composes them.
+contract checks; this script only composes them. ``run(spark, sf_dir,
+out_dir)`` returns the same counts on a session the caller owns.
 """
 
 from __future__ import annotations
@@ -24,7 +25,11 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
+def run(spark, sf_dir: str, out_dir: str) -> "dict[str, int]":
+    """Run the pipeline on ``spark`` over ``sf_dir``'s tables, write the
+    corpus under ``out_dir`` and return the per-stage row counts. The
+    views of ``sf_dir`` stay registered; the pipeline's own caches and
+    its ``final`` view are released."""
     from pyspark.sql import functions as F
 
     from __spark_entry__ import load_tables
@@ -40,12 +45,9 @@ def main() -> None:
         mixture_sample,
         shuffle_shards,
     )
+    from hdk_spark.operators.sketches import release_caches
     from hdk_spark.operators.text import analyze, redact_pii
-    from hdk_spark.session import get_spark
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    out_dir = sys.argv[2] if len(sys.argv) > 2 else tempfile.mkdtemp()
-    spark = get_spark("pipeline_demo")
     load_tables(spark, sf_dir)
     stats: dict[str, int] = {}
 
@@ -169,8 +171,19 @@ def main() -> None:
     )
     stats["written"] = spark.read.parquet(
         os.path.join(out_dir, "corpus")).count()
+    release_caches(pairs)
+    seg.unpersist()
+    spark.catalog.dropTempView("final")
+    return stats
 
-    print(json.dumps(stats))
+
+def main() -> None:
+    from hdk_spark.session import get_spark
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    out_dir = sys.argv[2] if len(sys.argv) > 2 else tempfile.mkdtemp()
+    spark = get_spark("pipeline_demo")
+    print(json.dumps(run(spark, sf_dir, out_dir)))
     spark.stop()
 
 

@@ -9,7 +9,8 @@ Documents are synthesized JVM-side from the rate source's `value`
 (50 deterministic pseudo-tokens per row) so the source is rate-bound,
 not Python-bound; the static sides (corpus band signatures / window
 frequency relation) are built once from the x10 synthetic corpus the
-scale smoke uses (/tmp/sf1_synth) and persisted.
+scale smoke uses (/tmp/sf1_synth, generated or refreshed through
+scale_smoke.ensure_corpus and its manifest check) and persisted.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-DST = "/tmp/sf1_synth"
+from scripts.scale_smoke import DST, ensure_corpus  # noqa: E402
 
 
 def synth_docs(stream):
@@ -90,7 +91,7 @@ def main() -> None:
     spark = get_spark("streaming_bench")
     # the sketch modes (--sketch/--dds/--mg/--kmv) are rate-source
     # driven and never touch the synthetic corpus; only the default
-    # stream-static modes need DST (checked below, where it's read)
+    # stream-static modes need DST (made or refreshed below)
 
     if "--sketch" in sys.argv:
         # round-10 bounded-state sketch pair: the state-row counts
@@ -236,19 +237,19 @@ def main() -> None:
         assert r["state_rows_total"] <= 8, r
         return
 
-    if not os.path.exists(DST):
-        raise SystemExit("run scripts/scale_smoke.py --regen first")
+    # a regenerated corpus invalidates the derived static sides too
+    fresh = ensure_corpus(spark, DST, "sf1-keyshift-x10")
     docs = spark.read.parquet(os.path.join(DST, "documents.parquet"))
     print("corpus docs:", docs.count())
 
     sig_path = "/tmp/stream_bench_sigs.parquet"
-    if not os.path.exists(sig_path):
+    if fresh or not os.path.exists(sig_path):
         minhash_signatures(docs).write.mode("overwrite").parquet(sig_path)
     corpus_sig = spark.read.parquet(sig_path)
     print("corpus signatures:", corpus_sig.count())
 
     freq_path = "/tmp/stream_bench_wfreq.parquet"
-    if not os.path.exists(freq_path):
+    if fresh or not os.path.exists(freq_path):
         window_freq_relation(docs, n=4).filter(F.col("wc") >= 2).write.mode(
             "overwrite"
         ).parquet(freq_path)

@@ -4,8 +4,7 @@ import sys
 import pytest
 
 # The driver heap defaults to 32g, more than a 16 GB box has: the test
-# JVM and the second one scripts/pipeline_demo.py starts (it inherits
-# this environment) then grow until the kernel OOM-kills one of them.
+# JVM then grows until the kernel OOM-kills it.
 # hdk_spark.session reads it when it builds the session's conf.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 

@@ -10,18 +10,32 @@ window does (scripts/rotate_priority.py maintains the order). The full
 past the driver's verify budget (r14 shipped with tests_ok=false on a
 timeout, not a failure). Set HDK_FULL_ORACLE=1 for the full sweep
 (scripts/vanilla_gate.py also covers all 298 out-of-band; run it at
-least once per round)."""
+least once per round).
+
+Plan audit: after the comparison, each non-streaming row's executed
+frame is audited by scripts/plan_audit.py's audit_plan() (shuffle
+exchanges, heavy non-key payload in hash exchanges, BatchEvalPython,
+duplicated Python evals, Cartesian / nested-loop joins, unbounded
+global windows, mid-plan global sorts, rescanned files, duplicated
+interpreted-HOF subtrees) and compared column by column with the
+row's line in plans/audit.tsv. The row starts from an empty cache so
+a relation cached by an earlier test cannot change its plan. A plan
+change that is meant regenerates the row and commits the TSV diff
+with it: ``python scripts/plan_audit.py --only <row>[,<row>...]``
+(no argument: every row, about ten minutes)."""
 
 import os
 
 import pytest
 
 import __spark_entry__ as entry_mod
+from scripts.plan_audit import COLUMNS, audit_plan, audited, read_tsv
 from tests.conftest import SF_CORRECT
 from tests.oracle_compare import assert_frames_match
 
 QUERIES = entry_mod.queries()
 ORACLES = entry_mod.oracle_sql()
+AUDIT = read_tsv()
 
 _FULL = os.environ.get("HDK_FULL_ORACLE") == "1"
 # 60 rows plus the 23-row sketch-core lead block at the head of
@@ -40,14 +54,24 @@ def test_entry_smoke(spark):
 
 @pytest.mark.parametrize("name", _CHECKED)
 def test_query_against_oracle(name, spark, duck):
-    q = QUERIES[name]
-    spark_df = q(spark, SF_CORRECT)
-    if name not in ORACLES:
+    spark.catalog.clearCache()
+    spark_df = QUERIES[name](spark, SF_CORRECT)
+    if name in ORACLES:
+        assert_frames_match(spark_df, duck.sql(ORACLES[name]), name)
+    else:
         # rows-only contract for non-SQL-expressible ops
         assert spark_df.count() >= 0
+    if not audited(name):
         return
-    rel = duck.sql(ORACLES[name])
-    assert_frames_match(spark_df, rel, name)
+    regen = f"python scripts/plan_audit.py --only {name}"
+    want = AUDIT.get(name)
+    assert want is not None, f"{name}: no row in plans/audit.tsv; run {regen}"
+    got = audit_plan(spark_df)
+    diff = [f"{c}={got[c]!r}, plans/audit.tsv has {want.get(c)!r}"
+            for c in COLUMNS if got[c] != want.get(c)]
+    assert not diff, (
+        f"{name}: plan audit differs: " + "; ".join(diff)
+        + f". If the plan change is meant, run {regen} and commit the TSV.")
 
 
 def test_no_duplicate_contract_row_registrations():

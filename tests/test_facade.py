@@ -239,19 +239,14 @@ def test_to_parquet_compact_fixes_small_files(spark, tmp_path):
 
 def test_pipeline_demo_end_to_end(spark, tmp_path):
     """The full curation pipeline script composes and every stage is
-    monotonically non-increasing in rows (each stage only filters)."""
-    import json
-    import subprocess
-    import sys
+    monotonically non-increasing in rows (each stage only filters).
+    It runs in this session, not in a second JVM. The sf0.001 views it
+    registers do not leak: every contract row registers its own SF's
+    views before it builds."""
+    from scripts.pipeline_demo import run
+    from tests.conftest import SF_SMOKE
 
-    r = subprocess.run(
-        [sys.executable, "scripts/pipeline_demo.py",
-         "/root/testdata/sf0.001", str(tmp_path)],
-        capture_output=True, text=True, timeout=600,
-        cwd="/root/repo",
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
-    stats = json.loads(r.stdout.strip().splitlines()[-1])
+    stats = run(spark, SF_SMOKE, str(tmp_path))
     order = ["ingested", "after_quality", "after_segment_dedup",
              "after_neardup", "after_decontam", "after_mixture"]
     vals = [stats[k] for k in order]

@@ -1533,12 +1533,14 @@ def test_release_caches_frees_internal_persists(spark):
     mg_heavy_hitters_by_group and dds_quantile_by_group, and (ADVICE
     r13) for the GLOBAL trio that had the same leak — mg_merge's
     tagged union, mg_heavy_hitters' summary, dds_quantile's sketch —
-    and for minhash_lsh_dedup's signature groups: the attached frames'
+    for minhash_lsh_dedup's signature groups, and for ann_lsh_topk's
+    bucket relation in both modes: the attached frames'
     storage level actually clears, a second call is a no-op, and a
     plain DataFrame returns 0."""
     from pyspark.sql import functions as F
 
     from hdk_spark.operators.dedup import minhash_lsh_dedup
+    from hdk_spark.operators.similarity import ann_lsh_topk
     from hdk_spark.operators.sketches import (
         dds_build, dds_build_by_group, dds_quantile,
         dds_quantile_by_group, frequent_items, kmv_by_group, kmv_jaccard,
@@ -1582,6 +1584,12 @@ def test_release_caches_frees_internal_persists(spark):
     docs = spark.range(60).selectExpr(
         "id AS doc_id", "concat('doc text ', CAST(id % 7 AS STRING)) AS text")
     spin(minhash_lsh_dedup(docs, hash_basis="md5"), 1)
+    vecs = spark.range(40).selectExpr(
+        "id AS vec_id",
+        "transform(sequence(0, 7), i -> CAST(sin(id * 7 + i) AS FLOAT))"
+        " AS embedding")
+    spin(ann_lsh_topk(vecs, [0, 1], k=3, dim=8), 1)
+    spin(ann_lsh_topk(vecs, [0, 1], k=3, dim=8, deterministic=True), 1)
     # ownership (r14 review): mg_summary returns a PERSISTED frame the
     # caller owns — a caller-cached input is REUSED, nothing is
     # attached (release_caches returns 0), and the caller's cache
