@@ -343,8 +343,10 @@ def main() -> None:
     # stalled iterations.
     iters = int(os.environ.get("BENCH_ITERS", "5"))
 
-    def best_of(make_df, python_stage: bool = False) -> float:
-        best = float("inf")
+    def best_of(make_df, python_stage: bool = False) -> "tuple[float, float]":
+        """(best, first) wall seconds over ``iters`` runs: the first
+        run is the cold one, before any plan-keyed cache is warm."""
+        walls = []
         frames = []
         if python_stage:
             ramp_python()
@@ -355,16 +357,16 @@ def main() -> None:
             ramp_jvm()
             t0 = time.perf_counter()
             execute(df := make_df())
-            best = min(best, time.perf_counter() - t0)
+            walls.append(time.perf_counter() - t0)
             frames.append(df)
-        # untimed: free the operator-internal caches (q7's signature
-        # groups, q9's bucket relation) so the next query does not
-        # run beside them
+        # untimed: free the operator-internal caches (q9's bucket
+        # relation) so the next query does not run beside them
         for df in frames:
             release_caches(df)
-        return round(best, 4)
+        return round(min(walls), 4), round(walls[0], 4)
 
     timings: dict[str, float] = {}
+    first_iter: dict[str, float] = {}
 
     # Operator queries (q7-q9) run FIRST: measured in this process
     # early-vs-late, the identical q7/q9 calls are 2-4× slower after
@@ -411,11 +413,11 @@ def main() -> None:
     prev, prev_total = _load_prev_bench()
 
     for name, (mk, py_stage) in makers.items():
-        t = best_of(mk, python_stage=py_stage)
+        t, first_iter[name] = best_of(mk, python_stage=py_stage)
         timings[name] = t
         p = prev.get(name)
         if p and p > 0 and not (0.5 <= t / p <= 2.0):
-            rerun = best_of(mk, python_stage=py_stage)
+            rerun, _ = best_of(mk, python_stage=py_stage)
             anomalies[name] = {
                 "prev": p,
                 "first": t,
@@ -445,7 +447,7 @@ def main() -> None:
         probes: dict[str, float] = {}
         for name in probe_names:
             mk, py_stage = makers[name]
-            probes[name] = best_of(mk, python_stage=py_stage)
+            probes[name], _ = best_of(mk, python_stage=py_stage)
         # verdict logic extracted to ambient_verdict() (unit-tested):
         # drifted queries' probes decide; padding probes never vote
         drifted = drifted_queries(firsts, prev, anomalies)
@@ -474,6 +476,9 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
+                # each query's first timed iteration (cold caches) from
+                # the same best-of-N run that "queries" reports
+                "first_iter": first_iter,
                 "sf": _sf_from_dir(SF_DIR),
                 "iters": iters,
                 # Runtime-observed values, NOT env echoes: master comes

@@ -18,6 +18,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hdk_spark.functions.scalar import round6
+from hdk_spark.operators.caches import (
+    _attach_caches,
+    _caches_of,
+    _persist_internal,
+    release_caches,
+)
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -27,6 +33,12 @@ def _tables(spark: SparkSession, sf_dir: str):
 
     load_tables(spark, sf_dir)
     return spark
+
+
+def _ordered(result: DataFrame, *cols) -> DataFrame:
+    """``result.orderBy(*cols)`` carrying the operator's internal
+    caches, so ``release_caches`` on the row's frame frees them."""
+    return _attach_caches(result.orderBy(*cols), _caches_of(result))
 
 
 # ---------------------------------------------------------------------------
@@ -1011,9 +1023,9 @@ def q_similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     _tables(spark, sf_dir)
     emb = spark.table("embeddings")
     cents = kmeans_centroids(emb, k=16, iters=2, seed=0)
-    return ann_ivf_topk(
+    return _ordered(ann_ivf_topk(
         emb, [0, 1, 2], k=5, n_lists=16, nprobe=4, centroids=cents
-    ).orderBy("qid", "rank")
+    ), "qid", "rank")
 
 
 def _ann_ivf_oracle(
@@ -1271,9 +1283,9 @@ def q_similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic=True pinned: fold-based JVM bucket bits + norms so
     # the oracle's strict left-fold dots agree bit-for-bit (production
     # default uses one vectorized numpy pass per Arrow batch)
-    return ann_lsh_topk(
+    return _ordered(ann_lsh_topk(
         spark.table("embeddings"), [0, 1, 2], k=5, deterministic=True
-    ).orderBy("qid", "rank")
+    ), "qid", "rank")
 
 
 def _ann_lsh_oracle(
@@ -3130,7 +3142,7 @@ def q_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdk_spark.operators.text import unigram_logprob
 
     _tables(spark, sf_dir)
-    return unigram_logprob(spark.table("documents")).orderBy("doc_id")
+    return _ordered(unigram_logprob(spark.table("documents")), "doc_id")
 
 
 _UNIGRAM_LOGPROB_ORACLE = r"""
@@ -3160,7 +3172,7 @@ def q_text_source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdk_spark.operators.text import source_kl_divergence
 
     _tables(spark, sf_dir)
-    return source_kl_divergence(spark.table("documents")).orderBy("grp")
+    return _ordered(source_kl_divergence(spark.table("documents")), "grp")
 
 
 _SOURCE_KL_ORACLE = r"""
@@ -3466,7 +3478,7 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdk_spark.operators.text import bigram_logprob
 
     _tables(spark, sf_dir)
-    return bigram_logprob(spark.table("documents")).orderBy("doc_id")
+    return _ordered(bigram_logprob(spark.table("documents")), "doc_id")
 
 
 _BIGRAM_LOGPROB_ORACLE = r"""
@@ -3504,7 +3516,8 @@ def q_text_unigram_unk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdk_spark.operators.text import unigram_logprob
 
     _tables(spark, sf_dir)
-    return unigram_logprob(spark.table("documents"), min_count=2).orderBy("doc_id")
+    return _ordered(
+        unigram_logprob(spark.table("documents"), min_count=2), "doc_id")
 
 
 _UNIGRAM_UNK_ORACLE = r"""
@@ -3539,7 +3552,8 @@ def q_text_bigram_unk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdk_spark.operators.text import bigram_logprob
 
     _tables(spark, sf_dir)
-    return bigram_logprob(spark.table("documents"), min_count=2).orderBy("doc_id")
+    return _ordered(
+        bigram_logprob(spark.table("documents"), min_count=2), "doc_id")
 
 
 _BIGRAM_UNK_ORACLE = r"""
@@ -3586,11 +3600,11 @@ def q_text_lm_cross_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _tables(spark, sf_dir)
     docs = spark.table("documents")
-    return unigram_logprob(
+    return _ordered(unigram_logprob(
         docs.filter(F.col("source") == "src0"),
         min_count=2,
         model_df=docs.filter(F.col("source") != "src0"),
-    ).orderBy("doc_id")
+    ), "doc_id")
 
 
 _LM_CROSS_ORACLE = r"""
@@ -4417,11 +4431,11 @@ def q_text_bigram_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _tables(spark, sf_dir)
     docs = spark.table("documents")
-    return bigram_logprob(
+    return _ordered(bigram_logprob(
         docs.filter(F.col("source") == "src0"),
         min_count=2,
         model_df=docs.filter(F.col("source") != "src0"),
-    ).orderBy("doc_id")
+    ), "doc_id")
 
 
 _BIGRAM_CROSS_ORACLE = r"""
@@ -5904,7 +5918,10 @@ def q_dedup_window_decontam_bloom(spark: SparkSession, sf_dir: str) -> DataFrame
     train = docs.filter(F.col("doc_id") >= 20)
     ev = docs.filter(F.col("doc_id") < 20)
     exact = eval_contaminated_spans(train, ev, n=4, basis="text")
-    bloom = eval_contaminated_spans_bloom(train, ev, n=4)
+    # read twice below (the coverage join and the per-doc window sum):
+    # cached, so the Python hit kernel runs once
+    bloom, caches = _persist_internal(
+        eval_contaminated_spans_bloom(train, ev, n=4))
     e = exact.select(
         F.col("doc_id").alias("id"),
         F.col("span_start").alias("es"),
@@ -5928,7 +5945,7 @@ def q_dedup_window_decontam_bloom(spark: SparkSession, sf_dir: str) -> DataFrame
         F.sum(F.when(F.col("bs").isNull(), 1).otherwise(0)).alias("__unc"),
     )
     bloom_doc = b.groupBy("id").agg(F.sum("bw").alias("__bw"))
-    return (
+    return _attach_caches(
         train.select(F.col("doc_id").alias("id"))
         .join(per_doc, "id", "left")
         .join(bloom_doc, "id", "left")
@@ -5944,7 +5961,8 @@ def q_dedup_window_decontam_bloom(spark: SparkSession, sf_dir: str) -> DataFrame
                 >= F.coalesce("n_exact_windows", F.lit(0))
             ).alias("bloom_hits_ge_ok"),
         )
-        .orderBy("id")
+        .orderBy("id"),
+        caches,
     )
 
 
@@ -6507,9 +6525,9 @@ def q_text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdk_spark.operators.text import ccnet_buckets
 
     _tables(spark, sf_dir)
-    return ccnet_buckets(
+    return _ordered(ccnet_buckets(
         spark.table("documents"), lang_col="lang"
-    ).orderBy("doc_id")
+    ), "doc_id")
 
 
 _CCNET_BUCKETS_ORACLE = r"""
@@ -6948,9 +6966,9 @@ def q_text_trigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdk_spark.operators.text import trigram_logprob
 
     _tables(spark, sf_dir)
-    return trigram_logprob(
+    return _ordered(trigram_logprob(
         spark.table("documents"), basis="text"
-    ).orderBy("doc_id")
+    ), "doc_id")
 
 
 def _trigram_cte(
@@ -7044,10 +7062,10 @@ def q_text_ccnet_buckets_lm3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdk_spark.operators.text import ccnet_buckets
 
     _tables(spark, sf_dir)
-    return ccnet_buckets(
+    return _ordered(ccnet_buckets(
         spark.table("documents"), lang_col="lang", model="trigram",
         model_basis="text",
-    ).orderBy("doc_id")
+    ), "doc_id")
 
 
 _CCNET_LM3_ORACLE = (
@@ -7435,7 +7453,6 @@ def _crawl_robots_df(spark: SparkSession) -> DataFrame:
 
 def _crawl_stages(
     spark: SparkSession,
-    persist: bool = False,
     max_per_domain: "int | None" = None,
 ):
     from hdk_spark.operators.crawl import crawl_curate
@@ -7445,7 +7462,6 @@ def _crawl_stages(
         _crawl_robots_df(spark),
         langs=list(_CRAWL_LANGS),
         max_per_domain=max_per_domain,
-        persist_stages=persist,
     )
 
 
@@ -7463,13 +7479,14 @@ def q_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (schema, gate semantics, extraction text, dedup keep rule)
     changes the final rows."""
     _tables(spark, sf_dir)
-    # persist=True (r14b): even this SINGLE action re-derives shared
-    # funnel stages per join branch (kept feeds ccnet AND the url
-    # join-back; annotated feeds dedup AND the survivor join), so the
-    # WARC parse ran multiple times in one job — measured 7.5 s → 5.3 s
-    # at sf0.01 (3 interleaved rounds). Intra-run caching only: the
-    # stages rebuild from the parquet inputs on every invocation.
-    return _crawl_stages(spark, persist=True)["final"].orderBy("doc_id")
+    # crawl_curate caches its stages (r14b): even this SINGLE action
+    # re-derives shared funnel stages per join branch (kept feeds
+    # ccnet AND the url join-back; annotated feeds dedup AND the
+    # survivor join), so uncached the WARC parse ran multiple times in
+    # one job — measured 7.5 s → 5.3 s at sf0.01 (3 interleaved
+    # rounds). Intra-run caching only: the stages rebuild from the
+    # parquet inputs on every invocation.
+    return _ordered(_crawl_stages(spark)["final"], "doc_id")
 
 
 def _crawl_kept_cte() -> str:
@@ -7560,7 +7577,7 @@ ORACLES["crawl_pipeline"] = _crawl_pipeline_oracle()
 
 def q_crawl_pipeline_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The crawl funnel: per-stage survivor counts of the SAME
-    composed run (operators/crawl.py::stage_counts, stages persisted
+    composed run (operators/crawl.py::stage_counts, stages cached
     so the funnel is one job per stage, not a WARC re-parse per
     count). The oracle computes each count independently from the
     planted gate arithmetic — a stage silently passing too many or
@@ -7568,7 +7585,9 @@ def q_crawl_pipeline_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     _tables(spark, sf_dir)
     from hdk_spark.operators.crawl import stage_counts
 
-    return stage_counts(_crawl_stages(spark, persist=True)).orderBy("stage")
+    st = _crawl_stages(spark)
+    return _attach_caches(
+        stage_counts(st).orderBy("stage"), _caches_of(st["final"]))
 
 
 _CRAWL_STAGES_ORACLE = (
@@ -7701,11 +7720,11 @@ def q_text_trigram_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _tables(spark, sf_dir)
     docs = spark.table("documents")
-    return trigram_logprob(
+    return _ordered(trigram_logprob(
         docs.filter(F.col("source") == "src0"),
         model_df=docs.filter(F.col("source") != "src0"),
         basis="text",
-    ).orderBy("doc_id")
+    ), "doc_id")
 
 
 _TRIGRAM_CROSS_ORACLE = (
@@ -7729,12 +7748,9 @@ def q_crawl_pipeline_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     set — bucket assignments shift vs crawl_pipeline, pinning that the
     model follows the last thinning stage."""
     _tables(spark, sf_dir)
-    # persist=True (r14b): same single-action branch-recompute fix as
-    # q_crawl_pipeline (measured there); the domain-cap stage adds one
-    # more join-back branch over the persisted relation.
-    return _crawl_stages(
-        spark, persist=True, max_per_domain=2
-    )["final"].orderBy("doc_id")
+    # the domain-cap stage adds one more join-back branch over the
+    # cached relation
+    return _ordered(_crawl_stages(spark, max_per_domain=2)["final"], "doc_id")
 
 
 SPARK_IMPLS["crawl_pipeline_capped"] = q_crawl_pipeline_capped
@@ -8005,13 +8021,12 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # several driver-coordinated actions over it) — persist the
     # survivor relation (ids + text, corpus-bounded) so the chain runs
     # once, not once per downstream action.
-    s2 = s1.join(removed, "doc_id", "left_anti").persist()
+    s2, caches = _persist_internal(s1.join(removed, "doc_id", "left_anti"))
     emb = spark.table("embeddings").join(
         s2.select(F.col("doc_id").alias("vec_id")), "vec_id"
     )
-    s3 = semantic_dedup(emb, "vec_id", "embedding", threshold=0.4).filter(
-        "kept"
-    )
+    sem = semantic_dedup(emb, "vec_id", "embedding", threshold=0.4)
+    s3 = sem.filter("kept")
 
     def stage(name: str, frame: DataFrame, idc: str) -> DataFrame:
         return frame.agg(
@@ -8019,11 +8034,12 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(idc).cast("bigint").alias("id_sum"),
         ).select(F.lit(name).alias("stage"), "n_docs", "id_sum")
 
-    return (
+    return _attach_caches(
         stage("0_input", s0, "doc_id")
         .unionAll(stage("1_exact", s1, "doc_id"))
         .unionAll(stage("2_neardup", s2, "doc_id"))
-        .unionAll(stage("3_semantic", s3, "vec_id"))
+        .unionAll(stage("3_semantic", s3, "vec_id")),
+        caches + _caches_of(sem),
     )
 
 
@@ -9109,13 +9125,14 @@ def q_training_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _cp(frame: DataFrame) -> DataFrame:
         return frame.localCheckpoint()
 
-    st = _crawl_stages(spark, persist=True)
+    st = _crawl_stages(spark)
     d = F.col("doc_id")
     s0 = (
         st["final"].select("doc_id", "lang", "bucket")
         .join(st["url_dedup"].select("doc_id", "text"), "doc_id")
     )
     s0 = _cp(s0)
+    release_caches(st["final"])  # nothing after the checkpoint reads them
     s1 = _cp(
         s0.filter(F.col("bucket") != "tail").select("doc_id", "text", "lang")
     )
@@ -9145,17 +9162,15 @@ def q_training_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     s4 = _cp(s3.join(removed, "doc_id", "left_anti"))
-    kept_sem = (
-        semantic_dedup(
-            spark.table("embeddings").join(
-                s4.select(d.alias("vec_id")), "vec_id"
-            ),
-            "vec_id", "embedding", threshold=0.3,
-        )
-        .filter("kept")
-        .select(F.col("vec_id").alias("doc_id"))
+    sem = semantic_dedup(
+        spark.table("embeddings").join(
+            s4.select(d.alias("vec_id")), "vec_id"
+        ),
+        "vec_id", "embedding", threshold=0.3,
     )
+    kept_sem = sem.filter("kept").select(F.col("vec_id").alias("doc_id"))
     s5 = _cp(s4.join(kept_sem, "doc_id"))
+    release_caches(sem)
     s6 = _cp(
         s5.filter(F.round(quality_score(F.col("text")), 6) >= 0.52)
     )
@@ -10004,7 +10019,7 @@ def q_text_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdk_spark.operators.text import kneser_ney_logprob
 
     _tables(spark, sf_dir)
-    return kneser_ney_logprob(spark.table("documents")).orderBy("doc_id")
+    return _ordered(kneser_ney_logprob(spark.table("documents")), "doc_id")
 
 
 _KNESER_NEY_ORACLE = r"""
@@ -10081,9 +10096,9 @@ def q_text_ccnet_buckets_kn3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdk_spark.operators.text import ccnet_buckets
 
     _tables(spark, sf_dir)
-    return ccnet_buckets(
+    return _ordered(ccnet_buckets(
         spark.table("documents"), lang_col="lang", model="kn3"
-    ).orderBy("doc_id")
+    ), "doc_id")
 
 
 # the KN replay as a nested WITH, its tail re-aimed at the bucket
@@ -10510,10 +10525,10 @@ def q_pack_materialize_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = materialize_chunks(
         toks, "doc_id", "tokens", budget=64, n_shards=4, seed=0
     )
-    return out.select(
+    return _attach_caches(out.select(
         "shard", "chunk_id", "n_tokens", "n_docs",
         F.md5(F.encode(F.array_join("tokens", "|"), "utf-8")).alias("digest"),
-    ).orderBy("shard", "chunk_id")
+    ).orderBy("shard", "chunk_id"), _caches_of(out))
 
 
 def _materialize_oracle() -> str:
@@ -11362,7 +11377,7 @@ def q_similarity_contrastive(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.table("embeddings"),
         pos_threshold=0.35, neg_lo=0.2, neg_hi=0.35,
     )
-    return out.orderBy("anchor")
+    return _ordered(out, "anchor")
 
 
 def _contrastive_oracle() -> str:
@@ -11909,9 +11924,9 @@ def q_dedup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_pct=80, seed=11,
     )
     out = split_leakage_audit(pairs, assign)
-    return out.select(
+    return _attach_caches(out.select(
         "id_a", "id_b", "cosine", "split_a", "split_b"
-    ).orderBy("id_a", "id_b")
+    ).orderBy("id_a", "id_b"), _caches_of(pairs))
 
 
 def _split_leakage_oracle() -> str:
@@ -12312,7 +12327,7 @@ def q_similarity_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.table("embeddings"), [0, 1, 2, 3, 4],
         k=5, n_planes=4, n_probes=5,
     )
-    return out.orderBy("qid", "rank")
+    return _ordered(out, "qid", "rank")
 
 
 _MP_FLOAT_VSOURCE = """
@@ -12700,7 +12715,10 @@ def q_stats_mg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     kw = dict(k=5, n_shards=4, hash_basis="md5")
     a = mg_summary(docs.filter(F.col("doc_id") % 2 == 0), "v", **kw)
     b = mg_summary(docs.filter(F.col("doc_id") % 2 == 1), "v", **kw)
-    return mg_merge(a, b, k=5).orderBy("shard", "item")
+    merged = mg_merge(a, b, k=5)
+    # the summaries are this row's own caches: its result frees them
+    return _attach_caches(
+        merged.orderBy("shard", "item"), _caches_of(merged) + (a, b))
 
 
 def _mg_half_sql(tag: str, parity: int) -> str:
@@ -12778,7 +12796,9 @@ def q_stats_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (F.col("doc_id") % 7).cast("string"))
     docs = spark.table("documents").select(item.alias("v"))
     summ = mg_summary(docs, "v", k=5, n_shards=4, hash_basis="md5")
-    return mg_heavy_hitters(summ, phi=0.02, k=5)
+    hh = mg_heavy_hitters(summ, phi=0.02, k=5)
+    # the summary is this row's own cache: its result frees it
+    return _attach_caches(hh, _caches_of(hh) + (summ,))
 
 
 _MG_HH_ORACLE = f"""
@@ -12832,12 +12852,13 @@ def q_stats_mg_group_hh(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 2).alias("p"),
     )
     kw = dict(k=3, n_shards=2, hash_basis="md5")
-    merged = mg_merge_by_group(
-        mg_summary_by_group(docs.filter("p = 0"), "g", "v", **kw),
-        mg_summary_by_group(docs.filter("p = 1"), "g", "v", **kw),
-        k=3,
-    )
-    return mg_heavy_hitters_by_group(merged, phi=0.1, k=3)
+    halves = [mg_summary_by_group(docs.filter(f"p = {p}"), "g", "v", **kw)
+              for p in (0, 1)]
+    merged = mg_merge_by_group(*halves, k=3)
+    hh = mg_heavy_hitters_by_group(merged, phi=0.1, k=3)
+    # the summaries are this row's own caches: its result frees them
+    return _attach_caches(
+        hh, _caches_of(merged, hh) + tuple(halves))
 
 
 def _mg_group_half_sql(tag: str, parity: int) -> str:
@@ -13241,7 +13262,7 @@ def q_similarity_sq8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         None, [0, 1, 2, 3, 4],
         k=5, n_planes=4, n_probes=5, codes=coded, bounds=bounds,
     )
-    return out.orderBy("qid", "rank")
+    return _ordered(out, "qid", "rank")
 
 
 _SQ8_DEQ_LEAD = """dims AS (SELECT unnest(range(1, 65)) AS i),
@@ -13288,11 +13309,11 @@ def q_similarity_bitext(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _tables(spark, sf_dir)
     emb = spark.table("embeddings")
-    return bitext_mine(
+    return _ordered(bitext_mine(
         emb.filter(F.col("vec_id") % 2 == 0),
         emb.filter(F.col("vec_id") % 2 == 1),
         k=4, threshold=1.0, n_planes=4, n_probes=3, seed=7,
-    ).orderBy("src_id")
+    ), "src_id")
 
 
 def _bitext_oracle(
@@ -13641,8 +13662,8 @@ def q_stats_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.round(F.col("__ni") / F.col("__nu"), 4)
                 .alias("jaccard_true"))
     )
-    return est.crossJoin(F.broadcast(truth)).select(
-        "n_k", "n_inter", "jaccard_est", "jaccard_true")
+    return _attach_caches(est.crossJoin(F.broadcast(truth)).select(
+        "n_k", "n_inter", "jaccard_est", "jaccard_true"), _caches_of(est))
 
 
 _KMV_JACCARD_ORACLE = f"""
@@ -13704,7 +13725,7 @@ def q_stats_kmv_set_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("__ni") / F.col("__na"), 4).alias("cont_a_true"),
         F.round(F.col("__ni") / F.col("__nb"), 4).alias("cont_b_true"),
     )
-    return est.crossJoin(F.broadcast(truth))
+    return _attach_caches(est.crossJoin(F.broadcast(truth)), _caches_of(est))
 
 
 _KMV_SET_STATS_ORACLE = f"""
@@ -14295,8 +14316,8 @@ def q_stats_kmv_group_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("v"),
     )
     summ = kmv_by_group(src, "g", "v", k=64, hash_basis="md5")
-    return kmv_pairwise_stats(summ, k=64, hash_basis="md5") \
-        .orderBy("grp_a", "grp_b")
+    return _ordered(
+        kmv_pairwise_stats(summ, k=64, hash_basis="md5"), "grp_a", "grp_b")
 
 
 _KMV_GROUP_PAIRWISE_ORACLE = f"""

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from hdk_spark.operators.caches import _attach_caches, _caches_of, _persist_internal
+
 __all__ = ["crawl_curate", "stage_counts"]
 
 
@@ -43,7 +45,6 @@ def crawl_curate(
     lang_model: "dict[str, list[float]] | None" = None,
     ccnet_model: str = "unigram",
     max_per_domain: "int | None" = None,
-    persist_stages: bool = False,
 ) -> "dict[str, DataFrame]":
     """Run the full crawl-curation composition over a binary WARC
     column and a per-domain robots relation (reg_domain, robots_txt).
@@ -61,12 +62,14 @@ def crawl_curate(
                        (deterministic hash order — web.domain_cap)
       ``final``        (doc_id, url, lang, n_tokens, avg_logprob, bucket)
 
-    ``persist_stages=True`` persists the payload relations the stages
-    share (pages, the enriched extraction) plus the narrow decision
-    relations — REQUIRED when the caller will trigger more than one
-    action over the funnel (e.g. :func:`stage_counts` after collecting
-    ``final``); without it every count re-parses the WARC bytes
-    upstream. The WARC id column is the pipeline's ``doc_id``.
+    The payload relations the stages share (pages, the extraction),
+    the narrow decision relations and each stage's output are cached,
+    so every stage runs once however many actions the caller triggers
+    over the funnel (e.g. :func:`stage_counts` after collecting
+    ``final``); even one action over ``final`` reads several of them
+    more than once. All of them are attached to ``stages["final"]``:
+    after the last action, ``release_caches(stages["final"])`` frees
+    them. The WARC id column is the pipeline's ``doc_id``.
 
     Scale shape (guide §8 decide-on-metadata / attach-payload-once,
     r15): text extraction is ONE map-only pass over the page payload;
@@ -88,12 +91,19 @@ def crawl_curate(
     The CCNet LM corpus is built AFTER the last thinning stage, so
     duplicate pages can't skew the model distribution."""
     from hdk_spark.operators.html import html_extract
-    from hdk_spark.operators.text import ccnet_buckets, lang_id_ngram
+    from hdk_spark.operators.text import CCNET_MODELS, ccnet_buckets, lang_id_ngram
     from hdk_spark.operators.warc import warc_records
     from hdk_spark.operators.web import parse_robots, robots_filter, url_dedup
 
+    if ccnet_model not in CCNET_MODELS:  # before any stage is cached
+        raise ValueError(
+            f"ccnet_model must be one of {CCNET_MODELS}, got {ccnet_model!r}")
+    caches: list = []
+
     def _p(df: DataFrame) -> DataFrame:
-        return df.persist() if persist_stages else df
+        df, own = _persist_internal(df)
+        caches.extend(own)
+        return df
 
     stages: "dict[str, DataFrame]" = {}
     recs = warc_records(warcs, data_col=data_col, id_col=warc_id_col)
@@ -173,20 +183,22 @@ def crawl_curate(
 
     # the LM corpus and the NTILE ranking run over the one
     # text-carrying relation of the last thinning stage
-    final = (
-        ccnet_buckets(kept, lang_col="lang_pred", model=ccnet_model)
-        .join(kept_ids.select("doc_id", "url"), "doc_id")
+    buckets = ccnet_buckets(kept, lang_col="lang_pred", model=ccnet_model)
+    final = _p(
+        buckets.join(kept_ids.select("doc_id", "url"), "doc_id")
         .select("doc_id", "url", "lang", "n_tokens", "avg_logprob", "bucket")
     )
-    stages["final"] = _p(final)
+    # a fresh frame over the cached plan: the registry may hand the
+    # same cached frame to another call, which must not share this list
+    stages["final"] = _attach_caches(
+        final.select("*"), tuple(caches) + _caches_of(buckets))
     return stages
 
 
 def stage_counts(stages: "dict[str, DataFrame]") -> DataFrame:
     """Funnel report for :func:`crawl_curate`'s stage dict: one row
-    (stage, n_docs) per stage. Each count is a 1-row aggregate; union
-    of bounded relations — call with ``persist_stages=True`` upstream
-    so the funnel triggers one job per stage, not a WARC re-parse."""
+    (stage, n_docs) per stage. Each count is a 1-row aggregate over
+    the stage's cached relation; union of bounded relations."""
     from functools import reduce
 
     counts = [

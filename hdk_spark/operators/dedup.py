@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from hdk_spark.functions.scalar import round6, sql_ident
-from hdk_spark.operators.sketches import _attach_caches, _persist_internal
+from hdk_spark.operators.caches import _attach_caches, _persist_internal
 
 # ---------------------------------------------------------------------------
 # exact
@@ -452,7 +452,6 @@ def minhash_lsh_dedup(
     threshold: float = 0.5,
     seed: int = 42,
     max_bucket_size: int | None = 1000,
-    persist_signatures: bool = True,
     hash_basis: str = "crc32",
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding, verified with exact
@@ -489,13 +488,11 @@ def minhash_lsh_dedup(
        group pairs emit off each group's band-0 bucket row with
        jaccard_est 1.0 (identical signatures agree everywhere).
 
-    ``persist_signatures`` keeps the collapsed signature relation in
-    cluster cache: dedup workflows typically re-query it (other
-    thresholds, incremental batches), and Spark's cache manager
-    plan-matches repeated calls past the Python sketch stage. The
-    cache is operator-internal: materialize the result, then
-    ``release_caches(result)`` frees it (refcounted across calls that
-    share it, as for the sketch operators).
+    Nothing is cached: the collapsed signature relation has one
+    consumer (the bucket groupBy), so the plan is one lineage and a
+    cache would only add a write of the signatures. A caller that
+    re-queries the same input at other thresholds can cache the input
+    itself.
 
     ``max_bucket_size`` bounds both degenerate band buckets and clone
     groups (> cap members pair quadratically in the OUTPUT itself);
@@ -526,9 +523,6 @@ def minhash_lsh_dedup(
             "gids",
             F.expr(f"CASE WHEN size(gids) <= {int(max_bucket_size)} THEN gids ELSE array(id) END"),
         )
-    caches = ()
-    if persist_signatures:
-        groups, caches = _persist_internal(groups)
     # member lists ride along with the signature so cross-group pair
     # expansion is a projection explode — no join back to the groups.
     # Per-doc band hashes are computed ONCE into `bhs` and reused for
@@ -549,10 +543,9 @@ def minhash_lsh_dedup(
     # intra-group pairs are emitted off each group's single band-0
     # bucket row below, so the groups relation has exactly ONE
     # consumer — the old shape union'd a second scan of `groups`,
-    # and that second consumer either re-read the cache per iteration
-    # (persist_signatures=True) or turned the signature exchange into
-    # a ReusedExchange, which AQE refuses to coalesce
-    # (persist_signatures=False — the 03b4eb4 scale question). A
+    # and that second consumer either re-read a signature cache or
+    # turned the signature exchange into a ReusedExchange, which AQE
+    # refuses to coalesce (the 03b4eb4 scale question). A
     # singleton band-0 bucket contributes no cross pairs (the
     # transform over a 1-element ms yields nothing) and its intra
     # pairs exactly when the lone member is a clone group.
@@ -613,12 +606,12 @@ def minhash_lsh_dedup(
 
     # every (ga × gb) member pair of every emitted pair, normalized to
     # id_a < id_b, in one generator
-    return _attach_caches(buckets.selectExpr(
+    return buckets.selectExpr(
         f"inline(flatten(transform(concat({cross_arr}, {intra_arr}), "
         "p -> flatten(transform(p.ga, ma -> transform(p.gb, mb -> named_struct("
         "'id_a', least(ma, mb), 'id_b', greatest(ma, mb), "
         "'jaccard_est', round(p.jaccard_est, 6))))))))"
-    ), caches)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -841,10 +834,10 @@ def embedding_neardup_pairs(
 
     d = dim if dim is not None else _vec_dim(df, vec_col)
     planes = rademacher_planes(n_planes * n_tables, d, seed)
-    # Persist: the banded self-join references this subplan twice and the
-    # rescore re-attaches vectors by id — same no-common-subplan-reuse
-    # argument as minhash_lsh_dedup's signature persist.
-    base = base.persist()
+    # Cached: the banded self-join reads this subplan twice and the
+    # rescore re-attaches vectors by id twice (Spark reuses no common
+    # subplan across them); release_caches(result) frees it.
+    base, caches = _persist_internal(base)
     bucketed = base.selectExpr(
         "id", f"explode({_table_buckets('v', planes, n_planes, n_tables)}) AS tb"
     ).selectExpr("id", "tb.tbl AS tbl", "tb.bkt AS bkt")
@@ -876,12 +869,13 @@ def embedding_neardup_pairs(
     # plan-audited). nd_identity blocks the substitution; row volume
     # is unchanged (the condition was evaluated post-match anyway).
     cos = F.expr(_cosine("va", "vb", "na", "nb"))
-    return (
+    return _attach_caches(
         paired.select(
             "id_a", "id_b", nd_identity(cos).alias("cosine")
         )
         .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", round6("cosine").alias("cosine"))
+        .select("id_a", "id_b", round6("cosine").alias("cosine")),
+        caches,
     )
 
 
@@ -940,8 +934,10 @@ def semantic_dedup(
         raise ValueError(f"mode must be 'exact' or 'lsh', got {mode!r}")
     cents = kmeans_centroids(df, k, iters, id_col, vec_col, seed)
     assigned = _assign(df, id_col, vec_col, cents)
-    # referenced by both join sides + the final labeling
-    base = _vec_base(assigned, id_col, vec_col, "cluster", "cdist").persist()
+    # read by both join sides, the eager connected-components job and
+    # the final labeling; release_caches(result) frees it
+    base, caches = _persist_internal(
+        _vec_base(assigned, id_col, vec_col, "cluster", "cdist"))
 
     if mode == "lsh":
         dim = len(cents[min(cents)])
@@ -990,12 +986,12 @@ def semantic_dedup(
     w = Window.partitionBy("group_id").orderBy(
         F.col("cdist").desc(), F.col("id").asc()
     )
-    return labeled.select(
+    return _attach_caches(labeled.select(
         F.col("id").alias(id_col),
         "cluster",
         "group_id",
         (F.row_number().over(w) == 1).alias("kept"),
-    )
+    ), caches)
 
 
 def _vec_dim(df: DataFrame, vec_col: str, sample: int = 101) -> int:

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from hdk_spark.operators.caches import _attach_caches, _persist_internal
 from hdk_spark.operators.sampling import hash_bucket
 
 __all__ = ["pack_sequences", "pack_sequences_split", "materialize_chunks", "pack_stats"]
@@ -185,17 +186,21 @@ def materialize_chunks(
     the token arrays (map-only slice per piece) + ONE
     groupBy(shard, chunk_id) whose per-group state is budget-bounded
     (≤ budget tokens regardless of corpus size — the reason to group
-    by CHUNK, never by document)."""
-    toks = F.col(tokens_col)
-    counts = df.select(
-        F.col(key_col), F.size(toks).cast("long").alias("__nt")
+    by CHUNK, never by document). The (key, tokens) relation feeds
+    both the counts and the token join, so it is cached (a tokenizer
+    upstream, e.g. ``bpe.unigram_encode``'s Python kernel, then runs
+    once); ``release_caches(result)`` frees it."""
+    src, caches = _persist_internal(
+        df.select(F.col(key_col), F.col(tokens_col).alias("__toks")))
+    counts = src.select(
+        F.col(key_col), F.size("__toks").cast("long").alias("__nt")
     )
     plan = pack_sequences_split(
         counts, key_col, "__nt", budget=budget, n_shards=n_shards, seed=seed
     )
     h = hash_bucket(F.col(key_col), 1_000_000_007, seed)
     pieces = (
-        plan.join(df.select(F.col(key_col), toks.alias("__toks")), key_col)
+        plan.join(src, key_col)
         .select(
             "shard",
             "chunk_id",
@@ -211,7 +216,7 @@ def materialize_chunks(
         )
     )
     seq = F.flatten(F.transform(F.col("__ps"), lambda s: s["p"]))
-    return (
+    return _attach_caches(
         pieces.groupBy("shard", "chunk_id")
         .agg(F.sort_array(F.collect_list("__s")).alias("__ps"))
         .select(
@@ -224,7 +229,8 @@ def materialize_chunks(
             "shard", "chunk_id",
             F.size("tokens").cast("long").alias("n_tokens"),
             "tokens", "n_docs",
-        )
+        ),
+        caches,
     )
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from hdk_spark.functions.scalar import round6, round6_sql, sql_ident
-from hdk_spark.operators.sketches import _attach_caches, _persist_internal
+from hdk_spark.operators.caches import _attach_caches, _caches_of, _persist_internal
 
 
 def _dot(a: str, b: str) -> str:
@@ -332,7 +332,9 @@ def ann_ivf_topk(
         assign_col = _assign(F.col("v"))
         probe_col = _probe(F.col("v"))
 
-    base = base.withColumn("list_id", assign_col).persist()
+    # read by the query side and the candidate join;
+    # release_caches(result) frees it
+    base, caches = _persist_internal(base.withColumn("list_id", assign_col))
     queries = (
         base.where(_id_in(query_ids))
         .select(
@@ -346,7 +348,7 @@ def ann_ivf_topk(
         F.broadcast(queries),
         (F.col("list_id") == F.col("qlist")) & (F.col("id") != F.col("qid")),
     ).select("qid", "qv", "qnorm", "id", "v", "norm").dropDuplicates(["qid", "id"])
-    return _topk_rank(_scored(cand), k)
+    return _attach_caches(_topk_rank(_scored(cand), k), caches)
 
 
 def ann_lsh_topk(
@@ -837,7 +839,8 @@ def _asym_anchor_pairs(
 
     d = dim if dim is not None else _vec_dim(df, vec_col)
     planes = rademacher_planes(n_planes * n_tables, d, seed)
-    base = _vec_base(df, id_col, vec_col).persist()
+    # read by both candidate sides and both re-attach joins
+    base, caches = _persist_internal(_vec_base(df, id_col, vec_col))
     bucketed = base.selectExpr(
         "id", f"explode({_table_buckets('v', planes, n_planes, n_tables)}) AS tb"
     ).selectExpr("id", "tb.tbl AS tbl", "tb.bkt AS bkt")
@@ -864,10 +867,11 @@ def _asym_anchor_pairs(
                     F.col("norm").alias("nb")),
         "other",
     )
-    return (
+    return _attach_caches(
         paired.withColumn("cosine", F.expr(_cosine("va", "vb", "na", "nb")))
         .filter(F.col("cosine") >= floor)
-        .select("anchor", "other", round6("cosine").alias("cosine"))
+        .select("anchor", "other", round6("cosine").alias("cosine")),
+        caches,
     )
 
 
@@ -952,11 +956,13 @@ def mine_contrastive_pairs(
                 )
             ).alias("__e")
         ).select("__e.anchor", "__e.other", "__e.cosine")
+        caches = _caches_of(pairs)
     else:
         sym = _asym_anchor_pairs(
             df, id_col, vec_col, neg_lo, n_planes, n_tables, seed,
             dim, int(anchor_pct),
         )
+        caches = _caches_of(sym)
     cls = (
         F.when(F.col("cosine") >= pos_threshold, F.lit("P"))
         .when(F.col("cosine") < neg_hi, F.lit("N"))
@@ -982,7 +988,7 @@ def mine_contrastive_pairs(
             )
         ).alias("__n"),
     )
-    return (
+    return _attach_caches(
         folded.filter(F.col("__p").isNotNull() & F.col("__n").isNotNull())
         .select(
             "anchor",
@@ -990,7 +996,8 @@ def mine_contrastive_pairs(
             F.col("__p.cosine").alias("pos_cos"),
             F.col("__n.other").alias("negative"),
             F.col("__n.cosine").alias("neg_cos"),
-        )
+        ),
+        caches,
     )
 
 
@@ -1087,7 +1094,6 @@ def ann_multiprobe_topk(
         corpus = (
             _vec_base(df, id_col, vec_col, f"{_fold_plane_dots(sql_ident(vec_col), planes)} AS __dots")
             .selectExpr("id", "v", "norm", f"{_bucket_from_dots(n_planes)} AS b")
-            .persist()
         )
     else:
         from pyspark.sql.pandas.functions import pandas_udf
@@ -1112,8 +1118,10 @@ def ann_multiprobe_topk(
                 _sketch(F.col(vec_col)).alias("sk"),
             )
             .selectExpr("id", "v", "sk.norm AS norm", "sk.b AS b")
-            .persist()
         )
+    # read by the query side and the candidate join;
+    # release_caches(result) frees it
+    corpus, caches = _persist_internal(corpus)
     # query side: filter the PERSISTED hashed relation, so the query's
     # exact bucket b comes from the SAME kernel that bucketed the
     # corpus — a near-zero plane dot may get opposite signs from the
@@ -1137,7 +1145,7 @@ def ann_multiprobe_topk(
         .select("qid", "qv", "qnorm", "id", "v", "norm")
         .dropDuplicates(["qid", "id"])
     )
-    return _topk_rank(_scored(cand), k)
+    return _attach_caches(_topk_rank(_scored(cand), k), caches)
 
 
 # ---------------------------------------------------------------------------
@@ -1329,9 +1337,9 @@ def bitext_mine(
     the margin divide — replays as a SQL oracle.
 
     Scale shape: two map-only bucket projections (each corpus hashed
-    ONCE, persisted), one equi-join on bucket id, two windows over the
-    candidate relation sharing its (qid)/(tid) partitionings, one
-    filter. At 100 TB raise n_planes ≈ log₂(n) so buckets stay small —
+    ONCE), one equi-join on bucket id, two windows over the cached
+    candidate relation sharing its (qid)/(tid) partitionings
+    (``release_caches(result)`` frees it), one filter. At 100 TB raise n_planes ≈ log₂(n) so buckets stay small —
     ``n_planes=None`` derives exactly that, max(8, ⌈log₂(max(|src|,
     |tgt|))⌉), from two corpus counts (a bounded driver action, the
     same opt-in discipline as the trainers). The literal default stays
@@ -1397,11 +1405,11 @@ def bitext_mine(
     # persisted: three consumers (avg_q, avg_t, the final margin
     # join) over a 3-scalar-column candidate relation — the cheap
     # thing to cache, unlike the full-vector corpus relations
-    ranked = cand.select(
+    ranked, caches = _persist_internal(cand.select(
         "qid", "tid", "cosine",
         F.row_number().over(wq).alias("__rq"),
         F.row_number().over(wt).alias("__rt"),
-    ).persist()
+    ))
     # avg of each side's top-k candidate cosines — MICRO-QUANTIZED
     # (round(cos·1e9) summed in DECIMAL(38,0)): a plain double avg
     # sums in partial-agg arrival order, so near-boundary margins
@@ -1428,7 +1436,7 @@ def bitext_mine(
     wbest = Window.partitionBy("qid").orderBy(
         F.desc("__margin"), F.asc("tid")
     )
-    return (
+    return _attach_caches(
         scored.withColumn("__r", F.row_number().over(wbest))
         .filter((F.col("__r") == 1) & (F.col("__margin") >= threshold))
         .select(
@@ -1436,5 +1444,6 @@ def bitext_mine(
             F.col("tid").alias("tgt_id"),
             round6("cosine").alias("cosine"),
             round6("__margin").alias("margin"),
-        )
+        ),
+        caches,
     )

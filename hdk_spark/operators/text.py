@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hdk_spark.functions.scalar import round6, sql_ident, sql_string
+from hdk_spark.operators.caches import _attach_caches, _caches_of, _persist_internal
 
 # Tiny built-in stopword lists: enough signal for the heuristic, small
 # enough to inline as literals in both Spark and oracle SQL.
@@ -704,7 +705,8 @@ def unigram_logprob(
     score — deliberately NOT caching the exploded token relation
     (corpus-sized; the raw scan is cheaper to repeat than to
     materialize). The vocabulary is PERSISTED (vocab-sized) so its
-    total doesn't trigger a third pass. Broadcast policy: an unbounded
+    total doesn't trigger a third pass; ``release_caches(result)``
+    frees it. Broadcast policy: an unbounded
     corpus-derived vocabulary must NOT be force-broadcast (at 100 TB
     of web text the raw vocab is O(10^8-9) rows — a forced broadcast
     overrides AQE's size check and OOMs every executor). So the model
@@ -721,7 +723,8 @@ def unigram_logprob(
     mtok = src.select(
         F.explode(tokenize(F.lower(F.col(model_text_col or text_col)))).alias("token")
     )
-    vocab = mtok.groupBy("token").agg(F.count(F.lit(1)).alias("__c")).persist()
+    vocab, caches = _persist_internal(
+        mtok.groupBy("token").agg(F.count(F.lit(1)).alias("__c")))
     total = vocab.agg(F.sum("__c").alias("__total"))
     if broadcast_model is None:
         broadcast_model = min_count > 1
@@ -745,10 +748,10 @@ def unigram_logprob(
             F.coalesce(F.col("__c"), fallback) / F.col("__total").cast("double")
         ).alias("__lp"),
     )
-    return scored.groupBy(id_col).agg(
+    return _attach_caches(scored.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         round6(F.avg("__lp")).alias("avg_logprob"),
-    )
+    ), caches)
 
 
 def source_kl_divergence(
@@ -779,21 +782,20 @@ def source_kl_divergence(
     equi-join on ``token`` from the measured size (the group-total join
     stays forced — bounded by the number of groups).
     """
-    gt = (
+    gt, caches = _persist_internal(
         df.select(
             F.col(group_col).alias("grp"),
             F.explode(tokenize(F.lower(F.col(text_col)))).alias("token"),
         )
         .groupBy("grp", "token")
         .agg(F.count(F.lit(1)).alias("__c"))
-        .persist()
     )
     corpus = gt.groupBy("token").agg(F.sum("__c").alias("__cc"))
     corpus_total = corpus.agg(F.sum("__cc").alias("__ct"))
     grp_total = gt.groupBy("grp").agg(F.sum("__c").alias("__gt"))
     p_grp = F.col("__c") / F.col("__gt").cast("double")
     p_corpus = F.col("__cc") / F.col("__ct").cast("double")
-    return (
+    return _attach_caches(
         gt.join(corpus, "token")
         .join(F.broadcast(grp_total), "grp")
         .crossJoin(F.broadcast(corpus_total))
@@ -801,7 +803,8 @@ def source_kl_divergence(
         .agg(
             F.first("__gt").cast("long").alias("n_tokens"),
             round6(F.sum(p_grp * F.log(p_grp / p_corpus))).alias("kl"),
-        )
+        ),
+        caches,
     )
 
 
@@ -925,7 +928,8 @@ def bigram_logprob(
         mbigrams = explode_bigrams(model_df, model_text_col or text_col, keep_id=False)
     else:
         mbigrams = bigrams.select("w1", "w2")
-    counts = mbigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("__c")).persist()
+    counts, caches = _persist_internal(
+        mbigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("__c")))
     ctx = counts.groupBy("w1").agg(F.sum("__c").alias("__ctx"))
     if broadcast_model is None:
         broadcast_model = min_count > 1
@@ -954,10 +958,10 @@ def bigram_logprob(
         F.col(id_col),
         F.log(cnt / F.col("__ctx").cast("double")).alias("__lp"),
     )
-    return scored.groupBy(id_col).agg(
+    return _attach_caches(scored.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_bigrams"),
         round6(F.avg("__lp")).alias("avg_logprob"),
-    )
+    ), caches)
 
 
 def trigram_logprob(
@@ -1107,11 +1111,10 @@ def trigram_logprob(
 
     pos = positions(df, text_col, keep_id=True)
     if model_df is not None:
-        mpos = positions(
-            model_df, model_text_col or text_col, keep_id=False
-        ).persist()
+        mpos = positions(model_df, model_text_col or text_col, keep_id=False)
     else:
-        mpos = pos.drop(id_col).persist()
+        mpos = pos.drop(id_col)
+    mpos, caches = _persist_internal(mpos)
     # tri carries its context key so the context total attaches
     # vocab-side (model3), not per-position
     tri = mpos.filter(has1).groupBy(*tri_full).agg(
@@ -1155,10 +1158,10 @@ def trigram_logprob(
             ).alias("__lp"),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return _attach_caches(scored.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_trigrams"),
         round6(F.avg("__lp")).alias("avg_logprob"),
-    )
+    ), caches)
 
 
 # ---------------------------------------------------------------------------
@@ -2172,6 +2175,9 @@ def vocab_coverage(
     )
 
 
+CCNET_MODELS = ("unigram", "trigram", "kn3")
+
+
 def ccnet_buckets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -2216,27 +2222,29 @@ def ccnet_buckets(
     from pyspark.sql.window import Window
 
     if model == "unigram":
-        scored = unigram_logprob(
+        lm = scored = unigram_logprob(
             df, id_col, text_col, min_count=min_count,
             model_df=model_df, model_text_col=model_text_col,
         )
     elif model == "trigram":
-        scored = trigram_logprob(
+        lm = trigram_logprob(
             df, id_col, text_col,
             model_df=model_df, model_text_col=model_text_col,
             basis=model_basis,
-        ).withColumnRenamed("n_trigrams", "n_tokens")
+        )
+        scored = lm.withColumnRenamed("n_trigrams", "n_tokens")
     elif model == "kn3":
         # the literal KenLM smoothing (interpolated Kneser-Ney) — the
         # closest to Wenzek et al.'s actual scorer; same <3-token drop
         # convention as 'trigram'
-        scored = kneser_ney_logprob(
+        lm = kneser_ney_logprob(
             df, id_col, text_col,
             model_df=model_df, model_text_col=model_text_col,
-        ).withColumnRenamed("n_trigrams", "n_tokens")
+        )
+        scored = lm.withColumnRenamed("n_trigrams", "n_tokens")
     else:
         raise ValueError(
-            f"model must be 'unigram', 'trigram' or 'kn3', got {model!r}"
+            f"model must be one of {CCNET_MODELS}, got {model!r}"
         )
     if lang_col is not None:
         langs = df.select(F.col(id_col), F.col(lang_col).alias("lang"))
@@ -2247,7 +2255,7 @@ def ccnet_buckets(
         F.desc("avg_logprob"), F.asc(id_col)
     )
     nt = F.ntile(3).over(w)
-    return j.select(
+    return _attach_caches(j.select(
         F.col(id_col),
         "lang",
         "n_tokens",
@@ -2256,7 +2264,7 @@ def ccnet_buckets(
         .when(nt == 2, F.lit("middle"))
         .otherwise(F.lit("tail"))
         .alias("bucket"),
-    )
+    ), _caches_of(lm))
 
 
 def kneser_ney_logprob(
@@ -2298,12 +2306,12 @@ def kneser_ney_logprob(
     digits.
 
     Scale shape — the [[trigram_logprob]] discipline plus distinct
-    aggregates: ONE position explode per side; the model side is
-    persisted once and every count relation (trigram counts + context
-    totals/type counts, continuation pair counts, middle-type counts,
-    follower types, continuation unigrams, one 1-row type total) is a
-    partial-agg groupBy or count-distinct over that cache, all
-    vocab-sized. Scoring is six AQE-decided equi-joins of the position
+    aggregates: ONE position explode per side; the trigram counts are
+    cached and every other count relation (context totals/type counts,
+    continuation pair counts, middle-type counts, follower types,
+    continuation unigrams, one 1-row type total) is a partial-agg
+    groupBy over that cache or over the cached continuation pair
+    counts, all vocab-sized. ``release_caches(result)`` frees both. Scoring is six AQE-decided equi-joins of the position
     relation against vocab-sized relations (never force-broadcast —
     the corpus-derived-model rule) plus the 1-row broadcast total."""
     d3, d2 = (float(x) for x in discounts)
@@ -2344,24 +2352,26 @@ def kneser_ney_logprob(
         )
 
     if model_df is None:
-        model_pos = positions(df, text_col, keep_id=False).persist()
+        model_pos = positions(df, text_col, keep_id=False)
     else:
         model_pos = positions(
             model_df, model_text_col or text_col, keep_id=False
-        ).persist()
+        )
 
-    tri = model_pos.groupBy("w1", "w2", "w3").agg(
+    # tri and cont2 each feed several count relations and a scoring
+    # join; the positions feed only tri, so they are not cached
+    tri, caches = _persist_internal(model_pos.groupBy("w1", "w2", "w3").agg(
         F.count(F.lit(1)).cast("long").alias("c3")
-    ).persist()
+    ))
     # trigram context: total count + distinct-follower types
     ctx3 = tri.groupBy("w1", "w2").agg(
         F.sum("c3").cast("long").alias("ctx3_c"),
         F.count(F.lit(1)).cast("long").alias("ctx3_n1"),
     )
     # continuation pair count N1+(·w2w3) and middle-type count N1+(·w2·)
-    cont2 = tri.groupBy("w2", "w3").agg(
+    cont2, cont2_cache = _persist_internal(tri.groupBy("w2", "w3").agg(
         F.count(F.lit(1)).cast("long").alias("cont2")
-    ).persist()
+    ))
     mid = tri.groupBy("w2").agg(
         F.count(F.lit(1)).cast("long").alias("mid_n")
     )
@@ -2410,12 +2420,12 @@ def kneser_ney_logprob(
         + F.lit(d3) * F.col("ctx3_n1").cast("double")
         / F.col("ctx3_c").cast("double") * p2,
     ).otherwise(p2)
-    return scored.select(id_col, F.log(p3).alias("__lp")).groupBy(
+    return _attach_caches(scored.select(id_col, F.log(p3).alias("__lp")).groupBy(
         id_col
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n_trigrams"),
         round6(F.avg("__lp")).alias("avg_logprob"),
-    )
+    ), caches + cont2_cache)
 
 
 def dedup_doc_lines(

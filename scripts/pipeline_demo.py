@@ -45,7 +45,6 @@ def run(spark, sf_dir: str, out_dir: str) -> "dict[str, int]":
         mixture_sample,
         shuffle_shards,
     )
-    from hdk_spark.operators.sketches import release_caches
     from hdk_spark.operators.text import analyze, redact_pii
 
     load_tables(spark, sf_dir)
@@ -171,7 +170,6 @@ def run(spark, sf_dir: str, out_dir: str) -> "dict[str, int]":
     )
     stats["written"] = spark.read.parquet(
         os.path.join(out_dir, "corpus")).count()
-    release_caches(pairs)
     seg.unpersist()
     spark.catalog.dropTempView("final")
     return stats

@@ -49,12 +49,11 @@ def planted(spark):
 
 
 def test_crawl_funnel_and_gates(spark, planted):
+    from hdk_spark.operators.caches import release_caches
     from hdk_spark.operators.crawl import crawl_curate, stage_counts
 
     warcs, robots = planted
-    stages = crawl_curate(
-        warcs, robots, langs=["en", "de"], persist_stages=True
-    )
+    stages = crawl_curate(warcs, robots, langs=["en", "de"])
     assert list(stages) == [
         "http_gate", "robots_gate", "noindex_gate", "url_dedup", "final"
     ]
@@ -103,17 +102,18 @@ def test_crawl_funnel_and_gates(spark, planted):
     final = stages["final"].collect()
     assert {r["bucket"] for r in final} <= {"head", "middle", "tail"}
     assert all(r["n_tokens"] > 0 for r in final)
-    for df in stages.values():
-        df.unpersist()
+    # pages, extraction, robots allow, survivors, kept ids, the kept
+    # payload, final, and the unigram LM's vocabulary
+    assert release_caches(stages["final"]) == 8
 
 
 def test_crawl_domain_cap_stage(spark, planted):
+    from hdk_spark.operators.caches import release_caches
     from hdk_spark.operators.crawl import crawl_curate
 
     warcs, robots = planted
     stages = crawl_curate(
         warcs, robots, langs=["en", "de"], max_per_domain=1,
-        persist_stages=True,
     )
     assert "domain_cap" in stages
     capped = stages["domain_cap"].collect()
@@ -126,11 +126,11 @@ def test_crawl_domain_cap_stage(spark, planted):
     assert {r["doc_id"] for r in stages["final"].collect()} == {
         r["doc_id"] for r in capped
     }
-    for df in stages.values():
-        df.unpersist()
+    assert release_caches(stages["final"]) == 10  # + capped ids, payload
 
 
 def test_crawl_plan_no_cartesian(spark, planted):
+    from hdk_spark.operators.caches import release_caches
     from hdk_spark.operators.crawl import crawl_curate
 
     warcs, robots = planted
@@ -140,6 +140,7 @@ def test_crawl_plan_no_cartesian(spark, planted):
         df._jdf.queryExecution(), "formatted"
     )
     assert "CartesianProduct" not in tree
+    release_caches(df)
 
 
 def test_crawl_rejects_unknown_ccnet_model(spark, planted):

@@ -22,13 +22,20 @@ row's line in plans/audit.tsv. The row starts from an empty cache so
 a relation cached by an earlier test cannot change its plan. A plan
 change that is meant regenerates the row and commits the TSV diff
 with it: ``python scripts/plan_audit.py --only <row>[,<row>...]``
-(no argument: every row, about ten minutes)."""
+(no argument: every row, about ten minutes).
+
+Caches: after the audit, ``release_caches`` on the row's frame must
+leave Spark's cache manager empty. Every cache a row leaves is then
+one its result carries (hdk_spark/operators/caches.py); a bare
+``persist()`` anywhere on the row's path fails here and names the
+row."""
 
 import os
 
 import pytest
 
 import __spark_entry__ as entry_mod
+from hdk_spark.operators.caches import release_caches
 from scripts.plan_audit import COLUMNS, audit_plan, audited, read_tsv
 from tests.conftest import SF_CORRECT
 from tests.oracle_compare import assert_frames_match
@@ -72,6 +79,11 @@ def test_query_against_oracle(name, spark, duck):
     assert not diff, (
         f"{name}: plan audit differs: " + "; ".join(diff)
         + f". If the plan change is meant, run {regen} and commit the TSV.")
+    release_caches(spark_df)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty(), (
+        f"{name}: {cm.numCachedEntries()} cache(s) left that "
+        "release_caches(result) does not free")
 
 
 def test_no_duplicate_contract_row_registrations():

@@ -107,23 +107,18 @@ def test_minhash_lsh_has_no_cartesian(spark):
 def test_minhash_lsh_groups_single_consumer(spark):
     """The r15 banding restructure: intra-group pairs are emitted off
     the band-0 bucket rows, so the collapsed signature relation has
-    exactly ONE consumer — no Union of a second `groups` scan. With
-    persist_signatures=False the whole pipeline is then one lineage
+    exactly ONE consumer — no Union of a second `groups` scan. The
+    operator caches nothing, so the whole pipeline is one lineage
     (no ReusedExchange), which makes the signature exchange
     AQE-coalescible (reused exchanges keep the initial partition
     count — the 03b4eb4 scale question)."""
     from hdk_spark.operators.dedup import minhash_lsh_dedup
 
-    docs = spark.table("documents")
-    p = plan(minhash_lsh_dedup(docs, threshold=0.5))
+    p = plan(minhash_lsh_dedup(spark.table("documents"), threshold=0.5))
     assert "Union" not in p, "groups relation re-scanned + union'd"
-    p2 = plan(
-        minhash_lsh_dedup(docs, threshold=0.5, persist_signatures=False)
-    )
-    assert "Union" not in p2
-    assert "ReusedExchange" not in p2, (
-        "unpersisted pipeline must be a single lineage so AQE can "
-        "coalesce the signature exchange"
+    assert "ReusedExchange" not in p, (
+        "the pipeline must be a single lineage so AQE can coalesce the "
+        "signature exchange"
     )
 
 

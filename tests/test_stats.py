@@ -1533,14 +1533,29 @@ def test_release_caches_frees_internal_persists(spark):
     mg_heavy_hitters_by_group and dds_quantile_by_group, and (ADVICE
     r13) for the GLOBAL trio that had the same leak — mg_merge's
     tagged union, mg_heavy_hitters' summary, dds_quantile's sketch —
-    for minhash_lsh_dedup's signature groups, and for ann_lsh_topk's
-    bucket relation in both modes: the attached frames'
-    storage level actually clears, a second call is a no-op, and a
-    plain DataFrame returns 0."""
+    for ann_lsh_topk's bucket relation in both modes, and for every
+    other lazily returning operator that caches a relation its plan
+    reads (the text LMs, the bucketed similarity and dedup operators,
+    materialize_chunks; crawl_curate in tests/test_crawl.py):
+    the attached frames' storage level actually clears, a second call
+    is a no-op, and a plain DataFrame returns 0. minhash_lsh_dedup
+    caches nothing. After the last release the cache manager is
+    empty: no operator here leaves a cache its result does not
+    carry."""
     from pyspark.sql import functions as F
 
-    from hdk_spark.operators.dedup import minhash_lsh_dedup
-    from hdk_spark.operators.similarity import ann_lsh_topk
+    from hdk_spark.operators.dedup import (
+        embedding_neardup_pairs, minhash_lsh_dedup, semantic_dedup,
+    )
+    from hdk_spark.operators.packing import materialize_chunks
+    from hdk_spark.operators.similarity import (
+        ann_ivf_topk, ann_lsh_topk, ann_multiprobe_topk, bitext_mine,
+        mine_contrastive_pairs,
+    )
+    from hdk_spark.operators.text import (
+        bigram_logprob, ccnet_buckets, kneser_ney_logprob,
+        source_kl_divergence, trigram_logprob, unigram_logprob,
+    )
     from hdk_spark.operators.sketches import (
         dds_build, dds_build_by_group, dds_quantile,
         dds_quantile_by_group, frequent_items, kmv_by_group, kmv_jaccard,
@@ -1550,6 +1565,7 @@ def test_release_caches_frees_internal_persists(spark):
         release_caches,
     )
 
+    spark.catalog.clearCache()
     df = spark.range(800).select(
         F.when(F.col("id") % 2 == 0, F.lit("a")).otherwise(F.lit("b"))
         .alias("g"),
@@ -1583,13 +1599,40 @@ def test_release_caches_frees_internal_persists(spark):
     spin(frequent_items(df, "v", k=4), 1)
     docs = spark.range(60).selectExpr(
         "id AS doc_id", "concat('doc text ', CAST(id % 7 AS STRING)) AS text")
-    spin(minhash_lsh_dedup(docs, hash_basis="md5"), 1)
+    spin(minhash_lsh_dedup(docs, hash_basis="md5"), 0)
+    spin(unigram_logprob(docs), 1)
+    spin(bigram_logprob(docs), 1)
+    spin(trigram_logprob(docs), 1)
+    spin(kneser_ney_logprob(docs), 2)
+    spin(source_kl_divergence(
+        docs.selectExpr("*", "CAST(doc_id % 3 AS STRING) AS source")), 1)
+    spin(ccnet_buckets(docs), 1)
+    spin(ccnet_buckets(docs, model="kn3"), 2)
+    spin(materialize_chunks(spark.range(20).selectExpr(
+        "id AS doc_id", "sequence(0, CAST(id % 5 AS INT)) AS tokens"),
+        budget=8, n_shards=2), 1)
     vecs = spark.range(40).selectExpr(
         "id AS vec_id",
         "transform(sequence(0, 7), i -> CAST(sin(id * 7 + i) AS FLOAT))"
         " AS embedding")
     spin(ann_lsh_topk(vecs, [0, 1], k=3, dim=8), 1)
     spin(ann_lsh_topk(vecs, [0, 1], k=3, dim=8, deterministic=True), 1)
+    spin(ann_ivf_topk(vecs, [0, 1], k=3, n_lists=4, nprobe=2, dim=8), 1)
+    spin(ann_multiprobe_topk(vecs, [0, 1], k=3, n_planes=4, dim=8), 1)
+    spin(ann_multiprobe_topk(
+        vecs, [0, 1], k=3, n_planes=4, dim=8, deterministic=False), 1)
+    spin(bitext_mine(vecs.filter("vec_id % 2 = 0"),
+                     vecs.filter("vec_id % 2 = 1"),
+                     k=2, threshold=0.0, n_planes=4, n_probes=2, dim=8), 1)
+    spin(embedding_neardup_pairs(vecs, threshold=0.2, n_planes=2,
+                                 n_tables=2, dim=8), 1)
+    spin(mine_contrastive_pairs(vecs, pos_threshold=0.5, neg_lo=-1.0,
+                                neg_hi=0.5, n_planes=2, n_tables=2,
+                                dim=8), 1)
+    spin(mine_contrastive_pairs(vecs, pos_threshold=0.5, neg_lo=-1.0,
+                                neg_hi=0.5, n_planes=2, n_tables=2,
+                                dim=8, anchor_pct=50), 1)
+    spin(semantic_dedup(vecs, k=2, iters=1, threshold=0.9), 1)
     # ownership (r14 review): mg_summary returns a PERSISTED frame the
     # caller owns — a caller-cached input is REUSED, nothing is
     # attached (release_caches returns 0), and the caller's cache
@@ -1624,6 +1667,7 @@ def test_release_caches_frees_internal_persists(spark):
     summ.unpersist()
 
     assert release_caches(df) == 0  # plain frames carry no caches
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_persist_internal_registry_session_scoping(spark):
@@ -1636,7 +1680,7 @@ def test_persist_internal_registry_session_scoping(spark):
     # session would be wrong.
     import weakref
 
-    from hdk_spark.operators import sketches as sk
+    from hdk_spark.operators import caches as ca
 
     proj = spark.range(10).selectExpr("cast(id as string) as v").select("v")
     key = proj.semanticHash()
@@ -1651,13 +1695,13 @@ def test_persist_internal_registry_session_scoping(spark):
             raise RuntimeError("session stopped")
 
     dead = _DeadFrame()
-    sk._CACHE_REGISTRY[key] = [
+    ca._CACHE_REGISTRY[key] = [
         [lambda: None, 7],  # GC'd entry: all its results were dropped
         [lambda: dead, 3],  # dead-session entry, still referenced
     ]
-    got, own = sk._persist_internal(proj)
+    got, own = ca._persist_internal(proj)
     try:
-        ents = sk._CACHE_REGISTRY[key]
+        ents = ca._CACHE_REGISTRY[key]
         assert own == (got,)  # fresh registration — neither orphan shared
         assert not any(e[0]() is None for e in ents)  # GC'd pruned
         assert any(e[0]() is dead for e in ents)  # referenced one kept
@@ -1668,17 +1712,17 @@ def test_persist_internal_registry_session_scoping(spark):
         p2 = (spark.newSession().range(10)
               .selectExpr("cast(id as string) as v").select("v"))
         ents.insert(0, [lambda: p2, 1])
-        got2, own2 = sk._persist_internal(proj)
+        got2, own2 = ca._persist_internal(proj)
         assert got2 is got and own2 == (got,)  # shared with OUR entry
-        assert any(e[0]() is p2 for e in sk._CACHE_REGISTRY[key])  # kept
+        assert any(e[0]() is p2 for e in ca._CACHE_REGISTRY[key])  # kept
     finally:
-        sk._CACHE_REGISTRY.get(key, [[None]])[:] = [
-            e for e in sk._CACHE_REGISTRY.get(key, [])
+        ca._CACHE_REGISTRY.get(key, [[None]])[:] = [
+            e for e in ca._CACHE_REGISTRY.get(key, [])
             if e[0]() is got]
-        rel = sk.release_caches(sk._attach_caches(got.limit(0), own))
-        sk.release_caches(sk._attach_caches(got.limit(0), own))  # rc 2
+        rel = ca.release_caches(ca._attach_caches(got.limit(0), own))
+        ca.release_caches(ca._attach_caches(got.limit(0), own))  # rc 2
     assert rel == 0  # two references (the repeat call) — first is a decrement
-    assert key not in sk._CACHE_REGISTRY
+    assert key not in ca._CACHE_REGISTRY
     assert not (got.storageLevel.useMemory or got.storageLevel.useDisk)
 
 
@@ -1691,6 +1735,7 @@ def test_release_caches_concurrent_single_decrement(spark):
     # reference is still live
     import threading as th
 
+    from hdk_spark.operators import caches as ca
     from hdk_spark.operators import sketches as sk
 
     df = spark.range(200).selectExpr(
@@ -1708,7 +1753,7 @@ def test_release_caches_concurrent_single_decrement(spark):
 
     def release(frame):
         barrier.wait()
-        results.append(sk.release_caches(frame))
+        results.append(ca.release_caches(frame))
 
     threads = [th.Thread(target=release, args=(r1,)) for _ in range(4)]
     threads += [th.Thread(target=release, args=(r2,)) for _ in range(4)]
@@ -1720,7 +1765,7 @@ def test_release_caches_concurrent_single_decrement(spark):
     # every other call (repeat or sibling-decrement) returned 0
     assert sorted(results) == [0] * 7 + [1]
     assert not (shared.storageLevel.useMemory or shared.storageLevel.useDisk)
-    assert shared.semanticHash() not in sk._CACHE_REGISTRY
+    assert shared.semanticHash() not in ca._CACHE_REGISTRY
 
 
 def test_persist_internal_registry_is_weak(spark):
@@ -1730,7 +1775,7 @@ def test_persist_internal_registry_is_weak(spark):
     import gc
     import weakref
 
-    from hdk_spark.operators import sketches as sk
+    from hdk_spark.operators import caches as ca
 
     def make():  # no test-local handle: persist() returns self, so
         # holding the input would itself pin the registered frame
@@ -1738,8 +1783,8 @@ def test_persist_internal_registry_is_weak(spark):
                 .selectExpr("cast(id as string) as vv").select("vv"))
 
     key = make().semanticHash()
-    got, own = sk._persist_internal(make())
-    assert any(e[0]() is got for e in sk._CACHE_REGISTRY[key])
+    got, own = ca._persist_internal(make())
+    assert any(e[0]() is got for e in ca._CACHE_REGISTRY[key])
     ref = weakref.ref(got)
     cached_plan = got  # keep one handle to unpersist the JVM entry
     del got, own
@@ -1753,8 +1798,8 @@ def test_persist_internal_registry_is_weak(spark):
     # orphaned JVM cache (plan-keyed, still live) is REUSED as if
     # caller-owned — never duplicated, never clobbered: the bounded
     # steady state for callers that skip the release discipline
-    got2, own2 = sk._persist_internal(make())
+    got2, own2 = ca._persist_internal(make())
     assert own2 == ()  # reused, unowned — release has nothing to do
-    assert key not in sk._CACHE_REGISTRY
+    assert key not in ca._CACHE_REGISTRY
     assert got2.storageLevel.useMemory or got2.storageLevel.useDisk
     got2.unpersist()  # test hygiene: drop the orphan explicitly
